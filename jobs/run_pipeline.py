@@ -38,16 +38,6 @@ def main() -> None:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--buckets", type=int, default=1024)
     ap.add_argument("--no-canonicalize", action="store_true")
-    ap.add_argument(
-        "--no-canon-provenance",
-        action="store_true",
-        help="skip maintaining the canonical-triple provenance state "
-        "(canon_triples_raw / canon_assignment / canon_doc_hash): "
-        "~20%% cheaper full rewrites, but later runs cannot take the "
-        "partition-granular incremental rewrite until a provenance-"
-        "maintaining run refreshes the state — the right trade for "
-        "bulk-batch-only deployments",
-    )
     ap.add_argument("--jaccard-threshold", type=float, default=0.8)
     ap.add_argument(
         "--curate",
@@ -166,7 +156,6 @@ def main() -> None:
         buckets=args.buckets,
         canonicalize=not args.no_canonicalize,
         jaccard_threshold=args.jaccard_threshold,
-        canon_provenance=not args.no_canon_provenance,
     )
     if del_stats is not None:
         stats["deletion"] = del_stats

@@ -28,10 +28,7 @@ from pyspark.sql import functions as F
 from spinneret_spark.materialize import materialize as _materialize
 from spinneret_spark.functions.hashing import det_id as _det_id
 from spinneret_spark.operators.components import components_with_isolated
-from spinneret_spark.operators.dedup import (
-    lsh_candidate_pairs,
-    minhash_signatures,
-)
+from spinneret_spark.operators.dedup import lsh_candidate_pairs
 
 
 def near_dup_edges(
@@ -250,17 +247,3 @@ def dedup_canonical_triples(
         *keys, *[F.col(f"_survivor.{c}").alias(c) for c in rest]
     ).select(*[c for c in raw.columns if c != src_col])
 
-
-def rewrite_triples(
-    triples: DataFrame,
-    assignment: DataFrame,
-    subj_prefix: str = "doc://",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Re-key triple subjects to canonical entities and merge dups
-    (deterministic survivor — see :func:`dedup_canonical_triples`)."""
-    return dedup_canonical_triples(
-        rewrite_triples_raw(
-            triples, assignment, subj_prefix=subj_prefix, id_col=id_col
-        )
-    )

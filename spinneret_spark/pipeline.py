@@ -28,6 +28,7 @@ import shutil
 import time
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,8 +41,6 @@ from spinneret_spark.operators.canonicalize import (
     canonical_entities,
     dedup_canonical_triples,
     entity_table,
-    near_dup_edges,
-    rewrite_triples,
     rewrite_triples_raw,
     verify_candidate_pairs,
 )
@@ -608,10 +607,10 @@ def delete_pages(
         # one pruned job answers everything the rewrite and the
         # manifest need: deletions per part, surviving rows per part
         # (batch vs tagged split), which parts empty out. A target
-        # part none of the urls actually lives in is left COMPLETELY
-        # alone — no rewrite, no commit, state token unchanged — so a
-        # deletion never forces downstream re-shingles beyond the
-        # parts it really mutated.
+        # part none of the urls actually lives in is not rewritten,
+        # but it is still committed below (flipping its state token),
+        # so re-running a deletion always forces the downstream heal
+        # at the cost of re-shingling at most |urls| extra parts.
         stat_rows = (
             hit.groupBy("part_id")
             .agg(
@@ -667,15 +666,10 @@ def delete_pages(
                 # surviving-tagged-file detection keys on the column)
                 out = out.drop("_batch_run")
             sinks.write_partitioned(out, out_root, tbl, shuffle=False)
-        for p in mutated:
-            if p not in survivors:
-                # dynamic overwrite only replaces partitions PRESENT
-                # in the frame — a partition losing all rows must be
-                # removed explicitly and committed at zero
-                d = os.path.join(out_root, tbl, f"part_id={p}")
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-                emptied[tbl].append(p)
+        # a partition losing all rows is removed explicitly and
+        # committed at zero
+        emptied[tbl] = [p for p in mutated if p not in survivors]
+        _rmtree_parts(out_root, (tbl,), emptied[tbl])
         # Commit the BATCH row count (marker totals stay the historical
         # record of streamed deliveries) for EVERY on-disk target part,
         # hit or not (ADVICE r5, medium): a crash between the rewrites
@@ -704,31 +698,19 @@ def delete_pages(
     }
 
 
-def _canon_outputs_intact(
-    spark: SparkSession, out_root: str
-) -> tuple[dict, bool]:
-    """Parquet footer counts of the three canonical output tables vs
-    their latest-per-part manifest commits. Cheap (metadata reads) and
-    the shared integrity probe of BOTH reuse paths: the zero-change
-    short-circuit (don't certify a crashed overwrite) and the delta
-    path's kept-edge/old-raw reuse (don't recycle a partial table a
-    crashed output wave left behind — ADVICE r5, high)."""
-    out_tables = ["edges", "entities", "triples_canonical"]
-    summ = sinks.manifest_summary(spark, out_root, out_tables)
-    counts = {}
-    intact = True
-    for tbl in out_tables:
-        expected = summ[tbl]["committed_total"] or 0
-        actual = (
-            sinks.read_table(spark, out_root, tbl).count()
-            if _partition_ids(out_root, tbl)
-            else 0
-        )
-        counts[tbl] = actual
-        if actual != expected:
-            intact = False
-            break
-    return counts, intact
+# Canonicalize parameters: the ONE source for the signature, banding
+# and verify kernels AND for the parameter hash that guards persisted
+# state — a kernel default changing can never silently reuse
+# signatures or edge verdicts computed under another geometry.
+SHINGLE_N = 3
+LSH_BANDS = 4
+LSH_ROWS_PER_BAND = 4
+LSH_BUCKET_CAP = 500
+MAX_MEMBERS = 1024
+COMPOSE_EDGE_CAP = 100_000
+CANON_OUTPUTS = ("edges", "entities", "triples_canonical")
+_CANON_STATE = ("canon_signatures", "canon_assignment", "canon_doc_hash")
+_CANON_TABLES = ("triples", "canon_triples_raw", *CANON_OUTPUTS, *_CANON_STATE)
 
 
 def _canon_params_hash(jaccard_threshold: float, buckets: int) -> int:
@@ -740,9 +722,827 @@ def _canon_params_hash(jaccard_threshold: float, buckets: int) -> int:
     from spinneret_spark.functions.hashing import MINHASH_K
 
     return sinks._token_hash(
-        f"j={jaccard_threshold}|n=3|k={MINHASH_K}|bands=4x4|cap=500"
+        f"j={jaccard_threshold}|n={SHINGLE_N}|k={MINHASH_K}"
+        f"|bands={LSH_BANDS}x{LSH_ROWS_PER_BAND}|cap={LSH_BUCKET_CAP}"
         f"|buckets={buckets}"
     )
+
+
+def _in_parts(parts):
+    return F.col("part_id").isin([int(p) for p in parts])
+
+
+def _doc_hashes(docs: DataFrame) -> DataFrame:
+    """(doc_id, h): per-doc text hashes, the doc-granular content diff."""
+    return docs.select("doc_id", F.xxhash64("text").alias("h"))
+
+
+def _assign_hashes(parted: DataFrame) -> dict[int, int]:
+    """Per-part entity-assignment hashes: the change signal for the
+    incremental triple rewrite. bit_xor keeps the fold order-
+    independent and overflow-free (doc_id is unique, so no even-
+    multiplicity cancellation); one narrow aggregation, no join."""
+    h = F.bit_xor(F.xxhash64(F.concat_ws("#", "doc_id", "canonical_id")))
+    return {
+        int(r["part_id"]): int(r["h"])
+        for r in parted.groupBy("part_id").agg(h.alias("h")).collect()
+    }
+
+
+def _rmtree_parts(out_root: str, tables, parts) -> None:
+    """Remove ``part_id=`` dirs: dynamic overwrite only replaces
+    partitions PRESENT in the written frame, so a partition losing all
+    its rows must be cleared explicitly."""
+    for p in parts:
+        for tbl in tables:
+            d = os.path.join(out_root, tbl, f"part_id={p}")
+            if os.path.isdir(d):
+                shutil.rmtree(d)
+
+
+def _run_wave(tasks: list) -> None:
+    """Run deferred table writes on concurrent driver threads: the
+    jobs overlap on the executor pool and so does their serial
+    driver-side parquet commit bookkeeping."""
+    if tasks:
+        with ThreadPoolExecutor(max_workers=min(5, len(tasks))) as pool:
+            for fut in [pool.submit(t) for t in tasks]:
+                fut.result()
+
+
+def _canon_outputs_intact(spark, out_root: str, summary: dict):
+    """Parquet footer counts of the canonical outputs vs their latest-
+    per-part manifest commits → (counts, intact). Metadata reads only;
+    the integrity probe guarding every reuse of persisted outputs: the
+    zero-change short-circuit (don't certify a crashed overwrite) and
+    the delta path's kept edges and old partitions (don't recycle a
+    partial table a crashed output wave left behind)."""
+    counts = {}
+    for tbl in CANON_OUTPUTS:
+        counts[tbl] = (
+            sinks.read_table(spark, out_root, tbl).count()
+            if _partition_ids(out_root, tbl)
+            else 0
+        )
+        if counts[tbl] != (summary[tbl]["committed_total"] or 0):
+            return counts, False
+    return counts, True
+
+
+@dataclass(frozen=True)
+class CanonPlan:
+    """Every decision of one canonicalize run, taken from ONE manifest
+    read (plus the footer-count integrity probe) before any corpus
+    job. Stages read it; the data-dependent gates (capped buckets, the
+    additive probe, the new-edge cap, the scatter gate) record their
+    outcome in ``decisions``, which the stats dict reports."""
+
+    buckets: int
+    jaccard_threshold: float
+    params_hash: int
+    path: str  # empty | scratch | short_circuit | heal | delta
+    parts_on_disk: frozenset
+    tokens: dict
+    snap: dict | None
+    delta_ok: bool  # the persisted state is valid for these params
+    unchanged: tuple
+    delta_parts: tuple  # re-signed: changed ∪ vanished
+    vanished: tuple  # covered by the snapshot, gone from disk
+    heal_full: bool
+    pages: dict  # pages_text manifest facts (stream markers/evidence)
+    outputs: dict  # manifest facts per output table
+    tables: frozenset  # tables with partitions on disk at plan time
+    counts: dict  # output counts the integrity probe read
+    reuse: bool  # reuse persisted edges/outputs (delta, not a repair)
+    compose_ok: bool  # composed assignment eligible (data gates pending)
+    ivm_ok: bool  # partition-granular triple rewrite eligible
+    decisions: dict = field(default_factory=dict)
+
+    def decide(self, name: str, choice, reason: str):
+        self.decisions[name] = {"choice": choice, "reason": reason}
+        return choice
+
+
+def _canon_plan(spark, out_root, jaccard_threshold, buckets, incremental):
+    """Change detection and every static gate of the phase.
+
+    The diff runs over disk ∪ snapshot: a part the snapshot covered
+    that VANISHED from disk (a deletion emptied it) is changed — its
+    docs must drop out of every output. Parts with durable files but
+    no manifest evidence (a crashed pre-commit extract) get no token
+    and are changed every run. Every triples mutation accompanies a
+    pages_text mutation of the same part, so pages_text tokens cover
+    the triples input too."""
+    parts_on_disk = frozenset(_partition_ids(out_root, "pages_text"))
+    tables = frozenset(t for t in _CANON_TABLES if _partition_ids(out_root, t))
+    names = ["pages_text", *CANON_OUTPUTS]
+    rows = (
+        sinks.manifest_rows(
+            spark, out_root, [*names, sinks.CANON_STATE_TABLE]
+        )
+        if parts_on_disk
+        else []
+    )
+    summary = sinks.summary_from_rows(rows, names)
+    tokens = sinks.state_tokens_from_rows(rows, "pages_text")
+    params_hash = _canon_params_hash(jaccard_threshold, buckets)
+    snap = sinks.canon_state_from_rows(rows) if incremental else None
+    delta_ok = (
+        snap is not None
+        and snap["params"] == params_hash
+        and "canon_signatures" in tables
+    )
+    covered = snap["parts"] if delta_ok else {}
+    unchanged = tuple(sorted(
+        p for p in parts_on_disk if p in tokens and covered.get(p) == tokens[p]
+    ))
+    delta_parts = tuple(
+        sorted((parts_on_disk | set(covered)) - set(unchanged))
+    )
+    counts, heal_full = {}, False
+    if delta_ok and (unchanged or not delta_parts):
+        counts, intact = _canon_outputs_intact(spark, out_root, summary)
+        heal_full = not intact
+    path, why = next((p, w) for c, p, w in [
+        (not parts_on_disk, "empty", "no pages_text partitions on disk"),
+        (not incremental, "scratch", "incremental=False"),
+        (snap is None, "scratch", "no canonicalize snapshot on this root"),
+        (not delta_ok, "scratch",
+         "parameters changed or no persisted signatures"),
+        (heal_full, "heal", "output footer counts disagree with the "
+         "manifest (a crashed output wave): rebuild every output"),
+        (not delta_parts, "short_circuit",
+         "no state token moved: the snapshot certifies the outputs"),
+        (True, "delta", f"{len(delta_parts)} changed or vanished "
+         f"part(s), {len(unchanged)} unchanged"),
+    ] if c)
+    # composed assignment and the partition-granular triple rewrite
+    # need the previous run's assignment state; their data-dependent
+    # gates run later and record their own verdicts
+    reuse = delta_ok and bool(unchanged) and not heal_full
+    if not reuse:
+        blocked = "every part changed" if path == "delta" else f"{path} run"
+    elif not snap["assign"]:
+        blocked = "snapshot recorded no assignment hashes"
+    else:
+        blocked = None
+    state = {"canon_assignment", "canon_doc_hash"}
+    compose_ok = blocked is None and state <= tables
+    ivm_ok = compose_ok and {"triples", "canon_triples_raw"} <= tables
+    plan = CanonPlan(
+        buckets=buckets, jaccard_threshold=jaccard_threshold,
+        params_hash=params_hash, path=path, parts_on_disk=parts_on_disk,
+        tokens=tokens, snap=snap, delta_ok=delta_ok, unchanged=unchanged,
+        delta_parts=delta_parts,
+        vanished=tuple(sorted(set(covered) - parts_on_disk)),
+        heal_full=heal_full, pages=summary["pages_text"],
+        outputs={t: summary[t] for t in CANON_OUTPUTS}, tables=tables,
+        counts=counts, reuse=reuse, compose_ok=compose_ok, ivm_ok=ivm_ok,
+    )
+    plan.decide("path", path, why)
+    if path not in ("empty", "short_circuit"):
+        plan.decide("assignment", "composed" if compose_ok else "full",
+                    blocked or ("additive gates pending" if compose_ok
+                                else "no assignment state"))
+        plan.decide("triples_ivm", ivm_ok, blocked or (
+            "scatter gate pending" if ivm_ok
+            else "no triples/provenance table"))
+    return plan
+
+
+@dataclass
+class _CanonRun:
+    """What every stage reads — session, root, plan and the durable
+    corpus views — plus the section timer and the two deferred write
+    waves (outputs first, diff state strictly after)."""
+
+    spark: SparkSession
+    out_root: str
+    plan: CanonPlan
+    durable: DataFrame
+    has_streamed: bool
+    prev: float  # start of the running timing section
+    timings: dict = field(default_factory=dict)
+    writes: list = field(default_factory=list)
+    states: list = field(default_factory=list)
+
+    def __post_init__(self) -> None:
+        plan = self.plan
+        self.docs = self.view()
+        self.docs_delta = (
+            self.view(plan.delta_parts)
+            if plan.delta_ok and plan.unchanged
+            else self.docs
+        )
+
+    def view(self, parts=None) -> DataFrame:
+        """(doc_id, text) over the durable pages_text rows, optionally
+        partition-pruned. A url delivered by BOTH paths (batch commit
+        + a later streamed re-crawl) canonicalizes as ONE doc, first-
+        seen by content; only roots where tagged files SURVIVE pay
+        this shuffle (all copies of a url share a part, so a pruned
+        view dedups identically)."""
+        df = self.durable if parts is None else self.durable.where(
+            _in_parts(parts)
+        )
+        docs = df.select(F.col("url").alias("doc_id"), "text")
+        if self.has_streamed:
+            docs = docs.groupBy("doc_id").agg(F.min("text").alias("text"))
+        return docs
+
+    def read(self, tbl: str, parts=None) -> DataFrame:
+        df = sinks.read_table(self.spark, self.out_root, tbl)
+        return df if parts is None else df.where(_in_parts(parts))
+
+    def part_of(self, col: str):
+        """part_id is a pure function of an id (url hash for docs,
+        canonical hash for outputs), so no join is ever needed."""
+        return F.pmod(F.xxhash64(col), F.lit(self.plan.buckets)).cast("int")
+
+    def parts_of(self, df: DataFrame, *cols: str) -> list[int]:
+        """Sorted distinct partitions the ids in ``cols`` hash to."""
+        p = F.explode(F.array_compact(F.array(*map(self.part_of, cols))))
+        return sorted(
+            int(r["p"]) for r in df.select(p.alias("p")).distinct().collect()
+        )
+
+    def defer(self, wave: list, df: DataFrame, tbl: str, full: bool):
+        wave.append(
+            lambda: sinks.write_partitioned(
+                df, self.out_root, tbl, full_overwrite=full
+            )
+        )
+
+    def lap(self, name: str) -> None:
+        """Coarse section wall-time: Spark is lazy, so each lap is
+        anchored on an eager boundary (materialize / collect / write
+        wave) and reads as everything since the previous one."""
+        now = time.time()
+        self.timings[name] = round(
+            self.timings.get(name, 0.0) + (now - self.prev), 2
+        )
+        self.prev = now
+
+
+def _stage_signatures(ctx: _CanonRun):
+    """MinHash over the CHANGED parts only (partition-pruned read);
+    unchanged parts reuse the persisted table, which dynamic overwrite
+    updates per changed part (the full path replaces it wholesale)."""
+    from spinneret_spark.functions.hashing import MINHASH_K
+    from spinneret_spark.operators.dedup import minhash_signatures_pandas
+
+    plan = ctx.plan
+    sigs_new = materialize(
+        minhash_signatures_pandas(
+            ctx.docs_delta, k=MINHASH_K, n=SHINGLE_N, id_col="doc_id"
+        )
+    )
+    if plan.delta_parts:
+        sinks.write_partitioned(
+            sigs_new.withColumn("part_id", ctx.part_of("id")),
+            ctx.out_root,
+            "canon_signatures",
+            shuffle=False,
+            full_overwrite=not plan.delta_ok,
+        )
+    ctx.lap("signatures")
+    if not (plan.delta_ok and plan.unchanged):
+        return sigs_new, sigs_new
+    old = ctx.read("canon_signatures", plan.unchanged).drop("part_id")
+    return sigs_new, old.unionByName(sigs_new)
+
+
+def _stage_edges(ctx: _CanonRun, sigs_new, sigs_all):
+    """Candidates → exact-Jaccard verify → edges.
+
+    On a reuse run the band join is ASYMMETRIC (the re-signed docs
+    broadcast against the full bucket relation: the self-join's pairs
+    touching a changed part, without shuffling corpus×bands rows), the
+    verify scan is pruned to the parts candidates touch (superset-
+    sound: all copies of a url share a part), and unchanged-unchanged
+    pairs keep their persisted verdict (same texts ⇒ same Jaccard;
+    edges touching a changed part are re-discovered if still near-
+    dups). A repair run rebuilds every edge from the persisted
+    signatures with the full symmetric join."""
+    from spinneret_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        lsh_candidate_pairs_against,
+    )
+
+    plan = ctx.plan
+    geometry = dict(
+        bands=LSH_BANDS,
+        rows_per_band=LSH_ROWS_PER_BAND,
+        max_bucket=LSH_BUCKET_CAP,
+    )
+    band_stats, cand_parts, docs_verify = {}, [], ctx.docs
+    if plan.reuse:
+        candidates = materialize(
+            lsh_candidate_pairs_against(
+                sigs_new, sigs_all, stats_out=band_stats, **geometry
+            )
+        )
+        cand_parts = ctx.parts_of(candidates, "id_a", "id_b")
+        if len(cand_parts) < len(plan.parts_on_disk):
+            docs_verify = ctx.view(cand_parts)
+    else:
+        candidates = lsh_candidate_pairs(
+            sigs_all, materialize=False, **geometry
+        )
+    edges = new_edges = verify_candidate_pairs(
+        docs_verify,
+        candidates,
+        plan.jaccard_threshold,
+        id_col="doc_id",
+        shingle_n=SHINGLE_N,
+    )
+    if plan.delta_ok and plan.unchanged:
+        # pinned apart from the merge: composed assignment consumes
+        # the NEW edges alone (the only merges an additive run makes)
+        edges = new_edges = materialize(new_edges)
+    if plan.reuse and "edges" in plan.tables:
+        keep = list(plan.unchanged)
+        kept = ctx.read("edges").where(
+            ctx.part_of("id_a").isin(keep) & ctx.part_of("id_b").isin(keep)
+        )
+        edges = kept.select("id_a", "id_b", "jaccard").unionByName(edges)
+    ctx.lap("band_plan")
+    # one eager pin: CC, the entity rollup and the writes all read it
+    edges = materialize(edges)
+    ctx.lap("verify_edges")
+    return edges, new_edges, band_stats, cand_parts
+
+
+@dataclass
+class _Assignment:
+    """(part_id, doc_id, canonical_id) plus per-part hashes. On the
+    composed path ``parted`` is LAZY over the persisted table, and the
+    supernode remap also yields ``changed`` (relabeled ∪ new docs,
+    with their old label), ``members`` (the full membership of every
+    touched component + new docs), the touched ``old_labels`` and the
+    delta parts' doc hashes ``doc_h``."""
+
+    parted: DataFrame
+    hashes: dict
+    changed: DataFrame | None = None
+    members: DataFrame | None = None
+    old_labels: DataFrame | None = None
+    doc_h: DataFrame | None = None
+
+    @property
+    def composed(self) -> bool:
+        return self.changed is not None
+
+    @property
+    def sel(self) -> DataFrame:
+        return self.parted.select("doc_id", "canonical_id")
+
+
+def _old_doc_hashes(ctx: _CanonRun) -> DataFrame:
+    return ctx.read("canon_doc_hash", ctx.plan.delta_parts).select(
+        "doc_id", F.col("h").alias("old_h")
+    )
+
+
+def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
+    """Composed assignment for an ADDITIVE increment, or None when a
+    data gate rejects it (the plan records which).
+
+    New docs only ⇒ component merges are MONOTONE, so the new
+    assignment is the persisted one composed with a tiny remap: map
+    the new edges' endpoints to their old canonical labels, union-find
+    that supernode graph on the driver (labels are component minima,
+    so min-composition is exact) and relabel. No full-corpus CC, docs
+    scan or assignment pin: the run touches only the partitions the
+    increment reaches."""
+    plan, spark = ctx.plan, ctx.spark
+    capped = band_stats.get("capped_buckets")
+    if capped != 0:
+        plan.decide("assignment", "full", f"{capped} LSH bucket(s) capped")
+        return None
+    old_doc_h = _old_doc_hashes(ctx)
+    new_doc_h = materialize(_doc_hashes(ctx.docs_delta))
+    # additive ⇔ every previously-known doc of the changed parts is
+    # still present with identical content (one narrow pruned probe)
+    nonadditive = (
+        old_doc_h.join(new_doc_h, "doc_id", "left")
+        .where(~F.col("h").eqNullSafe(F.col("old_h")))
+        .limit(1)
+        .count()
+    )
+    ctx.lap("compose_gate")
+    if nonadditive:
+        plan.decide("assignment", "full", "a known doc vanished or changed")
+        return None
+    # the supernode graph in TWO jobs, no shuffle: the new edge pairs,
+    # then one pruned scan of the narrow persisted assignment
+    edge_rows = (
+        new_edges.select("id_a", "id_b").limit(COMPOSE_EDGE_CAP + 1).collect()
+    )
+    if len(edge_rows) > COMPOSE_EDGE_CAP:
+        plan.decide(
+            "assignment", "full", f"over {COMPOSE_EDGE_CAP} new edges"
+        )
+        return None
+    old_assign = ctx.read("canon_assignment")
+    endpoints = spark.createDataFrame(
+        [(i,) for i in sorted({x for r in edge_rows for x in r})],
+        "doc_id string",
+    )
+    label = dict(
+        old_assign.where(_in_parts(sorted({*cand_parts, *plan.delta_parts})))
+        .select("doc_id", "canonical_id")
+        .join(F.broadcast(endpoints), "doc_id", "left_semi")
+        .collect()
+    )
+    ctx.lap("compose_supernodes")
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    nodes: set = set()
+    for a, b in edge_rows:
+        a, b = label.get(a, a), label.get(b, b)
+        if a != b:
+            nodes.update((a, b))
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    comp = {x: find(x) for x in nodes}
+    schema = "canonical_id string, new_canonical string"
+    comp_df = spark.createDataFrame(sorted(comp.items()), schema)
+    remap_df = spark.createDataFrame(
+        sorted((k, v) for k, v in comp.items() if k != v), schema
+    )
+    # ONE filtered scan of the persisted assignment yields the
+    # relabeled docs AND the full membership of every touched
+    # component. Crash-safe: the state wave lands strictly after the
+    # output wave, so a rerun after any crash reads the same old state.
+    affected = materialize(
+        old_assign.join(F.broadcast(comp_df), "canonical_id").select(
+            "doc_id", "canonical_id", "new_canonical", "part_id"
+        )
+    )
+    ctx.lap("compose_affected_scan")
+    relabeled = affected.where(F.col("canonical_id") != F.col("new_canonical"))
+    new_docs = materialize(
+        new_doc_h.join(old_doc_h.select("doc_id"), "doc_id", "left_anti")
+        .join(
+            F.broadcast(comp_df.withColumnRenamed("canonical_id", "doc_id")),
+            "doc_id",
+            "left",
+        )
+        .select(
+            "doc_id",
+            F.coalesce("new_canonical", "doc_id").alias("canonical_id"),
+        )
+    )
+    # the full-corpus assignment as a LAZY broadcast-remap: consumers
+    # that prune by part_id stay pruned
+    parted = (
+        old_assign.join(F.broadcast(remap_df), "canonical_id", "left")
+        .select(
+            "part_id",
+            "doc_id",
+            F.coalesce("new_canonical", "canonical_id").alias("canonical_id"),
+        )
+        .unionByName(
+            new_docs.select(
+                ctx.part_of("doc_id").alias("part_id"), "doc_id",
+                "canonical_id",
+            )
+        )
+    )
+    # re-hash only parts holding a new or relabeled doc; every other
+    # part's snapshot hash carries over
+    relabel_parts = relabeled.select("part_id").distinct().collect()
+    touched = sorted({*plan.delta_parts, *(r[0] for r in relabel_parts)})
+    hashes = {p: h for p, h in plan.snap["assign"].items() if p not in touched}
+    ctx.lap("compose_new_docs")
+    hashes.update(_assign_hashes(parted.where(_in_parts(touched))))
+    ctx.lap("compose_hashes")
+    changed = materialize(
+        relabeled.select(
+            "doc_id",
+            F.col("new_canonical").alias("canonical_id"),
+            F.col("canonical_id").alias("old_canonical"),
+        ).unionByName(
+            new_docs.withColumn("old_canonical", F.lit(None).cast("string"))
+        )
+    )
+    plan.decide(
+        "assignment", "composed", f"additive: {len(edge_rows)} new edge(s)"
+    )
+    return _Assignment(
+        parted,
+        hashes,
+        changed=changed,
+        members=affected.select(
+            "doc_id", F.col("new_canonical").alias("canonical_id")
+        ).unionByName(new_docs),
+        old_labels=comp_df.select("canonical_id"),
+        doc_h=new_doc_h,
+    )
+
+
+def _stage_assignment(ctx, edges, new_edges, band_stats, cand_parts):
+    """Composed when eligible and every data gate passes; otherwise
+    the global connected components over all docs — the source of
+    truth for deletions, re-crawls, parameter changes, capped buckets
+    and repair runs."""
+    asg = None
+    if ctx.plan.compose_ok:
+        asg = _compose_assignment(ctx, new_edges, band_stats, cand_parts)
+    if asg is None:
+        parted = (
+            materialize(canonical_entities(ctx.docs, edges, id_col="doc_id"))
+            .select("doc_id", "canonical_id")
+            .withColumn("part_id", ctx.part_of("doc_id"))
+        )
+        asg = _Assignment(parted, _assign_hashes(parted))
+    ctx.lap("components_assignment")
+    return asg
+
+
+def _scatter_gate(plan: CanonPlan, name: str, out_parts: list) -> bool:
+    """Partition-granular maintenance only where it wins (measured at
+    400k, BENCH/BASELINE.md): canonical homes are hash-distributed, so
+    once the rewrite reaches more than half the partitions the
+    "incremental" path rewrites the same bytes PLUS its anti-join/
+    union overhead (41.3 s vs 34.7 s for the plain rewrite at +10%)."""
+    limit = len(plan.parts_on_disk) // 2
+    ok = len(out_parts) <= limit
+    return plan.decide(
+        name, ok, f"{len(out_parts)} partition(s) to rewrite, limit {limit}"
+    )
+
+
+def _rewrite_partitions(ctx, tbl, parts, removal, key, new_rows):
+    """Partition-granular IVM of one table: its ``parts`` partitions,
+    minus the rows whose ``key`` is in ``removal``, plus ``new_rows``.
+    Removing every recomputed key too makes a rerun after a mid-write
+    crash idempotent (written rows are removed and re-added
+    identically). Returns the pinned replacement (it overwrites its
+    own input) and the partitions it leaves empty."""
+    old = ctx.read(tbl, parts)
+    out = materialize(
+        old.join(removal, key, "left_anti").unionByName(
+            new_rows.select(*old.columns)
+        )
+    )
+    present = {r[0] for r in out.select("part_id").distinct().collect()}
+    return out, sorted(set(parts) - present)
+
+
+def _stage_entities(ctx: _CanonRun, asg: _Assignment):
+    """On the composed path only touched components and new docs
+    change: recompute those EXACTLY from the full-membership scan and
+    rewrite only the canonical-hash partitions they live in. Else the
+    whole (small) table. Member lists are capped so a boilerplate
+    mega-cluster cannot make a row bigger than an executor (the count
+    stays exact). Returns (rewritten parts, or None for all; emptied
+    parts)."""
+    plan = ctx.plan
+    if asg.composed and "entities" in plan.tables:
+        ents_new = materialize(
+            entity_table(
+                asg.members, id_col="doc_id", max_members=MAX_MEMBERS
+            ).withColumn("part_id", ctx.part_of("canonical_id"))
+        )
+        # every touched OLD label (losers vanish, winners are
+        # replaced) ∪ every recomputed label
+        removal = asg.old_labels.unionByName(
+            ents_new.select("canonical_id")
+        ).distinct()
+        parts = ctx.parts_of(removal, "canonical_id")
+        if _scatter_gate(plan, "entities_ivm", parts):
+            out, emptied = _rewrite_partitions(
+                ctx, "entities", parts, F.broadcast(removal),
+                "canonical_id", ents_new,
+            )
+            ctx.defer(ctx.writes, out, "entities", False)
+            return parts, emptied
+    else:
+        plan.decide("entities_ivm", False, "no composed assignment")
+    ents = entity_table(
+        asg.sel, id_col="doc_id", max_members=MAX_MEMBERS
+    ).withColumn("part_id", ctx.part_of("canonical_id"))
+    ctx.defer(ctx.writes, ents, "entities", True)
+    return None, []
+
+
+def _stage_triples(ctx: _CanonRun, asg: _Assignment):
+    """Canonical triples, plus the diff state for the next run.
+
+    Every rewrite goes through the provenance relation
+    ``canon_triples_raw`` (one row per SOURCE triple, partitioned by
+    the canonical subject's hash). Incremental view maintenance
+    rewrites only canonical partitions a DOC-granular change (content
+    hash moved, assignment moved, doc appeared/vanished) reaches: the
+    src_id anti-join removes the changed docs' old contributions and
+    the dedup survivor is deterministic, so untouched partitions stay
+    byte-identical. Returns (rewritten parts, or None for all; emptied
+    parts)."""
+    plan = ctx.plan
+    if "triples" not in plan.tables:
+        # a corpus where NO page yields a mention has no triples table
+        plan.decide("triples_ivm", False, "no triples table")
+        return None, []
+    triples = sinks.read_committed(
+        ctx.spark, ctx.out_root, "triples", statuses=("committed", "streamed")
+    )
+    old = plan.snap["assign"] if plan.delta_ok else {}
+    new = asg.hashes
+    affected = sorted(
+        {p for p in {*new, *old} if new.get(p) != old.get(p)}
+        | {*plan.delta_parts}
+    )
+    written, emptied, raw, doc_h = None, [], None, asg.doc_h
+    # every changed doc lives in an affected part
+    assign_aff = asg.parted.where(_in_parts(affected)).select(
+        "doc_id", "canonical_id"
+    )
+    ivm = plan.ivm_ok
+    if ivm and len(affected) >= len(plan.parts_on_disk):
+        ivm = plan.decide("triples_ivm", False, "every source part affected")
+    if ivm:
+        changed = asg.changed
+        if changed is None:
+            # DOC-granular: an append leaves most of a part's docs
+            # byte-identical, and treating them all as changed would
+            # scatter the rewrite over every partition
+            doc_h = _doc_hashes(ctx.docs_delta)
+            content_changed = (
+                doc_h.join(_old_doc_hashes(ctx), "doc_id", "full_outer")
+                .where(~F.col("old_h").eqNullSafe(F.col("h")))
+                .select("doc_id", F.lit(True).alias("_cc"))
+            )
+            old_assign = ctx.read("canon_assignment", affected).select(
+                "doc_id", F.col("canonical_id").alias("old_canonical")
+            )
+            changed = materialize(
+                assign_aff.join(old_assign, "doc_id", "full_outer")
+                .join(content_changed, "doc_id", "left")
+                .where(
+                    ~F.col("old_canonical").eqNullSafe(F.col("canonical_id"))
+                    | F.col("_cc")
+                )
+                .drop("_cc")
+            )
+        out_parts = ctx.parts_of(changed, "canonical_id", "old_canonical")
+        if _scatter_gate(plan, "triples_ivm", out_parts):
+            written = out_parts
+        if out_parts and written is not None:
+            remapped = rewrite_triples_raw(
+                triples.where(_in_parts(affected)).join(
+                    changed.select(F.col("doc_id").alias("subj")),
+                    "subj",
+                    "left_semi",
+                ),
+                assign_aff,
+                subj_prefix="",
+                id_col="doc_id",
+            ).withColumn("part_id", ctx.part_of("subj"))
+            raw, emptied = _rewrite_partitions(
+                ctx, "canon_triples_raw", out_parts,
+                changed.select(F.col("doc_id").alias("src_id")), "src_id",
+                remapped,
+            )
+    if written is None:
+        # one rewrite join, pinned, feeds both writes
+        raw = materialize(
+            rewrite_triples_raw(
+                triples, asg.sel, subj_prefix="", id_col="doc_id"
+            ).withColumn("part_id", ctx.part_of("subj"))
+        )
+    if raw is not None:
+        full = written is None
+        ctx.defer(ctx.writes, raw, "canon_triples_raw", full)
+        ctx.defer(
+            ctx.writes, dedup_canonical_triples(raw), "triples_canonical", full
+        )
+    # the assignment and per-doc text hashes for the NEXT run's diff —
+    # affected parts only on the partition-granular and composed paths
+    # (a composed run's assignment provably changed only there, even
+    # when the triple rewrite scatter-gated to a full overwrite)
+    partial = written is not None or asg.composed
+    assign_out = asg.parted.select("doc_id", "canonical_id", "part_id")
+    if partial:
+        assign_out = assign_out.where(_in_parts(affected))
+    doc_h_out = doc_h if partial else _doc_hashes(ctx.docs)
+    ctx.defer(ctx.states, assign_out, "canon_assignment", not partial)
+    ctx.defer(
+        ctx.states,
+        doc_h_out.withColumn("part_id", ctx.part_of("doc_id")),
+        "canon_doc_hash",
+        not partial,
+    )
+    return written, emptied
+
+
+def _commit(ctx: _CanonRun, run_id: str, asg, written: dict, emptied: dict):
+    """The two write waves, cleanup, accounting and the snapshot.
+
+    The diff-state wave (canon_assignment / canon_doc_hash) lands
+    strictly AFTER every output: a run crashing mid-output leaves the
+    OLD diff state in force, so the rerun recomputes the same change
+    set. Partitions an IVM rewrite emptied are cleared between the
+    waves (after the output writes, which could resurrect them; before
+    the state that would certify them). The doc-keyed state of parts
+    a deletion emptied entirely is cleared after the state wave —
+    otherwise a later composed run could resurrect deleted docs. The
+    snapshot (params, per-part tokens, assignment hashes) is appended
+    LAST, so a crash anywhere earlier leaves the old one in force and
+    the rerun redoes the same delta. Returns per-table row totals."""
+    plan, spark, out_root = ctx.plan, ctx.spark, ctx.out_root
+    ctx.lap("rewrite_plan")
+    _run_wave(ctx.writes)
+    ctx.lap("write_outputs")
+    _rmtree_parts(
+        out_root,
+        ("canon_triples_raw", "triples_canonical"),
+        emptied["triples_canonical"],
+    )
+    _rmtree_parts(out_root, ("entities",), emptied["entities"])
+    _run_wave(ctx.states)
+    _rmtree_parts(out_root, _CANON_STATE, plan.vanished)
+    ctx.lap("write_state")
+
+    # ONE job over the just-written tables (tagged union). A partially
+    # rewritten table counts only its rewritten partitions: untouched
+    # ones keep their prior commits, and latest-per-part wins. A zero-
+    # row table wrote no files — the listing IS the emptiness check.
+    counted = None
+    for tbl in CANON_OUTPUTS:
+        parts = written[tbl]
+        if not _partition_ids(out_root, tbl) or parts == []:
+            continue
+        g = (
+            ctx.read(tbl, parts)
+            .groupBy("part_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.lit(tbl).alias("tbl"), "part_id", "n")
+        )
+        counted = g if counted is None else counted.unionByName(g)
+    rows = counted.collect() if counted is not None else []
+    ctx.lap("accounting")
+    commits = [(r["tbl"], r["part_id"], r["n"]) for r in rows]
+    for tbl in CANON_OUTPUTS:
+        if written[tbl] is not None:
+            # explicit 0-row commits for partitions the rewrite emptied
+            commits += [(tbl, p, 0) for p in emptied[tbl]]
+            continue
+        # tombstones for SHRINK: a static overwrite with fewer
+        # partitions leaves the vanished ones' nonzero commits as
+        # latest-per-part, and the integrity probe could never pass
+        on_disk = set(_partition_ids(out_root, tbl))
+        commits += [
+            (tbl, p, 0)
+            for p, n in plan.outputs[tbl]["part_totals"].items()
+            if n > 0 and p not in on_disk
+        ]
+    state = sinks.CANON_STATE_TABLE
+    commits.append((state, -1, plan.params_hash, sinks.CANON_PARAMS))
+    commits += [
+        (state, p, tok, sinks.CANON_COVERED)
+        for p, tok in plan.tokens.items()
+        if p in plan.parts_on_disk
+    ]
+    commits += [
+        (state, p, h, sinks.CANON_ASSIGN) for p, h in asg.hashes.items()
+    ]
+    sinks.append_manifest_multi(spark, out_root, run_id, commits)
+    if rows:
+        # per-partition lineage; the reshingle rows record exactly
+        # which parts paid the signature kernel this run
+        lineage = [
+            (r["part_id"], f"canonicalize:{r['tbl']}", "rows_out",
+             float(r["n"]))
+            for r in rows
+        ] + [
+            (p, "canonicalize:reshingle", "reshingled", 1.0)
+            for p in plan.delta_parts
+        ]
+        schema = "part_id int, stage string, metric string, value double"
+        sinks.append_lineage(
+            spark, out_root, run_id, "canonicalize",
+            spark.createDataFrame(lineage, schema),
+        )
+    totals = {}
+    for tbl in CANON_OUTPUTS:
+        totals[tbl] = sum(r["n"] for r in rows if r["tbl"] == tbl)
+        if written[tbl] is not None:
+            totals[tbl] += sum(
+                n
+                for p, n in plan.outputs[tbl]["part_totals"].items()
+                if p not in written[tbl]
+            )
+    return totals
 
 
 def run_canonicalize_phase(
@@ -752,1190 +1552,101 @@ def run_canonicalize_phase(
     jaccard_threshold: float = 0.8,
     buckets: int = DEFAULT_BUCKETS,
     incremental: bool = True,
-    provenance: bool = True,
-    compose: bool = True,
 ) -> dict:
     """Whole-corpus phase: near-dup edges → entities → canonical
-    triples. Reads the materialized ``pages_text`` table (written by
-    the extract phase) — never re-extracts HTML.
+    triples, over the materialized ``pages_text`` table (never
+    re-extracts HTML).
 
-    **Incremental (delta) canonicalization** (default): the expensive
-    stage at 100 TB is re-shingling + re-signing every document each
-    run — CC and the triple rewrite are JVM-side joins over far
-    smaller relations. Each run therefore persists its MinHash
-    signatures (``canon_signatures``, partitioned by part_id) plus a
-    per-part state-token snapshot in the manifest
-    (:func:`sinks.pages_state_tokens`), and the next run:
+    A run is a :class:`CanonPlan` plus stage functions. The plan comes
+    first, from ONE manifest read and the footer-count integrity
+    probe, and fixes the path:
 
-    * recomputes signatures ONLY for parts whose token changed (new
-      batch commit or new marker-valid streamed append) — dynamic
-      partition overwrite keeps unchanged parts' signatures;
-    * re-bands the signature union (pure-JVM expressions over k longs
-      per doc — cheap) but VERIFIES only candidate pairs touching a
-      changed part: unchanged-unchanged pairs keep their verdict from
-      the persisted ``edges`` table (texts unchanged ⇒ Jaccard
-      unchanged);
-    * re-runs connected components over prior-kept ∪ newly-verified
-      edges (a new doc can bridge two old components, so CC is always
-      global — it is cheap: edges are the small relation). On an
-      ADDITIVE increment (new docs only: nothing vanished, no content
-      changed, no LSH bucket capped for the probes) even that is
-      skipped: merges are monotone, so the run composes the PERSISTED
-      assignment with a tiny supernode remap (CC over the new edges'
-      old canonical labels — labels are component minima, so
-      min-composition is exact), recomputes per-part assignment
-      hashes only for parts holding a new or relabeled doc, and
-      rewrites the ``entities`` table partition-granularly (touched
-      components recomputed exactly from one filtered scan of the
-      narrow persisted assignment — the capped member arrays are a
-      browsing surface, never the source of truth). An additive delta
-      run therefore performs NO full-corpus scan of any relation:
-      its cost is O(changed partitions + new edges), which is the
-      property that makes per-micro-batch canonicalization viable at
-      10^12 documents. Any gate failure (deletion, re-crawl, capped
-      bucket, >100k-component entanglement, integrity-repair run)
-      falls back to the general global recompute;
-    * rewrites edges wholesale (the SMALL relation) and, outside the
-      composed path, entities too; for corpus-sized
-      ``triples_canonical`` it maintains
-      provenance state — ``canon_triples_raw`` (one row per source
-      triple, partitioned by canonical hash), ``canon_assignment``
-      (doc → canonical), ``canon_doc_hash`` (doc → text hash, pruned
-      by source part) plus per-part assignment hashes in the manifest
-      — and, when the set of DOC-granular changes (content hash
-      moved, assignment moved, doc appeared/vanished) maps to at most
-      half the canonical partitions, rewrites only those partitions
-      via incremental view maintenance (src_id anti-join removes the
-      changed docs' old contributions; the dedup survivor is
-      deterministic, so untouched partitions stay byte-identical).
-      Outside that win region — changed docs scatter over every hash
-      partition — it falls back to the one narrow join + full write,
-      which is the irreducible cost of emitting a corpus-sized
-      output (measured: the partition path LOSES there,
-      BENCH/BASELINE.md);
-    * with ZERO changed parts, short-circuits entirely: the snapshot
-      (appended only after all outputs land) certifies the outputs,
-      so the run reduces to one manifest read plus parquet
-      footer-count integrity checks on the three output tables —
-      a count/manifest mismatch (e.g. a previously crashed
-      zero-change overwrite) falls through to the normal path,
-      which rebuilds from the persisted signatures.
+    * ``empty`` — no pages_text partitions: nothing to do;
+    * ``short_circuit`` — no part's state token moved since the
+      snapshot (appended only after all outputs land, so it certifies
+      them) and the outputs' footer counts match the manifest: report
+      the counts and touch nothing;
+    * ``delta`` — re-sign only changed (or vanished) parts, verify
+      only candidate pairs touching them, keep every other edge
+      verdict, and take the composed assignment and the partition-
+      granular entity/triple rewrites wherever their gates allow; an
+      additive micro-batch then does no full-corpus scan at all;
+    * ``heal`` — the probe found a count/manifest mismatch (a crashed
+      output wave): rebuild every output from the persisted
+      signatures, no partial path;
+    * ``scratch`` — no usable snapshot, changed parameters, or
+      ``incremental=False`` (the reference delta runs must equal).
 
-    ``provenance=False`` skips maintaining the triple-rewrite
-    provenance state entirely (measured ~20% cheaper full rewrites at
-    400k) at the price of disabling the partition-granular rewrite on
-    later runs until a ``provenance=True`` run refreshes it — the
-    right trade for bulk-batch-only deployments; signature reuse and
-    the zero-change short-circuit are unaffected.
+    Stages: signatures → candidates/verify → assignment (composed or
+    full) → entities → canonical triples → commit. The data-dependent
+    gates — capped LSH buckets, the additive probe, the new-edge cap,
+    the half-the-partitions scatter gate — record their outcome in the
+    plan, and ``stats["plan"]`` reports every decision with its reason.
 
     Output equals the from-scratch run whenever the LSH bucket cap
-    never binds (the cap drops candidates per-bucket, so a bucket
-    pushed over the cap by NEW docs can differ between the two
-    orders — both are approximations; the verify stage keeps
-    precision exact either way). A parameter change (threshold,
-    bucket count) or a missing snapshot falls back to the full
-    recompute automatically; ``incremental=False`` forces it.
+    never binds (a bucket pushed over the cap by NEW docs can differ
+    between the two orders — both are approximations; verification
+    keeps precision exact either way).
     """
     t0 = time.time()
-    empty_stats = {
-        "run_id": run_id,
-        "n_entities": 0,
-        "n_edges": 0,
-        "n_canonical_triples": 0,
-        "parts_total": 0,
-        "parts_reshingled": 0,
-        "delta": False,
-        "seconds": 0.0,
-    }
-    parts_on_disk = set(_partition_ids(out_root, "pages_text"))
-    if not parts_on_disk:
-        # empty corpus: a zero-row partitioned parquet table has no
-        # data files and no readable schema — exit before touching it
-        empty_stats["seconds"] = time.time() - t0
-        return empty_stats
-
-    # change detection: one manifest read each. Parts with durable
-    # files but no manifest evidence (crashed pre-commit extract) get
-    # no token and are treated as changed every run.
-    tokens_now = sinks.pages_state_tokens(spark, out_root, "pages_text")
-    params_hash = _canon_params_hash(jaccard_threshold, buckets)
-    snap = sinks.latest_canon_state(spark, out_root) if incremental else None
-    delta_ok = (
-        snap is not None
-        and snap["params"] == params_hash
-        and bool(_partition_ids(out_root, "canon_signatures"))
+    plan = _canon_plan(
+        spark, out_root, jaccard_threshold, buckets, incremental
     )
-    if delta_ok:
-        unchanged = sorted(
-            p
-            for p in parts_on_disk
-            if p in tokens_now and snap["parts"].get(p) == tokens_now[p]
+    stats = {
+        "run_id": run_id,
+        "parts_total": len(plan.parts_on_disk),
+        "delta": plan.delta_ok,
+        "plan": plan.decisions,
+    }
+    if plan.path in ("empty", "short_circuit"):
+        stats.update(
+            n_entities=plan.counts.get("entities", 0),
+            n_edges=plan.counts.get("edges", 0),
+            n_canonical_triples=plan.counts.get("triples_canonical", 0),
+            parts_reshingled=0,
         )
-    else:
-        unchanged = []
-    # diff over disk ∪ snapshot: a part the snapshot covered that has
-    # VANISHED from disk (a deletion emptied it) is a changed part —
-    # its docs must drop out of signatures/edges/entities and its
-    # canonical-triple contributions must be rewritten away. Without
-    # the union, an emptied-part-only deletion leaves delta_parts
-    # empty and the zero-change short-circuit would certify the STALE
-    # canonical outputs. After the healing run the new snapshot covers
-    # only on-disk parts, so the ghost drops out and later no-change
-    # runs short-circuit again.
-    snap_parts = set(snap["parts"]) if delta_ok else set()
-    delta_parts = sorted((parts_on_disk | snap_parts) - set(unchanged))
-
-    # set when the zero-change integrity probe finds a corrupted
-    # output (a crashed prior overwrite): this run IS the repair, so
-    # every partial path (composed assignment, triple/entity IVM) is
-    # disabled — they skip untouched partitions by design and would
-    # leave the damage in place forever
-    heal_full = False
-    if delta_ok and not delta_parts:
-        # Zero-change short-circuit: no part's state token moved since
-        # the snapshot, so every downstream relation (signatures →
-        # candidates → edges → components → entities → canonical
-        # triples) is provably identical to the previous completed run
-        # — the snapshot row is appended only after all outputs land,
-        # so its presence certifies them, and every triples mutation in
-        # this codebase accompanies a pages_text mutation of the same
-        # part (extract and the streaming skins commit both), so the
-        # pages_text tokens cover the triples input too. Verify output
-        # integrity before trusting it (a LATER zero-change run may
-        # have crashed mid-overwrite, leaving identical-content but
-        # incomplete tables): parquet counts are footer-metadata
-        # reads, far cheaper than re-banding + CC + the triple
-        # rewrite. On mismatch fall through — the normal path re-derives
-        # everything from the persisted signatures and self-heals.
-        counts, intact = _canon_outputs_intact(spark, out_root)
-        if intact:
-            return {
-                "run_id": run_id,
-                "n_entities": counts["entities"],
-                "n_edges": counts["edges"],
-                "n_canonical_triples": counts["triples_canonical"],
-                "parts_total": len(parts_on_disk),
-                "parts_reshingled": 0,
-                "delta": True,
-                "short_circuit": True,
-                "seconds": time.time() - t0,
-            }
-        heal_full = True
-    if delta_ok and unchanged and delta_parts and not heal_full:
-        # Delta-path integrity probe (ADVICE r5, high): this run will
-        # reuse the persisted edges (kept unchanged-unchanged pairs)
-        # and, on the IVM paths, old_raw/old_ents. A crash during a
-        # prior run's OUTPUT write wave leaves a partial table with
-        # the old manifest still in force — and because real changes
-        # exist, the zero-change probe above never fires. Verify the
-        # same count-vs-manifest invariant before trusting any
-        # persisted output; on mismatch this run becomes the repair:
-        # heal_full disables every reuse/partial path below and the
-        # outputs are rebuilt wholesale from the persisted signatures.
-        _, intact = _canon_outputs_intact(spark, out_root)
-        if not intact:
-            heal_full = True
-
-    # read_durable: all batch-written rows + marker-valid streamed
-    # rows — streamed pages canonicalize like any other page, while
-    # crashed-attempt orphans and replay duplicates stay invisible
+        if plan.path == "short_circuit":
+            stats["short_circuit"] = True
+        stats["seconds"] = time.time() - t0
+        return stats
+    # durable rows: batch rows + marker-valid streamed rows; crashed-
+    # attempt orphans and replay duplicates stay invisible
     durable, has_streamed = sinks.read_durable_tagged(
-        spark, out_root, "pages_text"
+        spark,
+        out_root,
+        "pages_text",
+        markers=plan.pages["markers"],
+        evidence=plan.pages["stream_evidence"],
     )
-
-    def _docs_view(df: DataFrame) -> DataFrame:
-        docs = df.select(F.col("url").alias("doc_id"), "text")
-        if has_streamed:
-            # a url delivered by BOTH paths (batch commit + a later
-            # streamed re-crawl appended into an already-committed
-            # part) must canonicalize as ONE doc — deterministic
-            # first-seen by content. Only roots where tagged files
-            # SURVIVE pay this shuffle (all copies of a url share a
-            # part, so the delta-filtered view dedups identically).
-            docs = docs.groupBy("doc_id").agg(F.min("text").alias("text"))
-        return docs
-
-    docs = _docs_view(durable)
-
-    def _part_of(col: str):
-        # part_id is a pure function of the url, so pair endpoints can
-        # be mapped to parts without carrying the column around
-        return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
-
-    # signatures: Arrow kernel over CHANGED parts only (partition-
-    # pruned read); unchanged parts reuse the persisted table
-    if delta_ok and unchanged:
-        docs_delta = _docs_view(
-            durable.where(F.col("part_id").isin([int(p) for p in delta_parts]))
-        )
-    else:
-        docs_delta = docs
-    from spinneret_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        lsh_candidate_pairs_against,
-        minhash_signatures_pandas,
+    ctx = _CanonRun(spark, out_root, plan, durable, has_streamed, t0)
+    ctx.lap("change_detect")
+    sigs_new, sigs_all = _stage_signatures(ctx)
+    edges, new_edges, band_stats, cand_parts = _stage_edges(
+        ctx, sigs_new, sigs_all
     )
-
-    _t = {"prev": t0}  # phase start: first lap covers change detection
-
-    def _lap(name: str) -> None:
-        # coarse section wall-times for the stats dict: Spark is lazy,
-        # so each lap is anchored on an eager boundary (materialize /
-        # collect / write wave) and reads as "everything since the
-        # previous boundary"
-        now = time.time()
-        _timings[name] = round(
-            _timings.get(name, 0.0) + (now - _t["prev"]), 2
-        )
-        _t["prev"] = now
-
-    _timings: dict[str, float] = {}
-    _lap("change_detect")
-    sigs_new = materialize(
-        minhash_signatures_pandas(docs_delta, id_col="doc_id")
+    asg = _stage_assignment(ctx, edges, new_edges, band_stats, cand_parts)
+    # every output write is DEFERRED into _commit's first wave
+    edges_out = edges.withColumn("part_id", ctx.part_of("id_a"))
+    ctx.defer(ctx.writes, edges_out, "edges", True)
+    written, emptied = {"edges": None}, {}
+    written["entities"], emptied["entities"] = _stage_entities(ctx, asg)
+    written["triples_canonical"], emptied["triples_canonical"] = (
+        _stage_triples(ctx, asg)
     )
-    if delta_parts:
-        # persist for the NEXT run: dynamic overwrite rewrites only
-        # the changed parts' signature partitions on the delta path;
-        # the full path replaces the table wholesale
-        sinks.write_partitioned(
-            sigs_new.withColumn("part_id", _part_of("id")),
-            out_root,
-            "canon_signatures",
-            shuffle=False,
-            full_overwrite=not delta_ok,
-        )
-    _lap("signatures")
-    if delta_ok and unchanged:
-        sigs_old = (
-            sinks.read_table(spark, out_root, "canon_signatures")
-            .where(F.col("part_id").isin([int(p) for p in unchanged]))
-            .drop("part_id")
-        )
-        sigs_all = sigs_old.unionByName(sigs_new)
-    else:
-        sigs_all = sigs_new
-
-    # banding is k-longs-per-doc cheap; only pairs touching a changed
-    # part go to verification (signatures were checkpointed / are a
-    # parquet read, so no materialize inside the band join). On the
-    # delta path the band join is ASYMMETRIC: the re-signed docs
-    # (tiny) broadcast against the full bucket relation — same pair
-    # set as self-join + touching-changed-part filter, without
-    # shuffling corpus×bands rows (8.6 s → map-side at 400k).
-    docs_verify = docs
-    band_stats: dict = {}
-    # heal_full gates BOTH shortcuts here: the asymmetric probe join
-    # only finds pairs touching a changed part and the kept-edge merge
-    # below recycles the persisted table — a repair run must rebuild
-    # the complete edge set from the (valid) persisted signatures via
-    # the full symmetric band join instead
-    if delta_ok and unchanged and not heal_full:
-        candidates = materialize(
-            lsh_candidate_pairs_against(
-                sigs_new, sigs_all, stats_out=band_stats
-            )
-        )
-        # Exact-Jaccard verification re-shingles only candidate
-        # ENDPOINT docs, but the semi-join inside the verify operator
-        # still scans every pages_text row's text bytes to find them.
-        # Endpoint part ids are a pure function of the id, and
-        # pages_text is partitioned by part_id on disk — so collect
-        # the (few) parts candidates touch and partition-prune the
-        # verify scan to them. Superset-sound: pruning keeps every
-        # candidate endpoint, and all copies of a url share a part,
-        # so the streamed-dedup view is unchanged.
-        cand_parts = sorted(
-            int(r["p"])
-            for r in candidates.select(
-                F.explode(
-                    F.array(_part_of("id_a"), _part_of("id_b"))
-                ).alias("p")
-            )
-            .distinct()
-            .collect()
-        )
-        if len(cand_parts) < len(parts_on_disk):
-            docs_verify = _docs_view(
-                durable.where(F.col("part_id").isin(cand_parts))
-            )
-    else:
-        candidates = lsh_candidate_pairs(sigs_all, materialize=False)
-    new_edges = verify_candidate_pairs(
-        docs_verify, candidates, jaccard_threshold, id_col="doc_id"
+    totals = _commit(ctx, run_id, asg, written, emptied)
+    rewritten = {t: None if p is None else len(p) for t, p in written.items()}
+    stats.update(
+        n_entities=totals["entities"],
+        n_edges=totals["edges"],
+        n_canonical_triples=totals["triples_canonical"],
+        parts_reshingled=len(plan.delta_parts),
+        assignment="composed" if asg.composed else "full",
+        timings=ctx.timings,
+        triples_parts_rewritten=rewritten["triples_canonical"],
+        entities_parts_rewritten=rewritten["entities"],
+        seconds=time.time() - t0,
     )
-    if delta_ok and unchanged:
-        # pinned separately from the merge: the composed-assignment
-        # path below consumes the NEW edges alone (they are the only
-        # possible component merges on an additive increment)
-        new_edges = materialize(new_edges)
-    if (
-        delta_ok
-        and unchanged
-        and not heal_full
-        and _partition_ids(out_root, "edges")
-    ):
-        # unchanged-unchanged pairs keep their prior verdict; every
-        # edge touching a changed part is dropped (re-discovered via
-        # the delta candidates if still a near-dup) — which also
-        # retires edges of deleted/rewritten docs, since any deletion
-        # changes its part's token
-        kept = (
-            sinks.read_table(spark, out_root, "edges")
-            .where(
-                _part_of("id_a").isin([int(p) for p in unchanged])
-                & _part_of("id_b").isin([int(p) for p in unchanged])
-            )
-            .select("id_a", "id_b", "jaccard")
-        )
-        merged_edges = kept.unionByName(new_edges)
-    else:
-        merged_edges = new_edges
-
-    # edges and assignment feed multiple downstream actions (CC loop,
-    # entity rollup, triple rewrite, writes) — localCheckpoint both:
-    # eager one-shot materialization (a lazy .cache() recomputes the
-    # whole LSH/verify lineage per consumer until its first fill, and
-    # can race its own fill across concurrent consumers)
-    _lap("band_plan")
-    edges = materialize(merged_edges)
-    _lap("verify_edges")
-
-    # a corpus where NO page yields a mention has no triples table on
-    # disk (same no-files-no-schema hazard); entities/edges still exist
-    have_triples = bool(_partition_ids(out_root, "triples"))
-    old_assign_hashes = dict(snap.get("assign", {})) if delta_ok else {}
-
-    # ---- COMPOSED (incremental) assignment ----
-    # On an ADDITIVE increment (new docs only: nothing vanished, no
-    # content changed, no LSH bucket capped) component merges are
-    # MONOTONE, so the new assignment is the old one composed with a
-    # tiny remap: map the NEW edges' endpoints to their old canonical
-    # labels, run CC over that supernode graph (labels are component
-    # minima, so min-composition stays exact), and relabel. The full-
-    # corpus CC + docs scan + corpus-sized assignment checkpoint of
-    # the general path all disappear — an additive delta run touches
-    # only the partitions the increment actually reaches. Any gate
-    # failure falls back to the general recompute below, which remains
-    # the source of truth for deletions, re-crawls, parameter changes
-    # and capped buckets.
-    composed = False
-    changed_pre = None  # (doc_id, canonical_id, old_canonical)
-    new_docs_assign = None
-    comp_df = None  # (canonical_id, new_canonical), identity included
-    affected_rows = None
-    assign_parted = None
-    new_doc_h = None
-    compose_ok = (
-        compose
-        and delta_ok
-        and not heal_full
-        and bool(unchanged)
-        and provenance
-        and bool(old_assign_hashes)
-        and bool(_partition_ids(out_root, "canon_assignment"))
-        and bool(_partition_ids(out_root, "canon_doc_hash"))
-        and band_stats.get("capped_buckets") == 0
-    )
-    delta_set = [int(p) for p in delta_parts]
-    if compose_ok:
-        old_doc_h_delta = (
-            sinks.read_table(spark, out_root, "canon_doc_hash")
-            .where(F.col("part_id").isin(delta_set))
-            .select("doc_id", F.col("h").alias("old_h"))
-        )
-        new_doc_h = materialize(
-            docs_delta.select("doc_id", F.xxhash64("text").alias("h"))
-        )
-        # additive ⇔ every previously-known doc of the changed parts
-        # is still present with identical content (one narrow pruned
-        # probe; a deletion or re-crawl trips it and takes the general
-        # path, which handles component SPLITS)
-        nonadditive = (
-            old_doc_h_delta.join(new_doc_h, "doc_id", "left")
-            .where(F.col("h").isNull() | (F.col("h") != F.col("old_h")))
-            .limit(1)
-            .count()
-        )
-        compose_ok = nonadditive == 0
-        _lap("compose_gate")
-    if compose_ok:
-        # supernode graph, built in exactly TWO jobs with no shuffle:
-        # (1) collect the new edge pairs (tiny by the additive-
-        # increment premise; capped), (2) one partition-pruned scan of
-        # the persisted narrow assignment filtered to the endpoint
-        # docs — endpoints map to their old canonical labels, new docs
-        # are their own label, union-find runs on the driver.
-        edge_rows = new_edges.select("id_a", "id_b").limit(100_001).collect()
-        if len(edge_rows) > 100_000:
-            # an increment producing >100k new near-dup pairs is not a
-            # micro-batch — the general path's distributed CC is the
-            # right tool there
-            compose_ok = False
-        old_assign_tbl = sinks.read_table(
-            spark, out_root, "canon_assignment"
-        )
-    if compose_ok:
-        ep_id_set = set()
-        for r in edge_rows:
-            ep_id_set.add(r["id_a"])
-            ep_id_set.add(r["id_b"])
-        ep_parts = sorted(set(cand_parts) | set(delta_set))
-        ep_df = spark.createDataFrame(
-            [(i,) for i in sorted(ep_id_set)] or [], "doc_id string"
-        )
-        label = {
-            r["doc_id"]: r["canonical_id"]
-            for r in old_assign_tbl.where(
-                F.col("part_id").isin(ep_parts)
-            )
-            .select("doc_id", "canonical_id")
-            .join(F.broadcast(ep_df), "doc_id", "left_semi")
-            .collect()
-        }
-        _lap("compose_supernodes")
-        # driver union-find with path compression; component label =
-        # MIN member label, which composes exactly (old labels are
-        # their components' min doc ids)
-        parent: dict = {}
-
-        def _find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        nodes_seen: set = set()
-        for r in edge_rows:
-            a = label.get(r["id_a"], r["id_a"])
-            b = label.get(r["id_b"], r["id_b"])
-            if a == b:
-                continue
-            nodes_seen.add(a)
-            nodes_seen.add(b)
-            ra, rb = _find(a), _find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        comp = {x: _find(x) for x in nodes_seen}
-        comp_schema = "canonical_id string, new_canonical string"
-        comp_df = spark.createDataFrame(
-            sorted(comp.items()) or [], comp_schema
-        )
-        remap_df = spark.createDataFrame(
-            sorted((k, v) for k, v in comp.items() if k != v) or [],
-            comp_schema,
-        )
-        # ONE filtered scan of the narrow persisted assignment yields
-        # both the relabeled docs and the FULL membership of every
-        # touched component (the capped entity member arrays are a
-        # browsing surface, not the source of truth). Crash-safe and
-        # idempotent: the state wave lands strictly after the output
-        # wave, so a rerun after any crash reads the same old state.
-        affected_rows = materialize(
-            old_assign_tbl.join(F.broadcast(comp_df), "canonical_id")
-            .select("doc_id", "canonical_id", "new_canonical", "part_id")
-        )
-        _lap("compose_affected_scan")
-        relabeled = affected_rows.where(
-            F.col("canonical_id") != F.col("new_canonical")
-        )
-        new_docs_assign = materialize(
-            new_doc_h.join(
-                old_doc_h_delta.select("doc_id"), "doc_id", "left_anti"
-            )
-            .select("doc_id")
-            .join(
-                F.broadcast(
-                    comp_df.withColumnRenamed("canonical_id", "doc_id")
-                ),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("new_canonical", F.col("doc_id")).alias(
-                    "canonical_id"
-                ),
-            )
-        )
-        # full-corpus assignment as a LAZY relation: a map-side
-        # broadcast-remap over the persisted table — consumers that
-        # can prune by part_id stay pruned; only the (rare) scatter-
-        # gate fallbacks pay the full narrow scan
-        assign_parted = old_assign_tbl.join(
-            F.broadcast(remap_df), "canonical_id", "left"
-        ).select(
-            "part_id",
-            "doc_id",
-            F.coalesce("new_canonical", F.col("canonical_id")).alias(
-                "canonical_id"
-            ),
-        ).unionByName(
-            new_docs_assign.select(
-                _part_of("doc_id").alias("part_id"),
-                "doc_id",
-                "canonical_id",
-            )
-        )
-        assignment_sel = assign_parted.select("doc_id", "canonical_id")
-        # per-part hashes: recompute ONLY parts holding a new or
-        # relabeled doc; every other part's rows are identical so its
-        # snapshot hash carries over
-        relabel_parts = {
-            int(r["part_id"])
-            for r in relabeled.select("part_id").distinct().collect()
-        }
-        touched_parts = sorted(set(delta_set) | relabel_parts)
-        assign_hashes = dict(old_assign_hashes)
-        for p in touched_parts:
-            assign_hashes.pop(p, None)
-        _lap("compose_new_docs")
-        for r in (
-            assign_parted.where(F.col("part_id").isin(touched_parts))
-            .groupBy("part_id")
-            .agg(
-                F.bit_xor(
-                    F.xxhash64(F.concat_ws("#", "doc_id", "canonical_id"))
-                ).alias("h")
-            )
-            .collect()
-        ):
-            assign_hashes[int(r["part_id"])] = int(r["h"])
-        _lap("compose_hashes")
-        changed_pre = materialize(
-            relabeled.select(
-                "doc_id",
-                F.col("new_canonical").alias("canonical_id"),
-                F.col("canonical_id").alias("old_canonical"),
-            ).unionByName(
-                new_docs_assign.select(
-                    "doc_id",
-                    "canonical_id",
-                    F.lit(None).cast("string").alias("old_canonical"),
-                )
-            )
-        )
-        composed = True
-    if not composed:
-        assignment = materialize(
-            canonical_entities(docs, edges, id_col="doc_id")
-        )
-        # Per-part entity-assignment hashes: the change signal for the
-        # incremental triple rewrite. bit_xor keeps the fold order-
-        # independent and overflow-free (doc_id is unique, so no even-
-        # multiplicity cancellation); one narrow aggregation, no join.
-        assignment_sel = assignment.select("doc_id", "canonical_id")
-        assign_hashes = {}
-        if provenance:
-            assign_hashes = {
-                int(r["part_id"]): int(r["h"])
-                for r in assignment_sel.groupBy(
-                    _part_of("doc_id").alias("part_id")
-                )
-                .agg(
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.concat_ws("#", "doc_id", "canonical_id")
-                        )
-                    ).alias("h")
-                )
-                .collect()
-            }
-    _lap("components_assignment")
-    changed_assign_parts = sorted(
-        p
-        for p in set(assign_hashes) | set(old_assign_hashes)
-        if assign_hashes.get(p) != old_assign_hashes.get(p)
-    )
-    affected_src = sorted(
-        set(changed_assign_parts) | {int(p) for p in delta_parts}
-    )
-    # Incremental triple rewrite is sound iff: the delta machinery is
-    # valid, the previous snapshot recorded assignment hashes (pre-
-    # upgrade snapshots did not), the provenance tables exist, and
-    # some source part is provably untouched (content token AND
-    # assignment hash unchanged ⇒ its contribution to every canonical
-    # partition is byte-identical — dedup survivors are deterministic).
-    triples_delta = (
-        provenance
-        and delta_ok
-        and not heal_full
-        and bool(unchanged)
-        and bool(old_assign_hashes)
-        and have_triples
-        and bool(_partition_ids(out_root, "canon_triples_raw"))
-        and bool(_partition_ids(out_root, "canon_assignment"))
-        and bool(_partition_ids(out_root, "canon_doc_hash"))
-        and len(affected_src) < len(parts_on_disk)
-    )
-
-    # whole-corpus tables: STATIC overwrite — recomputed per run, so
-    # earlier runs' partitions must be replaced wholesale (edges and
-    # entities are the SMALL relations; triples_canonical is corpus-
-    # sized and gets the incremental path below). All independent
-    # table writes are DEFERRED into closures and committed on
-    # concurrent driver threads below: each write is a separate Spark
-    # job whose driver-side commit bookkeeping is pure fixed cost, and
-    # run serially the provenance tables would double the phase's job
-    # count (the media phase's concurrent-commit lesson, round 4).
-    write_tasks: list = []
-    state_tasks: list = []
-    edges_out = edges.withColumn(
-        "part_id", F.pmod(F.xxhash64("id_a"), F.lit(buckets)).cast("int")
-    )
-    write_tasks.append(
-        lambda: sinks.write_partitioned(
-            edges_out, out_root, "edges", full_overwrite=True
-        )
-    )
-    # member lists capped: a boilerplate mega-cluster must not produce
-    # a row bigger than an executor (count stays exact)
-    ent_written_parts: list[int] | None = None
-    ent_emptied: list[int] = []
-    ents_ivm = None
-    if composed and _partition_ids(out_root, "entities"):
-        # entities IVM: rows change only for touched components and
-        # new docs — recompute those EXACTLY from the affected-rows
-        # scan (full membership) + new docs, and rewrite only the
-        # canonical-hash partitions they live in. Same scatter gate as
-        # the canonical-triple rewrite.
-        ents_new = materialize(
-            entity_table(
-                affected_rows.select(
-                    "doc_id", F.col("new_canonical").alias("canonical_id")
-                ).unionByName(
-                    new_docs_assign.select("doc_id", "canonical_id")
-                ),
-                id_col="doc_id",
-                max_members=1024,
-            ).withColumn(
-                "part_id",
-                F.pmod(F.xxhash64("canonical_id"), F.lit(buckets)).cast(
-                    "int"
-                ),
-            )
-        )
-        # removal set = every touched OLD label (losers vanish,
-        # winners are replaced) ∪ every recomputed label (makes a
-        # rerun after a mid-write crash idempotent: already-written
-        # new rows — singleton new docs included — are removed and
-        # re-added identically)
-        removal_df = (
-            comp_df.select("canonical_id")
-            .unionByName(ents_new.select("canonical_id"))
-            .distinct()
-        )
-        ent_out_parts = sorted(
-            int(r["p"])
-            for r in removal_df.select(
-                F.pmod(F.xxhash64("canonical_id"), F.lit(buckets))
-                .cast("int")
-                .alias("p")
-            )
-            .distinct()
-            .collect()
-        )
-        if len(ent_out_parts) <= len(parts_on_disk) // 2:
-            old_ents = sinks.read_table(spark, out_root, "entities").where(
-                F.col("part_id").isin(ent_out_parts)
-            )
-            kept_ents = old_ents.join(
-                F.broadcast(removal_df), "canonical_id", "left_anti"
-            )
-            ents_ivm = materialize(
-                kept_ents.unionByName(ents_new.select(*old_ents.columns))
-            )
-            present_ent = {
-                int(r["part_id"])
-                for r in ents_ivm.select("part_id").distinct().collect()
-            }
-            ent_emptied = sorted(set(ent_out_parts) - present_ent)
-            write_tasks.append(
-                lambda: sinks.write_partitioned(
-                    ents_ivm, out_root, "entities", full_overwrite=False
-                )
-            )
-            ent_written_parts = ent_out_parts
-    if ent_written_parts is None:
-        ents = entity_table(
-            assignment_sel, id_col="doc_id", max_members=1024
-        ).withColumn(
-            "part_id",
-            F.pmod(F.xxhash64("canonical_id"), F.lit(buckets)).cast("int"),
-        )
-        write_tasks.append(
-            lambda: sinks.write_partitioned(
-                ents, out_root, "entities", full_overwrite=True
-            )
-        )
-
-    # canonical triples: full rewrite persists the provenance relation
-    # (canon_triples_raw: one row per SOURCE triple, partitioned by
-    # the canonical subject's hash) so later runs can do incremental
-    # view maintenance; the delta path rewrites only canonical
-    # partitions some changed document contributes to (old home, new
-    # home, or new triples) — everything else is untouched on disk.
-    canon_written_parts: list[int] | None = None  # None → all (full)
-    emptied_parts: list[int] = []
-    if have_triples:
-        triples = sinks.read_committed(
-            spark, out_root, "triples", statuses=("committed", "streamed")
-        )
-        out_parts: list[int] | None = None
-        changed = None
-        if triples_delta:
-            aff = [int(p) for p in affected_src]
-            if changed_pre is not None:
-                # composed path: the changed-doc set (relabeled ∪ new)
-                # fell directly out of the supernode remap — no
-                # full-outer diff joins needed
-                changed = changed_pre
-            else:
-                old_assign = (
-                    sinks.read_table(spark, out_root, "canon_assignment")
-                    .where(F.col("part_id").isin(aff))
-                    .select(
-                        "doc_id",
-                        F.col("canonical_id").alias("old_canonical"),
-                    )
-                )
-                new_aff = assignment_sel.where(
-                    _part_of("doc_id").isin(aff)
-                )
-                # DOC-granular content change detection: a token covers
-                # a whole part, but an append micro-batch leaves most
-                # of the part's docs byte-identical — treating them all
-                # as changed would scatter the rewrite over every
-                # canonical partition (part sizes exceed the bucket
-                # count at any real scale). The persisted per-doc
-                # text-hash relation (canon_doc_hash, pruned to the
-                # changed parts, narrow) pins down exactly which docs'
-                # triples can differ.
-                old_doc_h = (
-                    sinks.read_table(spark, out_root, "canon_doc_hash")
-                    .where(F.col("part_id").isin(delta_set))
-                    .select("doc_id", F.col("h").alias("old_h"))
-                )
-                new_doc_h = docs_delta.select(
-                    "doc_id", F.xxhash64("text").alias("h")
-                )
-                content_changed = (
-                    new_doc_h.join(old_doc_h, "doc_id", "full_outer")
-                    .where(
-                        F.col("old_h").isNull()
-                        | F.col("h").isNull()
-                        | (F.col("old_h") != F.col("h"))
-                    )
-                    .select("doc_id", F.lit(True).alias("_cc"))
-                )
-                # changed docs: assignment moved, doc appeared/
-                # vanished, or content changed (triples may differ)
-                changed = materialize(
-                    new_aff.join(old_assign, "doc_id", "full_outer")
-                    .join(content_changed, "doc_id", "left")
-                    .where(
-                        F.col("old_canonical").isNull()
-                        | F.col("canonical_id").isNull()
-                        | (
-                            F.col("old_canonical")
-                            != F.col("canonical_id")
-                        )
-                        | F.col("_cc")
-                    )
-                    .drop("_cc")
-                )
-            out_parts = sorted(
-                int(r["p"])
-                for r in changed.select(
-                    F.explode(
-                        F.array_compact(
-                            F.array(
-                                _part_of("canonical_id"),
-                                _part_of("old_canonical"),
-                            )
-                        )
-                    ).alias("p")
-                )
-                .distinct()
-                .collect()
-            )
-            # GATE (measured at 400k, BENCH/BASELINE.md): canonical
-            # homes are hash-distributed, so any increment with more
-            # changed docs than ~half the bucket count scatters over
-            # every output partition — "incremental" then rewrites all
-            # the same bytes PLUS the anti-join/union overhead (41.3 s
-            # vs 34.7 s for the plain join at +10%). Partition-granular
-            # maintenance only pays in its win region: few changed
-            # docs relative to buckets (targeted re-crawls, single
-            # micro-batches). Outside it, fall through to the one
-            # narrow join + write — the irreducible cost of emitting a
-            # corpus-sized output.
-            if len(out_parts) > len(parts_on_disk) // 2:
-                out_parts = None
-        if triples_delta and out_parts is not None:
-            if out_parts:
-                tri_changed = triples.where(
-                    F.col("part_id").isin(aff)
-                ).join(
-                    changed.select(F.col("doc_id").alias("subj")),
-                    "subj",
-                    "left_semi",
-                )
-                # every changed doc lives in an aff part, so on the
-                # composed path the rewrite join reads only those
-                # partitions of the persisted assignment
-                assign_for_rewrite = (
-                    assign_parted.where(F.col("part_id").isin(aff))
-                    .select("doc_id", "canonical_id")
-                    if composed
-                    else assignment_sel
-                )
-                remapped = rewrite_triples_raw(
-                    tri_changed,
-                    assign_for_rewrite,
-                    subj_prefix="",
-                    id_col="doc_id",
-                ).withColumn("part_id", _part_of("subj"))
-                old_raw = sinks.read_table(
-                    spark, out_root, "canon_triples_raw"
-                ).where(F.col("part_id").isin(out_parts))
-                kept_raw = old_raw.join(
-                    changed.select(F.col("doc_id").alias("src_id")),
-                    "src_id",
-                    "left_anti",
-                )
-                # anti-join on src_id makes the overwrite idempotent:
-                # a crashed delta run's already-remapped rows are
-                # removed and re-added identically on replay
-                new_raw = materialize(
-                    kept_raw.unionByName(remapped.select(*kept_raw.columns))
-                )
-                # dynamic overwrite only replaces partitions PRESENT in
-                # the written frame — a partition whose every subject
-                # merged into entities hashed elsewhere ends up with
-                # zero rows and must be cleared explicitly, else its
-                # stale rows survive (and stale RAW rows would corrupt
-                # every future delta)
-                present = {
-                    int(r["part_id"])
-                    for r in new_raw.select("part_id").distinct().collect()
-                }
-                emptied_parts = sorted(set(out_parts) - present)
-                write_tasks.append(
-                    lambda: sinks.write_partitioned(
-                        new_raw, out_root, "canon_triples_raw",
-                        full_overwrite=False,
-                    )
-                )
-                write_tasks.append(
-                    lambda: sinks.write_partitioned(
-                        dedup_canonical_triples(new_raw),
-                        out_root,
-                        "triples_canonical",
-                        full_overwrite=False,
-                    )
-                )
-            canon_written_parts = out_parts
-        elif provenance:
-            # full rewrite (first run, invalidated snapshot, or the
-            # scatter gate above): the rewrite join is computed ONCE
-            # (materialized), then the provenance write and the
-            # dedup+canonical write consume it as two concurrent tasks
-            raw = materialize(
-                rewrite_triples_raw(
-                    triples, assignment_sel, subj_prefix="", id_col="doc_id"
-                ).withColumn("part_id", _part_of("subj"))
-            )
-            write_tasks.append(
-                lambda: sinks.write_partitioned(
-                    raw, out_root, "canon_triples_raw", full_overwrite=True
-                )
-            )
-            write_tasks.append(
-                lambda: sinks.write_partitioned(
-                    dedup_canonical_triples(raw),
-                    out_root,
-                    "triples_canonical",
-                    full_overwrite=True,
-                )
-            )
-        else:
-            # provenance disabled: the plain single-join rewrite; any
-            # previously-persisted provenance goes stale, and the
-            # snapshot below carries no assignment hashes, so later
-            # delta runs correctly refuse the partition-granular path
-            canon_out = rewrite_triples(
-                triples, assignment_sel, subj_prefix="", id_col="doc_id"
-            ).withColumn("part_id", _part_of("subj"))
-            write_tasks.append(
-                lambda: sinks.write_partitioned(
-                    canon_out, out_root, "triples_canonical",
-                    full_overwrite=True,
-                )
-            )
-
-        if provenance:
-            # persist the assignment for the NEXT run's diff —
-            # wholesale on the full-rewrite path, affected parts only
-            # on the partition-granular and composed paths (a
-            # composed run's assignment provably changed only in
-            # affected_src parts, even when the TRIPLE rewrite
-            # scatter-gated to a full overwrite)
-            partial_state = canon_written_parts is not None or composed
-            if composed:
-                assign_out = (
-                    assign_parted.where(
-                        F.col("part_id").isin(
-                            [int(p) for p in affected_src]
-                        )
-                    ).select("doc_id", "canonical_id", "part_id")
-                )
-            else:
-                assign_out = assignment_sel.withColumn(
-                    "part_id", _part_of("doc_id")
-                )
-                if partial_state:
-                    assign_out = assign_out.where(
-                        F.col("part_id").isin(
-                            [int(p) for p in affected_src]
-                        )
-                    )
-            state_tasks.append(
-                lambda: sinks.write_partitioned(
-                    assign_out, out_root, "canon_assignment",
-                    full_overwrite=not partial_state,
-                )
-            )
-            # per-doc text hashes for the NEXT run's doc-granular
-            # content diff — narrow (two longs + id), pruned by part
-            if partial_state:
-                doc_h_out = new_doc_h.withColumn(
-                    "part_id", _part_of("doc_id")
-                )
-            else:
-                doc_h_out = docs.select(
-                    "doc_id", F.xxhash64("text").alias("h")
-                ).withColumn("part_id", _part_of("doc_id"))
-            state_tasks.append(
-                lambda: sinks.write_partitioned(
-                    doc_h_out, out_root, "canon_doc_hash",
-                    full_overwrite=not partial_state,
-                )
-            )
-
-    # Commit the deferred writes on concurrent driver threads: the
-    # jobs overlap on the executor pool and, more importantly at small
-    # per-table sizes, their serial driver-side parquet commit
-    # bookkeeping overlaps too (same pattern as run_media_phase).
-    # TWO WAVES, not one: the diff-state tables (canon_assignment /
-    # canon_doc_hash) must land strictly AFTER every output table — a
-    # run that crashes mid-output must leave the OLD diff state in
-    # force so the rerun recomputes the same change set (a completed
-    # state write beside a crashed output write would make the rerun
-    # see "nothing changed" over stale outputs).
-    def _run_wave(tasks: list) -> None:
-        if not tasks:
-            return
-        with ThreadPoolExecutor(max_workers=min(5, len(tasks))) as _pool:
-            for _fut in [_pool.submit(t) for t in tasks]:
-                _fut.result()
-
-    _lap("rewrite_plan")
-    _run_wave(write_tasks)
-    _lap("write_outputs")
-    # clear partitions the incremental rewrite emptied — after the
-    # output writes (so the dynamic overwrites cannot resurrect them)
-    # and BEFORE the state wave (an output mutation that must not be
-    # certified by new diff state if we crash in between)
-    for p in emptied_parts:
-        for tbl in ("canon_triples_raw", "triples_canonical"):
-            d = os.path.join(out_root, tbl, f"part_id={p}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    for p in ent_emptied:
-        d = os.path.join(out_root, "entities", f"part_id={p}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    _run_wave(state_tasks)
-    # Ghost-part state cleanup (ADVICE r5, medium): a deletion that
-    # emptied an entire pages_text part leaves that part's rows in the
-    # doc-keyed state tables forever — the dynamic state writes above
-    # have zero rows for it (nothing to overwrite with), the emptied-
-    # part rmtrees cover only the output tables, and once the new
-    # snapshot stops covering the part nothing ever touches it again.
-    # A later composed run reads the full canon_assignment, so a
-    # touched component would resurrect the deleted docs into
-    # entities/assignment — an RTBF leak. The vanished parts are
-    # exactly snapshot-minus-disk; clear their part dirs here, after
-    # the state wave (idempotent, crash-safe: a rerun recomputes the
-    # same set until the new snapshot lands).
-    for p in sorted(snap_parts - parts_on_disk):
-        for tbl in ("canon_signatures", "canon_assignment", "canon_doc_hash"):
-            d = os.path.join(out_root, tbl, f"part_id={p}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    _lap("write_state")
-
-    # commit accounting: ONE job over the three just-written tables
-    # (tagged union) + ONE manifest write — vs 3+3 serial driver
-    # round-trips, which at small per-table sizes are pure fixed cost.
-    # On the incremental-rewrite path triples_canonical counts only
-    # the REWRITTEN partitions (partition-pruned read): untouched
-    # parts keep their prior manifest rows, and latest-per-part wins.
-    prior_triple_counts: dict[int, int] = {}
-    if canon_written_parts is not None:
-        latest: dict[int, tuple] = {}
-        for m in sinks._manifest_rows(spark, out_root, "triples_canonical"):
-            if m["status"] != "committed":
-                continue
-            key = (m["committed_at"], m["run_id"])
-            p = int(m["part_id"])
-            if p not in latest or key > latest[p][0]:
-                latest[p] = (key, int(m["rows_out"]))
-        prior_triple_counts = {p: n for p, (_, n) in latest.items()}
-    stats = None
-    for tbl in ["edges", "entities", "triples_canonical"]:
-        if not _partition_ids(out_root, tbl):
-            # zero-row table (e.g. no near-dup edge cleared the
-            # threshold): the static overwrite wrote no data files, so
-            # there is neither a schema to read nor a partition to
-            # commit — the directory listing IS the emptiness check,
-            # same as the extract phase's guard
-            continue
-        t = sinks.read_table(spark, out_root, tbl)
-        if tbl == "triples_canonical" and canon_written_parts is not None:
-            if not canon_written_parts:
-                continue  # delta run touched no canonical partition
-            t = t.where(F.col("part_id").isin(canon_written_parts))
-        if tbl == "entities" and ent_written_parts is not None:
-            if not ent_written_parts:
-                continue
-            t = t.where(F.col("part_id").isin(ent_written_parts))
-        g = (
-            t.groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(tbl).alias("tbl"), "part_id", "n")
-        )
-        stats = g if stats is None else stats.unionByName(g)
-    rows = stats.collect() if stats is not None else []
-    _lap("accounting")
-    # snapshot for the NEXT incremental run: per-part state tokens +
-    # the parameter hash, appended AFTER the outputs above so a crash
-    # mid-phase leaves the old snapshot in force and the rerun simply
-    # redoes the same delta (idempotent overwrites). Only parts with
-    # manifest evidence get a token; evidence-less parts stay
-    # "changed" until an extract commit proves them stable.
-    manifest_rows = [(r["tbl"], r["part_id"], r["n"]) for r in rows]
-    # partitions the incremental rewrite emptied get an explicit 0-row
-    # commit: latest-per-part totals and the zero-change integrity
-    # check must both see them as legitimately empty, not stale
-    manifest_rows.extend(
-        ("triples_canonical", p, 0) for p in emptied_parts
-    )
-    manifest_rows.extend(("entities", p, 0) for p in ent_emptied)
-    # tombstone commits for SHRINK: a static overwrite that produces
-    # fewer partitions than the previous run (a deletion removed a
-    # part's docs) leaves the vanished partition's old nonzero commit
-    # as latest-per-part — committed_total would then exceed the disk
-    # forever and the zero-change integrity check could never pass
-    # again. Bounded: once tombstoned at 0 a part is skipped. The
-    # IVM triples path is excluded (untouched parts legitimately keep
-    # their prior rows; its emptied parts are handled just above).
-    summ_out = sinks.manifest_summary(
-        spark, out_root, ["edges", "entities", "triples_canonical"]
-    )
-    for tbl in ["edges", "entities", "triples_canonical"]:
-        if tbl == "triples_canonical" and canon_written_parts is not None:
-            continue
-        if tbl == "entities" and ent_written_parts is not None:
-            continue
-        on_disk_now = set(_partition_ids(out_root, tbl))
-        manifest_rows.extend(
-            (tbl, p, 0)
-            for p, n in summ_out[tbl]["part_totals"].items()
-            if n > 0 and p not in on_disk_now
-        )
-    manifest_rows.append(
-        (sinks.CANON_STATE_TABLE, -1, params_hash, sinks.CANON_PARAMS)
-    )
-    manifest_rows.extend(
-        (sinks.CANON_STATE_TABLE, p, tok, sinks.CANON_COVERED)
-        for p, tok in tokens_now.items()
-        if p in parts_on_disk
-    )
-    manifest_rows.extend(
-        (sinks.CANON_STATE_TABLE, p, h, sinks.CANON_ASSIGN)
-        for p, h in assign_hashes.items()
-    )
-    sinks.append_manifest_multi(spark, out_root, run_id, manifest_rows)
-    if rows:
-        # per-partition lineage for the canonicalize outputs (north
-        # rule: lineage + metrics on every materialized table, not
-        # just triples); the reshingle rows record exactly which parts
-        # paid the Arrow signature kernel this run — the delta path's
-        # audit trail
-        lineage = spark.createDataFrame(
-            [
-                (
-                    int(r["part_id"]),
-                    f"canonicalize:{r['tbl']}",
-                    "rows_out",
-                    float(r["n"]),
-                )
-                for r in rows
-            ]
-            + [
-                (int(p), "canonicalize:reshingle", "reshingled", 1.0)
-                for p in delta_parts
-            ],
-            "part_id int, stage string, metric string, value double",
-        )
-        sinks.append_lineage(spark, out_root, run_id, "canonicalize", lineage)
-    counts = {t: 0 for t in ["edges", "entities", "triples_canonical"]}
-    for r in rows:
-        counts[r["tbl"]] += r["n"]
-    n_edges = counts["edges"]
-    n_entities = counts["entities"]
-    n_triples = counts["triples_canonical"]
-    if canon_written_parts is not None:
-        # total = freshly counted rewritten parts + prior latest
-        # commits for every untouched partition
-        n_triples += sum(
-            n
-            for p, n in prior_triple_counts.items()
-            if p not in set(canon_written_parts)
-        )
-    if ent_written_parts is not None:
-        n_entities += sum(
-            n
-            for p, n in summ_out["entities"]["part_totals"].items()
-            if p not in set(ent_written_parts)
-        )
-    return {
-        "run_id": run_id,
-        "n_entities": n_entities,
-        "n_edges": n_edges,
-        "n_canonical_triples": n_triples,
-        "parts_total": len(parts_on_disk),
-        "parts_reshingled": len(delta_parts),
-        "delta": bool(delta_ok),
-        "assignment": "composed" if composed else "full",
-        "timings": _timings,
-        "triples_parts_rewritten": (
-            len(canon_written_parts)
-            if canon_written_parts is not None
-            else None
-        ),
-        "entities_parts_rewritten": (
-            len(ent_written_parts)
-            if ent_written_parts is not None
-            else None
-        ),
-        "seconds": time.time() - t0,
-    }
+    return stats
 
 
 def _curation_flags(
@@ -2301,7 +2012,6 @@ def run(
     canonicalize: bool = True,
     terms: list[str] | None = None,
     jaccard_threshold: float = 0.8,
-    canon_provenance: bool = True,
 ) -> dict:
     stats = run_extract_phase(spark, pages, out_root, run_id, buckets, terms)
     if canonicalize:
@@ -2311,6 +2021,5 @@ def run(
             run_id,
             jaccard_threshold=jaccard_threshold,
             buckets=buckets,
-            provenance=canon_provenance,
         )
     return stats

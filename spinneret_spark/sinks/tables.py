@@ -279,16 +279,14 @@ def pages_state_tokens(
     files but NO manifest evidence (a batch extract that crashed
     pre-commit) get no token — callers must treat them as changed
     every run, because nothing proves them stable."""
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return {}
-    rows = (
-        m.filter(F.col("table_name") == table_name)
-        .select("run_id", "part_id", "status", "committed_at")
-        .collect()
+    return state_tokens_from_rows(
+        manifest_rows(spark, root, [table_name]), table_name
     )
+
+
+def state_tokens_from_rows(rows: list, table_name: str) -> dict[int, int]:
+    """:func:`pages_state_tokens` over already-read manifest rows."""
+    rows = [r for r in rows if r["table_name"] == table_name]
     markers = {r["run_id"] for r in rows if r["status"] == BATCH_MARKER}
     latest: dict[int, tuple] = {}
     streamed: dict[int, set] = {}
@@ -312,16 +310,14 @@ def latest_canon_state(spark: SparkSession, root: str) -> dict | None:
     """The most recent canonicalize snapshot: ``{"run_id", "params",
     "parts": {part_id: token_hash}}`` — or None if no canonicalize run
     ever recorded one. One manifest read."""
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return None
-    rows = (
-        m.filter(F.col("table_name") == CANON_STATE_TABLE)
-        .select("run_id", "part_id", "status", "rows_out", "committed_at")
-        .collect()
+    return canon_state_from_rows(
+        manifest_rows(spark, root, [CANON_STATE_TABLE])
     )
+
+
+def canon_state_from_rows(rows: list) -> dict | None:
+    """:func:`latest_canon_state` over already-read manifest rows."""
+    rows = [r for r in rows if r["table_name"] == CANON_STATE_TABLE]
     params = [r for r in rows if r["status"] == CANON_PARAMS]
     if not params:
         return None
@@ -335,7 +331,9 @@ def latest_canon_state(spark: SparkSession, root: str) -> dict | None:
             for r in rows
             if r["status"] == CANON_COVERED and r["run_id"] == run
         },
-        # empty on pre-CANON_ASSIGN snapshots — callers treat that as
+        # empty on snapshots that recorded no assignment hashes (pre-
+        # CANON_ASSIGN roots, and roots last canonicalized with the
+        # provenance state switched off) — callers treat that as
         # "assignment state unknown" and fall back to the full rewrite
         "assign": {
             int(r["part_id"]): int(r["rows_out"])
@@ -486,6 +484,15 @@ def manifest_summary(
     batch commits while the append-only markers survive, so the
     marker total then describes superseded rows — check whether
     tagged files actually survive (:func:`read_durable_tagged`)."""
+    rows = manifest_rows(spark, root, table_names)
+    return summary_from_rows(rows, table_names)
+
+
+def summary_from_rows(rows: list, table_names: list[str]) -> dict[str, dict]:
+    """:func:`manifest_summary` over already-read manifest rows. Latest
+    commit per part is the max ``(committed_at, run_id)`` — the same
+    order :func:`pages_state_tokens` and :func:`compact_manifest` use,
+    so a timestamp tie resolves identically everywhere."""
     out: dict[str, dict] = {
         t: {
             "committed_parts": set(),
@@ -497,26 +504,18 @@ def manifest_summary(
         }
         for t in table_names
     }
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return out
-    rows = (
-        m.filter(F.col("table_name").isin(table_names))
-        .select("table_name", "part_id", "status", "rows_out",
-                "run_id", "committed_at")
-        .collect()
-    )
     latest: dict[tuple, tuple] = {}
     for r in rows:
-        e = out[r["table_name"]]
+        e = out.get(r["table_name"])
+        if e is None:
+            continue
         if r["status"] == "committed":
             e["committed_parts"].add(r["part_id"])
             key = (r["table_name"], r["part_id"])
+            order = (r["committed_at"], r["run_id"])
             prev = latest.get(key)
-            if prev is None or r["committed_at"] >= prev[0]:
-                latest[key] = (r["committed_at"], r["rows_out"])
+            if prev is None or order > prev[0]:
+                latest[key] = (order, r["rows_out"])
         elif r["status"] == BATCH_MARKER:
             e["markers"].add(r["run_id"])
             e["streamed_total"] += int(r["rows_out"])
@@ -884,19 +883,22 @@ def compact_manifest(spark: SparkSession, root: str) -> dict:
     }
 
 
-def _manifest_rows(spark: SparkSession, root: str, table_name: str) -> list:
-    """All manifest rows for a table, ONE driver round-trip. The
+def manifest_rows(
+    spark: SparkSession, root: str, table_names: list[str]
+) -> list:
+    """All manifest rows of SEVERAL tables, ONE driver round-trip. The
     manifest is small (one row per part per run) — every visibility
-    decision in :func:`read_committed` derives from this single
-    collect instead of one manifest job per question."""
+    and change-detection decision derives from such a collect instead
+    of one manifest job per question (the ``*_from_rows`` helpers)."""
     path = manifest_path(root)
     try:
         m = spark.read.parquet(path)
     except Exception:
         return []
     return (
-        m.filter(F.col("table_name") == table_name)
-        .select("run_id", "part_id", "status", "rows_out", "committed_at")
+        m.filter(F.col("table_name").isin(list(table_names)))
+        .select("run_id", "table_name", "part_id", "status", "rows_out",
+                "committed_at")
         .collect()
     )
 
@@ -930,7 +932,7 @@ def read_committed(
 
     Pass ``latest_run_only=True`` for whole-corpus tables — see
     :func:`committed_parts`."""
-    rows = _manifest_rows(spark, root, table_name)
+    rows = manifest_rows(spark, root, [table_name])
     batch_statuses = [s for s in statuses if s != "streamed"]
     brows = [r for r in rows if r["status"] in batch_statuses]
     if latest_run_only:

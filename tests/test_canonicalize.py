@@ -8,9 +8,10 @@ from pyspark.sql import functions as F
 
 from spinneret_spark.operators.canonicalize import (
     canonical_entities,
+    dedup_canonical_triples,
     entity_table,
     near_dup_edges,
-    rewrite_triples,
+    rewrite_triples_raw,
 )
 from spinneret_spark.operators.dedup import (
     lsh_candidate_pairs,
@@ -87,7 +88,8 @@ def test_rewrite_triples_merges_duplicates(spark, docs):
     )
     edges = near_dup_edges(docs, jaccard_threshold=0.5)
     assign = canonical_entities(docs, edges)
-    out = rewrite_triples(triples, assign).collect()
+    raw = rewrite_triples_raw(triples, assign)
+    out = dedup_canonical_triples(raw).collect()
     rows = {(r["subj"], r["obj"]) for r in out}
     assert rows == {
         ("doc://1", "spark"),

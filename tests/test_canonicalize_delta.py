@@ -446,43 +446,3 @@ def test_delta_triple_rewrite_crash_is_idempotent(spark, tmp_path_factory):
         s4["n_entities"], s4["n_edges"], s4["n_canonical_triples"]
     )
 
-
-def test_provenance_off_skips_state_and_disables_ivm(
-    spark, tmp_path_factory
-):
-    """provenance=False (bulk-batch deployments): no provenance tables
-    or assignment hashes are written, later delta runs refuse the
-    partition-granular rewrite until a provenance run refreshes the
-    state — while signature reuse and the zero-change short-circuit
-    keep working."""
-    root = str(tmp_path_factory.mktemp("canon_noprov"))
-    pages = generate_pages(
-        spark, 150, near_dup_fraction=0.25, include_reference_eml=False
-    )
-    pipeline.run_extract_phase(spark, pages, root, "e1", buckets=8)
-    s1 = pipeline.run_canonicalize_phase(
-        spark, root, "c1", buckets=8, provenance=False
-    )
-    assert s1["delta"] is False
-    assert not pipeline._partition_ids(root, "canon_triples_raw")
-    assert not pipeline._partition_ids(root, "canon_assignment")
-    assert not pipeline._partition_ids(root, "canon_doc_hash")
-    assert sinks.latest_canon_state(spark, root)["assign"] == {}
-
-    s2 = pipeline.run_canonicalize_phase(
-        spark, root, "c2", buckets=8, provenance=False
-    )
-    assert s2.get("short_circuit") is True
-
-    extra = generate_pages(
-        spark, 155, near_dup_fraction=0.25, include_reference_eml=False
-    ).where(F.col("page_id") >= 150)
-    process_micro_batch(extra, 0, root, "s1", buckets=8)
-    # delta re-shingle engages; the triple rewrite is full (no prior
-    # provenance), and THIS provenance run lays down the state
-    s3 = pipeline.run_canonicalize_phase(spark, root, "c3", buckets=8)
-    assert s3["delta"] is True
-    assert 0 < s3["parts_reshingled"] < s3["parts_total"]
-    assert s3["triples_parts_rewritten"] is None
-    assert pipeline._partition_ids(root, "canon_triples_raw")
-    assert sinks.latest_canon_state(spark, root)["assign"]

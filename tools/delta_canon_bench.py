@@ -51,12 +51,6 @@ def main() -> None:
         "exercise the partition-granular triple-rewrite win region)",
     )
     ap.add_argument("--cpus", type=int, default=8)
-    ap.add_argument(
-        "--no-compose",
-        action="store_true",
-        help="disable the composed-assignment path on the delta run "
-        "(A/B harness for the additive-increment shortcut)",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -133,8 +127,7 @@ def main() -> None:
 
     t0 = time.time()
     s3 = pipeline.run_canonicalize_phase(spark, root, "c3",
-                                         buckets=args.buckets,
-                                         compose=not args.no_compose)
+                                         buckets=args.buckets)
     out["t_canon_delta"] = round(time.time() - t0, 2)
     out["assignment_mode"] = s3.get("assignment")
     out["delta_parts_reshingled"] = s3["parts_reshingled"]

@@ -54,13 +54,13 @@ n = pages.count()
 
 # warm-up (JVM JIT, codegen caches, Python workers) — not timed
 warm_root = os.path.join(tempfile.mkdtemp(), "kg")
-pipeline.run(spark, pages.limit(2000), warm_root, "warm", canonicalize={full}, canon_provenance={provenance})
+pipeline.run(spark, pages.limit(2000), warm_root, "warm", canonicalize={full})
 if {curate}:
     pipeline.run_curation_phase(spark, warm_root, "warm")
 
 root = os.path.join(tempfile.mkdtemp(), "kg")
 t0 = time.time()
-stats = pipeline.run(spark, pages, root, "scale", canonicalize={full}, canon_provenance={provenance})
+stats = pipeline.run(spark, pages, root, "scale", canonicalize={full})
 if {curate}:
     stats["curation"] = pipeline.run_curation_phase(spark, root, "scale")
 dt = time.time() - t0
@@ -111,13 +111,11 @@ shutil.rmtree(warm_root, ignore_errors=True)
 
 def run_once(
     corpus: str, cores: int, full: bool, curate: bool = False,
-    provenance: bool = True,
     media: bool = False,
 ) -> dict:
     template = _MEDIA_RUN_TEMPLATE if media else _RUN_TEMPLATE
     code = template.format(
         repo=REPO, cores=cores, corpus=corpus, full=full, curate=curate,
-        provenance=provenance,
     )
     out = subprocess.run(
         [sys.executable, "-c", code],
@@ -159,7 +157,6 @@ def main() -> None:
             levels = (int(lo), int(hi))
     full = "--extract-only" not in sys.argv
     curate = "--curate" in sys.argv
-    provenance = "--no-provenance" not in sys.argv
     media = "--media" in sys.argv
 
     # materialize the corpus once, on disk, shared by both runs
@@ -204,10 +201,8 @@ spark.stop()
         # hits both sides alike; every run is its own fresh JVM
         runs_lo, runs_hi = [], []
         for i in range(n_runs):
-            runs_lo.append(run_once(corpus, lo, full, curate,
-                                     provenance=provenance, media=media))
-            runs_hi.append(run_once(corpus, hi, full, curate,
-                                     provenance=provenance, media=media))
+            runs_lo.append(run_once(corpus, lo, full, curate, media=media))
+            runs_hi.append(run_once(corpus, hi, full, curate, media=media))
             print(
                 f"run {i + 1}/{n_runs}: t{lo}={runs_lo[-1]['seconds']:.1f}s "
                 f"t{hi}={runs_hi[-1]['seconds']:.1f}s",
@@ -230,7 +225,6 @@ spark.stop()
         else (
             "extract+link+triples"
             + ("+canonicalize" if full else "")
-            + ("" if provenance else " (no-provenance)")
             + ("+curate" if curate else "")
         ),
         "t_n_sec": round(t_lo, 1),
