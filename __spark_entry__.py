@@ -629,11 +629,11 @@ _SH_TABLE = f"SELECT doc_id AS id, unnest({_SHINGLES}) AS shingle FROM documents
 
 
 def q_dedup_ngram_jaccard(spark, sf):
-    """Default hash_mode="md5": the inverted index joins on portable
-    8-byte shingle hashes, never shingle strings — the oracle hashes
-    the same strings to the same longs, so results are identical."""
+    """Jaccard over portable md5 shingle hashes, never shingle
+    strings — the oracle hashes the same strings to the same longs in
+    its inverted-index join, so results are identical."""
     return ngram_jaccard_pairs(
-        _t(spark, sf, "documents"), threshold=JACCARD_THRESHOLD, max_bucket=None
+        _t(spark, sf, "documents"), threshold=JACCARD_THRESHOLD
     )
 
 

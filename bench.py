@@ -62,31 +62,6 @@ HEADLINE = [
 HEAVY = ["kg_pipeline", "workbook_100k", "media_phase"]
 
 
-def _extra_ngram_xxhash(spark, sf_dir):
-    """Production twin of dedup_ngram_jaccard: identical plan, but the
-    inverted index joins on native xxhash64 longs instead of the
-    md5-derived longs the cross-engine oracle needs (DuckDB has no
-    xxhash64, so this variant cannot have an oracle row — the md5
-    entry IS the correctness evidence; this row is the throughput a
-    deployment that doesn't need engine portability actually gets:
-    md5 computes a 128-bit hex string then parses 15 nibbles per
-    shingle, xxhash64 is one JVM intrinsic)."""
-    import __spark_entry__ as entrymod
-    from spinneret_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(
-        entrymod._t(spark, sf_dir, "documents"),
-        threshold=entrymod.JACCARD_THRESHOLD,
-        max_bucket=None,
-        hash_mode="xxhash",
-    )
-
-
-#: bench-only rows: production variants of oracle-checked queries
-#: whose hash/codec choice is not expressible in the DuckDB oracle
-BENCH_EXTRA = {"dedup_ngram_xxhash": _extra_ngram_xxhash}
-
-
 def _reps() -> int:
     return max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
@@ -247,8 +222,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = dict(entrymod.queries())
-    qs.update(BENCH_EXTRA)
-    suite = HEADLINE + list(BENCH_EXTRA)
+    suite = HEADLINE
     samples: dict[str, list[float]] = {n: [] for n in suite}
 
     # warm-up: one untimed pass over the WHOLE suite. Warming only one

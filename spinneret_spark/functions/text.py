@@ -35,7 +35,7 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     re-splits the full text once per shingle position — O(tokens²)
     per document, a multi-hour straggler on 10 KB pages. Callers
     project the token array in a prior select (see
-    operators/dedup._doc_shingles).
+    tests/reference_impls.doc_shingles).
     """
     # guard: Spark sequence(0, -1) counts DOWN ([0, -1]); short docs
     # must yield an empty shingle set instead.

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from spinneret_spark.materialize import materialize as _materialize
 from spinneret_spark.functions.hashing import det_id as _det_id
 from spinneret_spark.operators.components import components_with_isolated
-from spinneret_spark.operators.dedup import lsh_candidate_pairs
+from spinneret_spark.operators.dedup import lsh_candidate_pairs, shingle_sets
 
 
 def near_dup_edges(
@@ -100,29 +100,31 @@ def verify_candidate_pairs(
     docs_small = docs.join(
         cand_ids, docs[id_col] == cand_ids["id"], "left_semi"
     )
-    # shingle-hash sets via the same vectorized kernel family as the
-    # signatures: long-array intersection is ~10x cheaper than string
-    # shingles, and Catalyst cannot re-inline a Python stage the way
-    # it re-inlines expression trees (the O(tokens²) HOF trap)
-    from spinneret_spark.operators.dedup import shingle_hash_arrays_pandas
-
-    # BOTH pair sides (a and b) read sh_arrays: checkpoint it or the
-    # semi-join + re-shingling kernel executes twice inside the one
-    # verify query (measured 2x the prep cost at 400k pages)
-    sh_arrays = shingle_hash_arrays_pandas(
-        docs_small, n=shingle_n, id_col=id_col, text_col=text_col
-)
-    sh_arrays = _materialize(sh_arrays)
-    a = sh_arrays.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh_arrays.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    # crc32 shingle-hash sets from the same kernel as the signatures:
+    # long-array intersection is ~10x cheaper than string shingles,
+    # and Catalyst cannot re-inline a Python stage the way it
+    # re-inlines expression trees (the O(tokens²) HOF trap). Docs
+    # with fewer than shingle_n tokens have no set, and no signature,
+    # so they are never candidates. BOTH pair sides read the sets:
+    # checkpoint them or the semi-join + re-shingling kernel executes
+    # twice inside the one verify query (measured 2x the prep cost at
+    # 400k pages)
+    sets = _materialize(
+        shingle_sets(docs_small, shingle_n, "crc32", id_col, text_col)
+    )
+    a = sets.select(
+        F.col("id").alias("id_a"), F.col("arr").alias("sh_a"),
+        F.col("n_sh").alias("n_a"),
+    )
+    b = sets.select(
+        F.col("id").alias("id_b"), F.col("arr").alias("sh_b"),
+        F.col("n_sh").alias("n_b"),
+    )
     common = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
         candidates.join(a, "id_a")
         .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            common / (F.size("sh_a") + F.size("sh_b") - common),
-        )
+        .withColumn("jaccard", common / (F.col("n_a") + F.col("n_b") - common))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )

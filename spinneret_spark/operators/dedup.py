@@ -4,23 +4,39 @@ Four tiers, cheapest to richest (north-rule canonicalization +
 training-data-pipeline dedup):
 
 * exact          — md5 fingerprint group-by (one shuffle on a short key)
-* ngram-jaccard  — exact word-shingle Jaccard via shingle-inverted-
-                   index self-join (the verify stage of LSH)
+* ngram-jaccard  — exact word-shingle Jaccard over per-doc shingle-hash
+                   sets, counted by block-pair numpy kernels
 * minhash-lsh    — k-permutation MinHash signatures + banded join
                    (the blocking stage: candidate generation at scale)
 * simhash        — near-dup via Hamming-close fingerprints with banded
                    blocking
 
-Everything is built-in expressions (no Python crossing) using the
-portable md5 hash (functions.hashing), so each tier has an exact
-DuckDB oracle. At 100 TB the shuffle keys here are the scale story:
-shingle/band buckets are power-law hot, so candidate joins cap bucket
-sizes (DF filter, logged) and run under AQE skew splitting — see
-lsh_candidate_pairs.
+Every shingle-based tier reads one kernel,
+:func:`_shingle_kernel`: a doc's distinct word n-gram shingles
+hashed to longs, built in one Arrow crossing per batch
+(``mapInPandas``) under a hash family:
+
+* ``"md5"``  — the portable md5 long of each shingle string
+  (functions.hashing.md5_int), so the oracle-checked queries
+  (n-gram Jaccard, MinHash) have bit-exact DuckDB twins;
+* ``"crc32"`` — crc32 per token with a rolling window, cheaper; the
+  canonicalize pipeline's signatures and verification, whose persisted
+  ``canon_signatures`` depend on these exact values.
+
+Exact dedup, the 16-bit SimHash and the LSH banding are built-in
+expressions with DuckDB twins. At 100 TB the shuffle keys here are the
+scale story: shingle/band buckets are power-law hot, so candidate
+joins cap bucket sizes (DF filter, logged) and run under AQE skew
+splitting — see lsh_candidate_pairs.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
+import zlib
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,10 +45,18 @@ from spinneret_spark.materialize import materialize as _materialize
 from spinneret_spark.functions.hashing import (
     MERSENNE_P,
     MINHASH_K,
+    MINHASH_PARAMS,
     md5_int,
-    minhash_value,
 )
-from spinneret_spark.functions.text import shingles, tokens
+from spinneret_spark.functions.text import tokens
+
+#: docs per block of the blocked Jaccard plan — measured best at sf1.0
+#: (50k docs): 6.2 s vs 7.7 (4096) / 13.1 (8192, tasks too coarse) /
+#: 12.7 (1024, B×corpus replication dominates)
+_JACCARD_BLOCK_DOCS = 2048
+
+_PERM_A = np.array([a for a, _ in MINHASH_PARAMS], dtype=np.int64)[:, None]
+_PERM_B = np.array([b for _, b in MINHASH_PARAMS], dtype=np.int64)[:, None]
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
@@ -45,18 +69,182 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """Two-step projection: tokens materialized as a real column
-    BEFORE the shingle window — an inline tokens() expression would be
-    re-evaluated per shingle position (O(tokens²) per doc, see
-    functions/text.shingles_from_tokens)."""
-    from spinneret_spark.functions.text import shingles_from_tokens, tokens
+def _shingle_kernel(n: int, family: str):
+    """The shingle kernel: a function ``(ids, texts, memo) -> (ids,
+    sets)`` giving, for the docs of one batch with at least ``n``
+    tokens, each doc's distinct word n-gram shingle hashes as an int64
+    array. Tokenization matches ``functions.text.tokens`` (split on
+    single space, drop empties).
 
-    toks = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+    ``family="crc32"``: crc32 per token mod p, the rolling
+    ``w·31 + t`` window mod p, distinct values (sorted).
+    ``family="md5"``: string-distinct shingles (first-occurrence
+    order), each hashed to ``int(md5 hex[:15], 16)`` — the integer
+    ``md5_int`` gives in Spark and DuckDB.
+
+    ``memo`` is the caller's per-task cache (token → crc32, shingle →
+    md5): web/templated corpora repeat heavily (df ~94 on the bench
+    corpus), so hashing costs ~vocabulary, not corpus tokens; the
+    values are identical.
+
+    A closure, so cloudpickle ships it inside the task: a module-level
+    function would make every new Python worker import this module —
+    compiled from source when bytecode caching is off, ~20 ms a worker,
+    measured +0.5 s on a delta canonicalize of 8 pages."""
+    if family not in ("crc32", "md5"):
+        raise ValueError(f"hash family {family!r} not in crc32|md5")
+    crc32 = family == "crc32"
+
+    def batch_sets(ids, texts, memo: dict):
+        out_ids, out_sets = [], []
+        for doc_id, text in zip(ids, texts):
+            toks = [t for t in text.split(" ") if t] if text else []
+            if len(toks) < n:
+                continue
+            w = len(toks) - n + 1
+            if crc32:
+                th = []
+                for t in toks:
+                    h = memo.get(t)
+                    if h is None:
+                        h = memo[t] = zlib.crc32(t.encode("utf-8"))
+                    th.append(h)
+                th = np.array(th, dtype=np.int64) % MERSENNE_P
+                win = th[:w]
+                for j in range(1, n):
+                    win = win * 31 + th[j : w + j]
+                sh_set = np.unique(win % MERSENNE_P)
+            else:
+                hs = []
+                shs = (" ".join(toks[i : i + n]) for i in range(w))
+                for sh in dict.fromkeys(shs):
+                    h = memo.get(sh)
+                    if h is None:
+                        h = memo[sh] = int(
+                            hashlib.md5(sh.encode("utf-8")).hexdigest()[:15],
+                            16,
+                        )
+                    hs.append(h)
+                sh_set = np.array(hs, dtype=np.int64)
+            out_ids.append(doc_id)
+            out_sets.append(sh_set)
+        return out_ids, out_sets
+
+    return batch_sets
+
+
+def _spread(docs: DataFrame, id_col: str, text_col: str, n_rows: int):
+    """``docs``' (id, text) columns hash-repartitioned for a Python
+    kernel: corpora this small arrive as one scan split, which would
+    serialize the kernel. Partition count scales with the corpus
+    (≥~512 docs per task — below that the worker/batch fixed costs
+    dominate, measured +0.5-0.7 s per query at 5k docs with 64 tasks),
+    capped at 2× the cluster parallelism."""
+    parallelism = docs.sparkSession.sparkContext.defaultParallelism
+    n_parts = max(4, min(2 * parallelism, math.ceil(n_rows / 512)))
+    return docs.select(id_col, text_col).repartition(n_parts, F.col(id_col))
+
+
+def shingle_sets(
+    docs: DataFrame,
+    n: int,
+    family: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(id, arr array<long>, n_sh int): each doc's distinct shingle-hash
+    set under hash ``family`` (see :func:`_shingle_kernel`), one
+    ``mapInPandas`` over ``docs`` as partitioned. Docs with fewer than
+    ``n`` tokens emit no row."""
+    id_type = docs.schema[id_col].dataType.simpleString()
+    batch_sets = _shingle_kernel(n, family)
+
+    def kernel(batches):
+        memo: dict = {}
+        for pdf in batches:
+            ids, sets = batch_sets(pdf[id_col], pdf[text_col], memo)
+            # explicit dtypes: an empty batch would otherwise produce
+            # float64 columns Arrow cannot cast to list<long>/string
+            yield pd.DataFrame(
+                {
+                    "id": pd.Series(ids, dtype=object),
+                    "arr": pd.Series(sets, dtype=object),
+                    "n_sh": pd.Series([len(s) for s in sets], dtype="int32"),
+                }
+            )
+
+    return docs.select(id_col, text_col).mapInPandas(
+        kernel, schema=f"id {id_type}, arr array<long>, n_sh int"
     )
-    return toks.select(
-        "id", F.explode(shingles_from_tokens(F.col("toks"), n)).alias("shingle")
+
+
+def _signatures(
+    docs: DataFrame, k: int, n: int, family: str, id_col: str, text_col: str
+) -> DataFrame:
+    """(id, mh0..mh{k-1}): the shingle kernel plus per-doc MinHash in
+    one ``mapInPandas`` over ``docs`` as partitioned.
+
+    A doc's MinHash is min over its set of (a·(x mod p) + b) mod p for
+    the k permutations — the integers of
+    ``functions.hashing.minhash_value`` (a, x < 2³¹, so int64 never
+    overflows). Per doc, so memory stays k × |set|: a k × (batch
+    shingles) matrix would reach GBs on 10 KB pages."""
+    id_type = docs.schema[id_col].dataType.simpleString()
+    fields = ", ".join(f"mh{i} long" for i in range(k))
+    a, b = _PERM_A[:k], _PERM_B[:k]
+    batch_sets = _shingle_kernel(n, family)
+
+    def kernel(batches):
+        memo: dict = {}
+        for pdf in batches:
+            ids, sets = batch_sets(pdf[id_col], pdf[text_col], memo)
+            sig = np.array(
+                [((a * (x % MERSENNE_P) + b) % MERSENNE_P).min(axis=1)
+                 for x in sets],
+                dtype=np.int64,
+            ).reshape(len(sets), k)
+            data = {"id": pd.Series(ids, dtype=object)}
+            for i in range(k):
+                data[f"mh{i}"] = sig[:, i]
+            yield pd.DataFrame(data)
+
+    return docs.select(id_col, text_col).mapInPandas(
+        kernel, schema=f"id {id_type}, {fields}"
+    )
+
+
+def minhash_signatures_pandas(
+    docs: DataFrame,
+    k: int = MINHASH_K,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """MinHash signatures over crc32 shingle sets — the canonicalize
+    pipeline's signatures, computed where the docs live (no
+    repartition, no count). Each doc is one numpy pass (~0.3 ms per
+    10 KB page); the expression plan it replaced evaluated Catalyst
+    higher-order functions per shingle, outside whole-stage codegen.
+    Docs with fewer than n tokens emit no signature."""
+    return _signatures(docs, k, n, "crc32", id_col, text_col)
+
+
+def minhash_signatures(
+    docs: DataFrame,
+    k: int = MINHASH_K,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """MinHash signatures over md5 shingle sets: the same kernel and
+    permutations as :func:`minhash_signatures_pandas`, in the hash
+    family the DuckDB oracle reproduces (``MIN(minhash_value_sql(
+    md5_int(shingle), i))``). The corpus is spread over the cluster
+    first (one count). Docs with fewer than n tokens emit no
+    signature."""
+    return _signatures(
+        _spread(docs, id_col, text_col, docs.count()),
+        k, n, "md5", id_col, text_col,
     )
 
 
@@ -66,252 +254,40 @@ def ngram_jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_bucket: int | None = 1000,
-    hash_mode: str = "md5",
-    materialize: bool = True,
-    impl: str = "blocked",
 ) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs (a < b, jaccard ≥ threshold).
+    """Exact n-gram Jaccard similar pairs (id_a < id_b, jaccard ≥
+    threshold) over md5 shingle sets, so the DuckDB oracle's
+    inverted-index join on ``md5_int(shingle)`` gives the same rows.
 
-    Two physically different plans compute the identical result set
-    (pytest-pinned equal); both hash shingle strings to 8-byte longs
-    first so no exchange ever carries shingle text:
+    The per-doc sets feed block-pair counting kernels
+    (:func:`_jaccard_pairs_blocked`). The only exchange is the
+    block-pair replication of the set arrays — O(B × corpus sets),
+    ~8 bytes/shingle — instead of the inverted-index self-join's
+    Σ_s df(s)² row explosion. Measured at sf1.0 (50k docs, avg
+    shingle df 94): Σ df² = 257M join rows, 210 s for the join plan
+    vs ~8 s blocked — the same pair touches, inside numpy at memory
+    bandwidth. Prefix filtering was measured first and rejected: this
+    corpus's shingle vocabulary is small and uniformly hot (27.9k
+    shingles), so the t=0.5 prefix index still yields Σ pdf² = 111M.
 
-    * ``impl="blocked"`` (default) — filter-free exact counting via
-      block-pair kernels. Per-doc shingle-hash sets are built in one
-      fused Arrow pass (``_shingle_sets_pandas``: tokenize + shingle
-      + memoized md5, emitting the arrays directly — no interpreted
-      shingle HOFs, no per-row md5+conv projection, no collect_list
-      shuffle); docs are hashed into B blocks scaled to corpus size
-      and each of the B(B+1)/2 block pairs is one ``applyInPandas``
-      task whose numpy kernel builds the inverted index for its ≤2
-      blocks locally and counts common shingles for every co-shingle
-      pair vectorized (positional upper-triangle cross-products +
-      radix sort + run-length count). The only exchange is the
-      block-pair replication of the per-doc set arrays — O(B ×
-      corpus sets), ~8 bytes/shingle — instead of the inverted-index
-      self-join's Σ_s df(s)² row explosion. Measured at sf1.0
-      (50k docs, avg shingle df 94): Σ df² = 257M join rows → 114M
-      distinct pairs aggregated for 2.5k survivors, 210 s for the
-      join plan vs ~8 s blocked — the same Σ df² pair touches, but
-      inside numpy at memory bandwidth. Classic filter-and-verify
-      (prefix filtering) was measured first and rejected: this
-      corpus's shingle vocabulary is small and uniformly hot (27.9k
-      shingles, avg df 94), so the t=0.5 prefix index still yields
-      Σ pdf² = 111M — the filters don't bite, the counting itself
-      has to get cheap. Both ``hash_mode="md5"`` and ``"xxhash"``
-      take the same md5-set builder here: hash values only mediate
-      set equality, so the output is identical and md5 keeps the
-      DuckDB oracle bit-exact; with the memo the md5-vs-xxhash cost
-      gap is gone. With ``max_bucket`` set the exploded+hashed
-      relation is built first (the hot-bucket filter needs global
-      document frequencies), then aggregated into the same arrays.
-
-    * ``impl="join"`` — the inverted-index plan: explode distinct
-      shingles → self-equi-join on shingle → per-pair common count →
-      |A∪B| from per-doc sizes (kept for ``hash_mode="none"``
-      debugging and as the cross-check twin).
-
-    Jaccard = common/(|A|+|B|-common) is a ratio of exact ints in
-    both plans (identical IEEE double division), so the filter is
-    engine-stable.
-
-    ``materialize`` checkpoints the hashed shingle relation when it
-    fans out to >1 consumer (the join plan's self-join sides + size
-    agg; the blocked plan's hot-bucket scan when ``max_bucket`` is
-    set): the shingle build — the most expensive expression in the
-    plan — would otherwise replay per consumer. The pin strategy
-    comes from the ``SPINNERET_MATERIALIZE`` knob
-    (spinneret_spark/materialize.py).
-
-    ``hash_mode`` — ``"md5"`` (default): portable md5-derived long,
-    the DuckDB oracle reproduces it bit-exactly
-    (functions/hashing.md5_int); ``"xxhash"``: native xxhash64, the
-    production setting when no cross-engine oracle is needed;
-    ``"none"``: join on raw shingle strings (debugging; forces
-    ``impl="join"``).
-
-    ``max_bucket`` drops shingles shared by more than that many docs
-    (stopword-like shingles contribute O(bucket²) candidate rows and
-    almost no discrimination — standard practice). Applied to the
-    shingle relation before sizes are taken, identically in both
-    plans.
-    """
-    sh = _doc_shingles(docs, id_col, text_col, n)
-    if hash_mode == "md5":
-        sh = sh.select("id", md5_int(F.col("shingle")).alias("shingle"))
-    elif hash_mode == "xxhash":
-        sh = sh.select("id", F.xxhash64("shingle").alias("shingle"))
-    elif hash_mode != "none":
-        raise ValueError(f"hash_mode {hash_mode!r} not in md5|xxhash|none")
-    if impl == "blocked" and hash_mode != "none":
-        id_type = docs.schema[id_col].dataType.simpleString()
-        if max_bucket is None:
-            # fused set build: tokenize + shingle + md5 in ONE Arrow
-            # pass with a per-task hash memo, emitting the per-doc
-            # arrays directly — no interpreted shingle HOFs, no
-            # per-row md5+conv projection, no collect_list shuffle
-            n_docs = docs.count()
-            per_doc = _shingle_sets_pandas(
-                docs, n, id_col, text_col, n_docs_hint=n_docs
-            )
-            return _jaccard_pairs_blocked(
-                per_doc, threshold, id_type, n_docs_hint=n_docs
-            )
-        if max_bucket is not None:
-            # the hot-bucket scan needs the exploded relation twice
-            if materialize:
-                sh = _materialize(sh)
-            hot = (
-                sh.groupBy("shingle")
-                .agg(F.count("*").alias("df"))
-                .filter(F.col("df") > max_bucket)
-                .select("shingle")
-            )
-            sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-        per_doc = sh.groupBy("id").agg(
-            F.collect_list("shingle").alias("arr"),
-            F.count("*").alias("n_sh"),
-        )
-        return _jaccard_pairs_blocked(
-            per_doc, threshold, id_type, n_docs_hint=docs.count()
-        )
-    if impl not in ("join", "blocked"):
-        raise ValueError(f"impl {impl!r} not in blocked|join")
-    if materialize:
-        sh = _materialize(sh)
-    if max_bucket is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_bucket)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, "shingle")
-        .where(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("common"))
+    Jaccard = common/(|A|+|B|-common) is a ratio of exact ints
+    (IEEE double division, like the oracle), so the filter is
+    engine-stable."""
+    n_docs = docs.count()
+    per_doc = shingle_sets(
+        _spread(docs, id_col, text_col, n_docs), n, "md5", id_col, text_col
     )
-    return (
-        common.join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "n_sh": "n_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _kernel_partitions(n_rows: int, parallelism: int) -> int:
-    """Input partition count for the fused Arrow kernels: scale with
-    the corpus (≥~512 docs per Python task — below that the
-    worker/batch fixed costs dominate, measured +0.5-0.7 s per query
-    at 5k docs with 64 tasks) and cap at 2× the cluster parallelism."""
-    import math
-
-    return max(4, min(2 * parallelism, math.ceil(n_rows / 512)))
-
-
-def _shingle_sets_pandas(
-    docs: DataFrame,
-    n: int,
-    id_col: str,
-    text_col: str,
-    n_docs_hint: int | None = None,
-) -> DataFrame:
-    """(id, arr array<long>, n_sh int): per-doc distinct word-shingle
-    sets hashed with the portable md5 long — the same values as
-    ``md5_int(shingle string)`` (hashlib.md5 hex == Spark md5 hex;
-    int(hex[:15], 16) == conv(substring(md5, 1, 15), 16, 10)), so
-    Jaccard counts downstream are bit-identical to the expression
-    path and the DuckDB oracle.
-
-    One Arrow crossing builds everything: tokenization matches
-    ``functions.text.tokens`` (split on single space, drop empties),
-    docs with fewer than ``n`` tokens emit no row (like the exploded
-    path), and a per-task memo keyed on shingle string amortizes the
-    md5 calls — shingle vocabularies repeat heavily within a task, so
-    the hash cost is ~distinct-shingles, not corpus-shingles. The
-    explicit hash repartition spreads the corpus over the cluster
-    first: corpora this small arrive as one scan split, which would
-    serialize the kernel."""
-    import hashlib
-
-    spark = docs.sparkSession
     id_type = docs.schema[id_col].dataType.simpleString()
-    schema = f"id {id_type}, arr array<long>, n_sh int"
-    n_parts = _kernel_partitions(
-        n_docs_hint if n_docs_hint is not None else docs.count(),
-        spark.sparkContext.defaultParallelism,
-    )
-
-    def kernel(batches):
-        memo: dict[str, int] = {}
-        _md5 = hashlib.md5
-        for pdf in batches:
-            out_ids, out_arrs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if not text:
-                    continue
-                toks = [t for t in text.split(" ") if t]
-                if len(toks) < n:
-                    continue
-                seen = set()
-                arr = []
-                for i in range(len(toks) - n + 1):
-                    s = " ".join(toks[i : i + n])
-                    if s in seen:
-                        continue
-                    seen.add(s)
-                    h = memo.get(s)
-                    if h is None:
-                        h = int(
-                            _md5(s.encode("utf-8")).hexdigest()[:15], 16
-                        )
-                        memo[s] = h
-                    arr.append(h)
-                out_ids.append(doc_id)
-                out_arrs.append(arr)
-            # explicit dtypes: an empty batch would otherwise produce
-            # float64 columns Arrow cannot cast to list<long>/string
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out_ids, dtype=object),
-                    "arr": pd.Series(out_arrs, dtype=object),
-                    "n_sh": pd.Series(
-                        [len(a) for a in out_arrs], dtype="int32"
-                    ),
-                }
-            )
-
-    return (
-        docs.select(id_col, text_col)
-        .repartition(n_parts, F.col(id_col))
-        .mapInPandas(kernel, schema=schema)
-    )
+    return _jaccard_pairs_blocked(per_doc, threshold, id_type, n_docs)
 
 
 def _jaccard_blocks(n_docs: int, parallelism: int) -> int:
     """Block count for the blocked Jaccard plan, scale-adaptive: B
     grows with corpus size (bounds per-kernel memory to
-    ~SPINNERET_JACCARD_BLOCK_DOCS docs per block) with a floor that
-    keeps B(B+1)/2 tasks ≥ the cluster's parallelism on small inputs
-    — never a constant tuned to one box."""
-    import math
-    import os
-
-    # 2048 measured best at sf1.0 (50k docs): 6.2 s vs 7.7 (4096) /
-    # 13.1 (8192, tasks too coarse) / 12.7 (1024, B×corpus replication
-    # dominates); the knob trades kernel balance against replication
-    block_docs = int(os.environ.get("SPINNERET_JACCARD_BLOCK_DOCS", "2048"))
-    b = max(1, math.ceil(n_docs / block_docs))
+    ~_JACCARD_BLOCK_DOCS docs per block) with a floor that keeps
+    B(B+1)/2 tasks ≥ the cluster's parallelism on small inputs —
+    never a constant tuned to one box."""
+    b = max(1, math.ceil(n_docs / _JACCARD_BLOCK_DOCS))
     # parallelism floor: B(B+1)/2 >= parallelism, but never blocks
     # smaller than ~512 docs (kernel setup would dominate)
     floor = min(
@@ -319,6 +295,100 @@ def _jaccard_blocks(n_docs: int, parallelism: int) -> int:
         math.ceil(math.sqrt(2 * max(1, parallelism))),
     )
     return max(1, min(256, max(b, floor)))
+
+
+def _index_dtype(n_rows: int, n_post: int, total: int):
+    """Index dtype for the block-pair kernel: int32 (twice the memory
+    bandwidth in the hot repeat/gather/sort passes) only when every
+    value it holds fits — pair keys below n_rows², posting positions
+    up to n_post and pair-touch offsets up to total. ``total`` passes
+    2³¹ long before n_rows does: ~4k templated pages sharing ~300
+    boilerplate shingles already make 4096²/2 × 300 ≈ 2.5·10⁹."""
+    fits = max(n_rows * n_rows, n_post, total) <= np.iinfo(np.int32).max
+    return np.int32 if fits else np.int64
+
+
+_EMPTY_PAIRS = {
+    "id_a": pd.Series([], dtype=object),
+    "id_b": pd.Series([], dtype=object),
+    "jaccard": pd.Series([], dtype="float64"),
+}
+
+
+def _block_pair_jaccard(
+    pdf: pd.DataFrame, threshold: float, cross: bool
+) -> pd.DataFrame:
+    """(id_a, id_b, jaccard) pairs at or above ``threshold`` among the
+    set rows (id, arr, n_sh, bk) of one block pair; ``cross`` keeps
+    only pairs whose rows sit in different blocks.
+
+    Pure numpy: radix-sort the postings, expand per-shingle doc-index
+    cross-products (Σ m² vectorized ops, no Python loop over rows),
+    count pairs with one sort + run-length pass, then filter
+    common/(n_a+n_b-common) ≥ threshold."""
+    n_rows = len(pdf)
+    if n_rows < 2:
+        return pd.DataFrame(_EMPTY_PAIRS)
+    ids = pdf["id"].to_numpy()
+    nsh = pdf["n_sh"].to_numpy().astype(np.int64)
+    blk = pdf["bk"].to_numpy()
+    cols = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["arr"]])
+    n_post = len(cols)
+    pdt = _index_dtype(n_rows, n_post, 0)
+    # postings: (row index, shingle) exploded from the arrays
+    row_of = np.repeat(np.arange(n_rows, dtype=pdt), nsh)
+    # stable sort by shingle value: postings of one shingle form a
+    # run, and WITHIN the run row indices stay ascending — so
+    # position order is row order and the upper triangle can be
+    # generated positionally
+    order = np.argsort(cols, kind="stable")
+    sc, sr = cols[order], row_of[order]
+    new_grp = np.empty(n_post, dtype=bool)
+    new_grp[0] = True
+    np.not_equal(sc[1:], sc[:-1], out=new_grp[1:])
+    gid = np.cumsum(new_grp, dtype=pdt) - 1
+    m = np.bincount(gid).astype(pdt)
+    offs = np.zeros(len(m), dtype=pdt)
+    np.cumsum(m[:-1], out=offs[1:])
+    # pairs contributed by each posting as the 'a' side: the
+    # members AFTER it in its run (upper triangle, a_row < b_row)
+    local = np.arange(n_post, dtype=pdt) - offs[gid]
+    m_r = m[gid] - 1 - local
+    total = int(m_r.sum(dtype=np.int64))
+    if total == 0:
+        return pd.DataFrame(_EMPTY_PAIRS)
+    idt = _index_dtype(n_rows, n_post, total)
+    a_rows = np.repeat(sr, m_r)
+    row_starts = np.zeros(n_post, dtype=np.int64)
+    np.cumsum(m_r[:-1], out=row_starts[1:])
+    k = np.arange(total, dtype=idt) - np.repeat(row_starts, m_r).astype(idt)
+    b_rows = sr[np.repeat(np.arange(1, n_post + 1, dtype=idt), m_r) + k]
+    # common-shingle count per pair: radix sort + run-length pass
+    pair_key = np.sort(a_rows.astype(idt) * idt(n_rows) + b_rows, kind="stable")
+    bounds = np.empty(total, dtype=bool)
+    bounds[0] = True
+    np.not_equal(pair_key[1:], pair_key[:-1], out=bounds[1:])
+    upairs = pair_key[bounds]
+    common = np.diff(np.append(np.flatnonzero(bounds), total))
+    ar = upairs // n_rows
+    br = upairs - ar * n_rows
+    if cross:
+        # within-block pairs belong to this group's diagonal twins
+        sel = blk[ar] != blk[br]
+        ar, br, common = ar[sel], br[sel], common[sel]
+    # integer pre-filter (epsilon-loose) before the exact-division
+    # check: jac >= t  <=>  common*(1+t) >= t*(na+nb)
+    na, nb = nsh[ar], nsh[br]
+    cand = common * (1.0 + threshold) >= threshold * (na + nb) - 1e-9
+    ar, br = ar[cand], br[cand]
+    common, na, nb = common[cand], na[cand], nb[cand]
+    jac = common / (na + nb - common)
+    sel = (jac >= threshold) & (ids[ar] != ids[br])
+    ar, br, jac = ar[sel], br[sel], jac[sel]
+    ia, ib = ids[ar], ids[br]
+    return pd.DataFrame(
+        {"id_a": np.minimum(ia, ib), "id_b": np.maximum(ia, ib), "jaccard": jac}
+    )
 
 
 def _jaccard_pairs_blocked(
@@ -332,21 +402,13 @@ def _jaccard_pairs_blocked(
     (see ngram_jaccard_pairs).
 
     Each doc's set row is replicated to its B block-pair groups, and
-    every group's kernel counts |A∩B| for all co-shingle pairs it
-    owns: an unordered pair (a, b) lands in exactly one group
-    ({block(a), block(b)}), cross-block groups keep only cross-block
-    pairs, so no pair is emitted twice. The kernel is pure numpy —
-    radix-sort the task's postings, expand per-shingle doc-index
-    cross-products (Σ m² vectorized ops, no Python loop over rows),
-    count pairs with one sort + run-length pass, then filter
-    common/(n_a+n_b-common) ≥ threshold — the same exact arithmetic
-    as the join plan, at memory bandwidth instead of shuffle
-    bandwidth. The explicit repartition on the group key keeps one
-    kernel task per block pair: without it AQE coalesces the ~5 MB
-    groups into a handful of fat partitions and the kernels run
-    nearly serial."""
-    import numpy as np
-
+    every group's kernel (:func:`_block_pair_jaccard`) counts |A∩B|
+    for all co-shingle pairs it owns: an unordered pair (a, b) lands
+    in exactly one group ({block(a), block(b)}), cross-block groups
+    keep only cross-block pairs, so no pair is emitted twice. The
+    explicit repartition on the group key keeps one kernel task per
+    block pair: without it AQE coalesces the ~5 MB groups into a
+    handful of fat partitions and the kernels run nearly serial."""
     spark = per_doc.sparkSession
     n_blocks = _jaccard_blocks(
         n_docs_hint, spark.sparkContext.defaultParallelism
@@ -369,353 +431,15 @@ def _jaccard_pairs_blocked(
         F.explode(F.array(*pair_structs)).alias("bp"),
     ).select("id", "arr", "n_sh", "bk", "bp.bi", "bp.bj")
 
-    schema = f"id_a {id_type}, id_b {id_type}, jaccard double"
-    empty = {
-        "id_a": pd.Series([], dtype=object),
-        "id_b": pd.Series([], dtype=object),
-        "jaccard": pd.Series([], dtype="float64"),
-    }
-
     def kernel(key, pdf):
         bi, bj = key
-        n_rows = len(pdf)
-        if n_rows < 2:
-            return pd.DataFrame(empty)
-        # int32 indices keep the hot passes (repeat/gather/radix sort)
-        # at twice the memory bandwidth of int64; pair keys need
-        # n_rows² < 2³¹, i.e. blocks up to ~23k docs each
-        idt = np.int32 if n_rows <= 46000 else np.int64
-        ids = pdf["id"].to_numpy()
-        nsh = pdf["n_sh"].to_numpy().astype(np.int64)
-        blk = pdf["bk"].to_numpy()
-        # postings: (row index, shingle) exploded from the arrays
-        row_of = np.repeat(np.arange(n_rows, dtype=idt), nsh)
-        cols = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in pdf["arr"]]
-        )
-        n_post = len(cols)
-        # stable sort by shingle value: postings of one shingle form a
-        # run, and WITHIN the run row indices stay ascending — so
-        # position order is row order and the upper triangle can be
-        # generated positionally
-        order = np.argsort(cols, kind="stable")
-        sc, sr = cols[order], row_of[order]
-        new_grp = np.empty(n_post, dtype=bool)
-        new_grp[0] = True
-        np.not_equal(sc[1:], sc[:-1], out=new_grp[1:])
-        gid = np.cumsum(new_grp, dtype=idt) - 1
-        m = np.bincount(gid).astype(idt)
-        offs = np.zeros(len(m), dtype=idt)
-        np.cumsum(m[:-1], out=offs[1:])
-        # pairs contributed by each posting as the 'a' side: the
-        # members AFTER it in its run (upper triangle, a_row < b_row)
-        local = np.arange(n_post, dtype=idt) - offs[gid]
-        m_r = m[gid] - 1 - local
-        total = int(m_r.sum())
-        if total == 0:
-            return pd.DataFrame(empty)
-        a_rows = np.repeat(sr, m_r)
-        row_starts = np.zeros(n_post, dtype=np.int64)
-        np.cumsum(m_r[:-1], out=row_starts[1:])
-        k = np.arange(total, dtype=idt) - np.repeat(
-            row_starts, m_r
-        ).astype(idt)
-        b_rows = sr[np.repeat(np.arange(1, n_post + 1, dtype=idt), m_r) + k]
-        # common-shingle count per pair: radix sort + run-length pass
-        pair_key = np.sort(
-            a_rows.astype(idt) * idt(n_rows) + b_rows, kind="stable"
-        )
-        bounds = np.empty(total, dtype=bool)
-        bounds[0] = True
-        np.not_equal(pair_key[1:], pair_key[:-1], out=bounds[1:])
-        upairs = pair_key[bounds]
-        common = np.diff(np.append(np.flatnonzero(bounds), total))
-        ar = upairs // n_rows
-        br = upairs - ar * n_rows
-        if bi != bj:
-            # within-block pairs belong to this group's diagonal twins
-            sel = blk[ar] != blk[br]
-            ar, br, common = ar[sel], br[sel], common[sel]
-        # integer pre-filter (epsilon-loose) before the exact-division
-        # check: jac >= t  <=>  common*(1+t) >= t*(na+nb)
-        na, nb = nsh[ar], nsh[br]
-        cand = common * (1.0 + threshold) >= threshold * (na + nb) - 1e-9
-        ar, br = ar[cand], br[cand]
-        common, na, nb = common[cand], na[cand], nb[cand]
-        jac = common / (na + nb - common)
-        sel = (jac >= threshold) & (ids[ar] != ids[br])
-        ar, br, jac = ar[sel], br[sel], jac[sel]
-        ia, ib = ids[ar], ids[br]
-        lo = np.minimum(ia, ib)
-        hi = np.maximum(ia, ib)
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "jaccard": jac})
+        return _block_pair_jaccard(pdf, threshold, bi != bj)
 
     n_groups = n_blocks * (n_blocks + 1) // 2
     rep = rep.repartition(min(n_groups, 2048), "bi", "bj")
-    return rep.groupBy("bi", "bj").applyInPandas(kernel, schema=schema)
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    k: int = MINHASH_K,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fast_hash: bool = False,
-    impl: str = "kernel",
-) -> DataFrame:
-    """k MinHash values per document over its shingle set.
-
-    ``impl="kernel"`` (default) — the per-doc md5 shingle-hash sets
-    come from the fused Arrow builder (``_shingle_sets_pandas``, one
-    crossing, memoized md5) and all k permutation minima are computed
-    in one vectorized numpy pass (``(a·x+b) mod p`` over the batch's
-    concatenated sets + ``np.minimum.reduceat`` per doc) — the exact
-    same integers as the expression path (int64 arithmetic never
-    overflows: a, x < 2³¹). Measured at sf1.0: the expression path
-    spends 5.7 s of its 6.0 s building the exploded md5 shingle
-    relation (interpreted shingle HOFs + per-row md5+conv); the
-    kernel path does it in ~1 s.
-
-    ``impl="expr"`` — one explode + one grouped aggregation producing
-    all k minima in a single shuffle (map-side partial min keeps the
-    shuffle tiny: k longs per doc per mapper); the base hash is
-    projected once per shingle row, so hashing cost is k-independent.
-    The oracle-shaped cross-check twin (pytest-pinned equal).
-
-    ``fast_hash`` switches the base hash from the portable md5-derived
-    integer (DuckDB-oracle-comparable, used by the checked queries) to
-    native ``xxhash64`` (the production-pipeline path — permutation
-    arithmetic and LSH behavior are identical; always the expression
-    path).
-    """
-    if not fast_hash and impl == "kernel":
-        return _minhash_from_sets(
-            _shingle_sets_pandas(docs, n, id_col, text_col), k
-        )
-    if fast_hash:
-        # numeric shingle hashes: hash each token once, combine the
-        # n-window with a rolling polynomial mod p — no 10M-row
-        # shingle-string materialization (2-3x cheaper than the
-        # portable path; identical LSH behavior, small extra
-        # collision rate absorbed by the exact-Jaccard verify stage)
-        toks = tokens(F.col(text_col))
-        # materialize the token-hash array as a real column FIRST:
-        # referencing the transform(...) expression inside the window
-        # lambda would inline (= recompute) it per element access
-        th_col = docs.select(
-            F.col(id_col).alias("id"),
-            F.transform(
-                toks, lambda t: F.pmod(F.xxhash64(t), F.lit(MERSENNE_P))
-            ).alias("th"),
-        )
-        th = F.col("th")
-        win = F.when(
-            F.size(th) < n, F.array().cast("array<long>")
-        ).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(th) - n),
-                    lambda i: F.pmod(
-                        sum(
-                            F.element_at(th, i + j + 1) * F.lit(31 ** (n - 1 - j))
-                            for j in range(n)
-                        ),
-                        F.lit(MERSENNE_P),
-                    ),
-                )
-            )
-        )
-        hashed = th_col.select("id", F.explode(win).alias("h"))
-    else:
-        sh = _doc_shingles(docs, id_col, text_col, n)
-        hashed = sh.select("id", md5_int(F.col("shingle")).alias("h"))
-    aggs = [
-        F.min(minhash_value(F.col("h"), i)).alias(f"mh{i}") for i in range(k)
-    ]
-    return hashed.groupBy("id").agg(*aggs)
-
-
-def _minhash_from_sets(per_doc: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(id, mh0..mh{k-1}) from a (id, arr array<long>, n_sh) set
-    relation — one vectorized numpy pass per batch: reduce the
-    concatenated shingle hashes mod p once, apply all k universal
-    permutations as a (k × total) matrix op, then per-doc minima via
-    ``np.minimum.reduceat``. Bit-identical to the expression path's
-    ``min(minhash_value(h, i))`` aggregation."""
-    import numpy as np
-
-    from spinneret_spark.functions.hashing import MINHASH_PARAMS
-
-    params = MINHASH_PARAMS[:k]
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    id_type = per_doc.schema["id"].dataType.simpleString()
-    fields = ", ".join(f"mh{i} long" for i in range(k))
-    schema = f"id {id_type}, {fields}"
-
-    def kernel(batches):
-        for pdf in batches:
-            ids, lens, parts = [], [], []
-            for doc_id, arr in zip(pdf["id"], pdf["arr"]):
-                x = np.asarray(arr, dtype=np.int64)
-                if len(x) == 0:
-                    continue
-                ids.append(doc_id)
-                lens.append(len(x))
-                parts.append(x)
-            if not ids:
-                yield pd.DataFrame(
-                    {
-                        "id": pd.Series([], dtype=object),
-                        **{
-                            f"mh{i}": pd.Series([], dtype="int64")
-                            for i in range(k)
-                        },
-                    }
-                )
-                continue
-            x_all = np.concatenate(parts) % MERSENNE_P
-            bounds = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=bounds[1:])
-            vals = (a_vec * x_all[None, :] + b_vec) % MERSENNE_P
-            mins = np.minimum.reduceat(vals, bounds, axis=1)
-            out = {"id": pd.Series(ids, dtype=object)}
-            for i in range(k):
-                out[f"mh{i}"] = mins[i]
-            yield pd.DataFrame(out)
-
-    return per_doc.select("id", "arr").mapInPandas(kernel, schema=schema)
-
-
-def minhash_signatures_pandas(
-    docs: DataFrame,
-    k: int = MINHASH_K,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """MinHash signatures via a vectorized Arrow kernel — the
-    production path for corpus-scale documents.
-
-    The pure-expression variant (:func:`minhash_signatures`) evaluates
-    Catalyst higher-order functions per shingle — interpreted, outside
-    whole-stage codegen — costing ~1 µs/lambda × tokens × corpus. Here
-    each document is one numpy pass: crc32 per token, rolling
-    polynomial window mod p, np.unique, then all k permutations as
-    whole-array ops (~0.3 ms per 10 KB page). Tokenization matches
-    ``functions.text.tokens`` (split on single space, drop empties);
-    docs with fewer than n tokens emit no signature, like the
-    expression path.
-    """
-    import zlib
-
-    import numpy as np
-
-    from spinneret_spark.functions.hashing import MINHASH_PARAMS
-
-    params = MINHASH_PARAMS[:k]
-    id_type = docs.schema[id_col].dataType.simpleString()
-    fields = ", ".join(f"mh{i} long" for i in range(k))
-    schema = f"id {id_type}, {fields}"
-
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
-
-    def kernel(batches):
-        # token-hash memo shared across the task: web/templated corpora
-        # repeat tokens heavily (measured df ~94 on the bench corpus),
-        # so the crc32 cost drops from corpus-tokens to ~vocabulary —
-        # values are identical, the cache only removes recomputation
-        crc: dict[str, int] = {}
-        _crc32 = zlib.crc32
-        for pdf in batches:
-            out_ids, out_sigs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if not text:
-                    continue
-                toks = [t for t in text.split(" ") if t]
-                if len(toks) < n:
-                    continue
-                th_list = []
-                for t in toks:
-                    h = crc.get(t)
-                    if h is None:
-                        h = _crc32(t.encode("utf-8"))
-                        crc[t] = h
-                    th_list.append(h)
-                th = np.array(th_list, dtype=np.int64) % MERSENNE_P
-                win = th[: len(th) - n + 1].copy()
-                for j in range(1, n):
-                    win = win * 31 + th[j : len(th) - n + 1 + j]
-                win = np.unique(win % MERSENNE_P)
-                # all k permutation minima in one matrix op (identical
-                # integers to the per-permutation loop)
-                out_ids.append(doc_id)
-                out_sigs.append(
-                    ((a_vec * win[None, :] + b_vec) % MERSENNE_P).min(axis=1)
-                )
-            sig_arr = (
-                np.array(out_sigs, dtype=np.int64)
-                if out_sigs
-                else np.empty((0, k), dtype=np.int64)
-            )
-            data = {"id": out_ids}
-            for i in range(k):
-                data[f"mh{i}"] = sig_arr[:, i]
-            yield pd.DataFrame(data)
-
-    return docs.select(id_col, text_col).mapInPandas(kernel, schema=schema)
-
-
-def shingle_hash_arrays_pandas(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, sh: array<long>) — each doc's distinct shingle-hash set,
-    same crc32 rolling-polynomial values as
-    :func:`minhash_signatures_pandas`. Jaccard over these equals
-    Jaccard over string shingles up to a ~2^-31 collision rate, and
-    long-array intersection is far cheaper than string-array
-    intersection (no per-element UTF8 hashing). Short docs emit an
-    empty array."""
-    import zlib
-
-    import numpy as np
-
-    id_type = docs.schema[id_col].dataType.simpleString()
-    schema = f"id {id_type}, sh array<long>"
-
-    def kernel(batches):
-        # same cross-task token-hash memo as the signature kernel
-        crc: dict[str, int] = {}
-        _crc32 = zlib.crc32
-        for pdf in batches:
-            ids, shs = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in text.split(" ") if t] if text else []
-                if len(toks) < n:
-                    ids.append(doc_id)
-                    shs.append([])
-                    continue
-                th_list = []
-                for t in toks:
-                    h = crc.get(t)
-                    if h is None:
-                        h = _crc32(t.encode("utf-8"))
-                        crc[t] = h
-                    th_list.append(h)
-                th = np.array(th_list, dtype=np.int64) % MERSENNE_P
-                win = th[: len(th) - n + 1].copy()
-                for j in range(1, n):
-                    win = win * 31 + th[j : len(th) - n + 1 + j]
-                ids.append(doc_id)
-                shs.append(np.unique(win % MERSENNE_P).tolist())
-            yield pd.DataFrame({"id": ids, "sh": shs})
-
-    return docs.select(id_col, text_col).mapInPandas(kernel, schema=schema)
+    return rep.groupBy("bi", "bj").applyInPandas(
+        kernel, schema=f"id_a {id_type}, id_b {id_type}, jaccard double"
+    )
 
 
 def lsh_candidate_pairs(
@@ -1020,23 +744,13 @@ def simhash_near_dup_pairs(
     bands: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    use_kernel: bool = False,
 ) -> DataFrame:
-    """Hamming-close SimHash pairs via banded blocking.
-
-    ``use_kernel=True`` computes fingerprints with the vectorized
-    Arrow kernel (production, 64-bit capable); the default expression
-    path keeps the exact DuckDB-oracle twin. Banding/verification is
-    shared either way (:func:`simhash_pairs_from_fingerprints`).
-    """
-    if use_kernel:
-        fp = simhash_fingerprints_pandas(
-            docs, bits=bits, id_col=id_col, text_col=text_col
-        )
-    else:
-        fp = simhash_fingerprints(
-            docs, bits=bits, id_col=id_col, text_col=text_col
-        )
+    """Hamming-close SimHash pairs via banded blocking over the
+    expression fingerprints (:func:`simhash_fingerprints`, the exact
+    DuckDB-oracle twin). For 64-bit production fingerprints compose
+    :func:`simhash_fingerprints_pandas` with
+    :func:`simhash_pairs_from_fingerprints`."""
+    fp = simhash_fingerprints(docs, bits=bits, id_col=id_col, text_col=text_col)
     return simhash_pairs_from_fingerprints(
         fp, max_hamming=max_hamming, bits=bits, bands=bands
     )

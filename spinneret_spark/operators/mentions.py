@@ -64,22 +64,9 @@ def detect_mentions(docs: DataFrame, vocab: DataFrame, text_col: str = "text",
 #: lower than any Python crossing's (measured at sf0.1/5k docs: the
 #: kernel's worker+Arrow floor is ~0.3-0.4 s the codegen plan never
 #: pays); above it the kernel's shuffle-free shape wins (sf1.0/50k:
-#: 2.65 → 1.25 s). Env-overridable, data-adaptive — the same kind of
-#: statistics-driven plan choice AQE makes at runtime.
+#: 2.65 → 1.25 s) — the same kind of statistics-driven plan choice AQE
+#: makes at runtime.
 _KERNEL_MIN_DOCS = 16_000
-
-
-def _use_kernel(docs: DataFrame, impl: str) -> bool:
-    import os
-
-    if impl == "kernel":
-        return True
-    if impl == "join":
-        return False
-    floor = int(
-        os.environ.get("SPINNERET_MENTION_KERNEL_MIN_DOCS", _KERNEL_MIN_DOCS)
-    )
-    return docs.count() >= floor
 
 
 def distinct_mentions(
@@ -87,23 +74,22 @@ def distinct_mentions(
     vocab: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "auto",
 ) -> DataFrame:
     """DISTINCT (id, subject_id, term) mention triples — the fused
     twin of
     ``detect_mentions(...).select(id, subject_id, surface).distinct()``.
 
-    ``impl="auto"`` (default) picks the plan from the corpus size:
-    large corpora take the Arrow kernel (because ``id`` is part of the
-    distinct key, per-document dedup IS the global distinct, so the
-    posexplode, the broadcast join, and the distinct's corpus shuffle
-    all collapse into a per-doc set lookup against the collected
-    vocabulary); small corpora keep the pure-JVM broadcast-join plan,
-    whose fixed cost is lower than any Python crossing's. Results are
-    identical either way (pytest-pinned): label→id is a multimap (two
-    vocabulary rows sharing a label emit two mentions, exactly like
-    the join) and row order is unspecified (bag semantics)."""
-    if _use_kernel(docs, impl):
+    The plan follows the corpus size: from ``_KERNEL_MIN_DOCS`` docs
+    on, the Arrow kernel (because ``id`` is part of the distinct key,
+    per-document dedup IS the global distinct, so the posexplode, the
+    broadcast join, and the distinct's corpus shuffle all collapse
+    into a per-doc set lookup against the collected vocabulary);
+    below, the pure-JVM broadcast-join plan, whose fixed cost is lower
+    than any Python crossing's. Results are identical either way
+    (pytest-pinned): label→id is a multimap (two vocabulary rows
+    sharing a label emit two mentions, exactly like the join) and row
+    order is unspecified (bag semantics)."""
+    if docs.count() >= _KERNEL_MIN_DOCS:
         return _fused_mentions(docs, vocab, text_col, id_col, counts=False)
     return (
         detect_mentions(docs, vocab, text_col=text_col, id_col=id_col)
@@ -117,7 +103,6 @@ def mention_doc_counts(
     vocab: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "auto",
 ) -> DataFrame:
     """(id, subject_id, term, n_occ) — one row per document×mention
     with its occurrence count: the per-doc partial aggregate of
@@ -128,7 +113,7 @@ def mention_doc_counts(
     per token occurrence. Same size-adaptive plan choice as
     :func:`distinct_mentions` (the small-corpus twin aggregates the
     occurrence rows in the JVM; identical results, pytest-pinned)."""
-    if _use_kernel(docs, impl):
+    if docs.count() >= _KERNEL_MIN_DOCS:
         return _fused_mentions(docs, vocab, text_col, id_col, counts=True)
     return (
         detect_mentions(docs, vocab, text_col=text_col, id_col=id_col)
@@ -185,19 +170,10 @@ def _fused_mentions(
                 data["n_occ"] = pd.Series(out_n, dtype="int64")
             yield pd.DataFrame(data)
 
-    # corpora this small arrive as one scan split — spread them over
-    # the cluster first or the kernel runs on a single core; partition
-    # count scales with the corpus (≥~512 docs per Python task) so
-    # small inputs don't pay 64 tasks' worth of worker fixed costs
-    from spinneret_spark.operators.dedup import _kernel_partitions
+    from spinneret_spark.operators.dedup import _spread
 
-    n_parts = _kernel_partitions(
-        docs.count(), docs.sparkSession.sparkContext.defaultParallelism
-    )
-    return (
-        docs.select(id_col, text_col)
-        .repartition(n_parts, F.col(id_col))
-        .mapInPandas(kernel, schema=schema)
+    return _spread(docs, id_col, text_col, docs.count()).mapInPandas(
+        kernel, schema=schema
     )
 
 

@@ -59,39 +59,26 @@ def brute_force_topk(
     vec_col: str = "embedding",
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
-    impl: str = "kernel",
 ) -> DataFrame:
     """Exact top-k by cosine: (q_id, vec_id, rank, cos).
 
     Two-phase top-k, not a Window: Window.partitionBy(q_id) funnels
     all N scored rows of a query through ONE task's sort — a per-query
-    straggler at corpus N (scores are produced map-side by the
-    broadcast cross, so phase one never shuffles raw scores). Exact:
-    global top-k = top-k of per-shard top-k's.
+    straggler at corpus N (scores are produced map-side, so phase one
+    never shuffles raw scores). Exact: global top-k = top-k of
+    per-shard top-k's.
 
-    ``impl="kernel"`` (default) scores with a numpy kernel instead of
-    the interpreted Catalyst HOF fold — bit-identical doubles: the
-    fold is vectorized ACROSS corpus rows but stays strictly
-    sequential over vector dimensions (``acc += prods[:, d]`` for d in
-    order), which is exactly the left-to-right float64 fold the
-    expression path and the DuckDB oracle perform. The query side is
-    collected (queries ≪ corpus by contract — the same smallness the
-    broadcast cross assumes) and shipped in the closure.
-    ``impl="expr"`` keeps the pure-expression twin (pytest-pinned
-    equal)."""
-    if impl == "kernel":
-        scored = _cosine_scores_kernel(
-            embeddings, queries, id_col, vec_col, q_id_col, q_vec_col
-        )
-    else:
-        pairs = embeddings.crossJoin(F.broadcast(queries)).where(
-            F.col(id_col) != F.col(q_id_col)
-        )
-        scored = pairs.select(
-            q_id_col,
-            id_col,
-            cosine(F.col(q_vec_col), F.col(vec_col)).alias("cos"),
-        )
+    Scores come from a numpy kernel instead of the interpreted
+    Catalyst HOF fold — bit-identical doubles: the fold is vectorized
+    ACROSS corpus rows but stays strictly sequential over vector
+    dimensions (``acc += prods[:, d]`` for d in order), which is
+    exactly the left-to-right float64 fold the ``cosine`` expression
+    and the DuckDB oracle perform (the expression scorer is the test
+    reference). The query side is collected (queries ≪ corpus by
+    contract) and shipped in the closure."""
+    scored = _cosine_scores_kernel(
+        embeddings, queries, id_col, vec_col, q_id_col, q_vec_col
+    )
     return _topk_per_query(scored, q_id_col, id_col, k)
 
 

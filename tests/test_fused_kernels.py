@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 def test_distinct_mentions_matches_join_plan(spark):
     from spinneret_spark.operators.mentions import (
+        _fused_mentions,
         detect_mentions,
         distinct_mentions,
     )
@@ -24,8 +25,11 @@ def test_distinct_mentions_matches_join_plan(spark):
     )
     got = sorted(
         tuple(r)
-        for r in distinct_mentions(docs, vocab, impl="kernel").collect()
+        for r in _fused_mentions(
+            docs, vocab, "text", "doc_id", counts=False
+        ).collect()
     )
+    # join plan at 500 docs (below _KERNEL_MIN_DOCS)
     auto = sorted(tuple(r) for r in distinct_mentions(docs, vocab).collect())
     assert auto == want
     assert got == want and got
@@ -33,6 +37,7 @@ def test_distinct_mentions_matches_join_plan(spark):
 
 def test_mention_doc_counts_matches_occurrence_agg(spark):
     from spinneret_spark.operators.mentions import (
+        _fused_mentions,
         detect_mentions,
         mention_doc_counts,
     )
@@ -61,13 +66,15 @@ def test_mention_doc_counts_matches_occurrence_agg(spark):
             .collect()
         )
 
-    got = rollup(mention_doc_counts(docs, vocab, impl="kernel"))
+    got = rollup(_fused_mentions(docs, vocab, "text", "doc_id", counts=True))
     auto = rollup(mention_doc_counts(docs, vocab))  # join impl at 500 docs
     assert got == want and got
     assert auto == want
 
 
 def test_cosine_kernel_bit_identical(spark):
+    from reference_impls import brute_force_topk_expr
+
     from spinneret_spark.operators.similarity import brute_force_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -75,11 +82,11 @@ def test_cosine_kernel_bit_identical(spark):
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     want = sorted(
-        tuple(r) for r in brute_force_topk(emb, queries, k=10, impl="expr").collect()
+        tuple(r) for r in brute_force_topk_expr(emb, queries, k=10).collect()
     )
     got = sorted(
         tuple(r)
-        for r in brute_force_topk(emb, queries, k=10, impl="kernel").collect()
+        for r in brute_force_topk(emb, queries, k=10).collect()
     )
     # cos compared as raw floats: the kernel's fold must be
     # BIT-identical, not approximately equal

@@ -1,6 +1,6 @@
 """The materialization knob: `persist` mode must be a pure strategy
 swap — identical results to the default localCheckpoint mode on every
-path that uses the seam (ngram dedup, LSH, canonicalize, media)."""
+path that uses the seam (LSH, canonicalize, media)."""
 
 from __future__ import annotations
 
@@ -52,18 +52,25 @@ def test_persist_mode_matches_local_end_to_end(
 
 
 def test_persist_mode_matches_local_ngram_pairs(spark, monkeypatch):
-    from spinneret_spark.operators.dedup import ngram_jaccard_pairs
+    """The n-gram dedup queries under ``persist``: LSH candidate pairs
+    over MinHash signatures, whose signature relation is the one they
+    materialize."""
+    from spinneret_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
-    want = sorted(
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(docs, 0.5).select("id_a", "id_b").collect()
-    )
+
+    def pairs():
+        sigs = minhash_signatures(docs)
+        return sorted(
+            tuple(r) for r in lsh_candidate_pairs(sigs, max_bucket=None).collect()
+        )
+
+    want = pairs()
     monkeypatch.setenv("SPINNERET_MATERIALIZE", "persist")
-    got = sorted(
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(docs, 0.5).select("id_a", "id_b").collect()
-    )
+    got = pairs()
     assert got == want and got

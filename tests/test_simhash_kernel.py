@@ -11,6 +11,7 @@ from spinneret_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_fingerprints_pandas,
     simhash_near_dup_pairs,
+    simhash_pairs_from_fingerprints,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -50,14 +51,12 @@ def test_kernel_pairs_match_expression_pairs(spark, docs):
     }
     got = {
         (r["id_a"], r["id_b"])
-        for r in simhash_near_dup_pairs(
-            docs, max_hamming=3, use_kernel=True
+        for r in simhash_pairs_from_fingerprints(
+            simhash_fingerprints_pandas(docs, bits=16), max_hamming=3
         ).collect()
     }
     # md5 vs blake2 token hashes differ, so 16-bit candidate sets may
     # differ — run the kernel in md5-compat mode via fingerprints
-    from spinneret_spark.operators.dedup import simhash_pairs_from_fingerprints
-
     fp = simhash_fingerprints_pandas(docs, bits=16, md5_compat=True).filter(
         F.col("simhash") != 0
     )
