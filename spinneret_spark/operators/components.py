@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spinneret_spark.sinks import tables as sinks
+
 
 def _orient(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Canonical directed edge set: (a, b) with a > b, no self-loops."""
@@ -146,7 +148,8 @@ def _driver_union_find(cur: DataFrame) -> DataFrame:
         if m is None or node < m:
             comp_min[r] = node
     t = cur.schema["a"].dataType.simpleString()
-    return cur.sparkSession.createDataFrame(
+    return sinks.local_frame(
+        cur.sparkSession,
         [(n, comp_min[find(n)]) for n in parent],
         f"node {t}, component {t}",
     )

@@ -295,8 +295,8 @@ def run_extract_phase(
     # meta); the anti-join side rebuilds as a local DataFrame — no
     # second scan, and the broadcast below ships the tiny id list
     done_ids, prior_buckets = sinks.resume_state(spark, out_root, "triples")
-    done = spark.createDataFrame(
-        [(int(p),) for p in sorted(done_ids)], "part_id int"
+    done = sinks.local_frame(
+        spark, [(int(p),) for p in sorted(done_ids)], "part_id int"
     )
     # part_id = pmod(xxhash64(url), buckets): manifest commits are only
     # meaningful under the bucket count that produced them. A recorded
@@ -479,13 +479,7 @@ def run_extract_phase(
     if manifest_rows:
         sinks.append_manifest_multi(spark, out_root, run_id, manifest_rows)
     if new_parts:
-        metrics = spark.createDataFrame(
-            [
-                (p, "extract_link", "rows_out", float(n))
-                for p, n in new_parts
-            ],
-            "part_id int, stage string, metric string, value double",
-        )
+        metrics = [(p, "extract_link", "rows_out", n) for p, n in new_parts]
         sinks.append_lineage(spark, out_root, run_id, "triples", metrics)
     return {
         "run_id": run_id,
@@ -543,8 +537,8 @@ def delete_pages(
     """
     t0 = time.time()
     if isinstance(urls, (list, tuple, set)):
-        urls_df = spark.createDataFrame(
-            [(u,) for u in sorted(urls)], "url string"
+        urls_df = sinks.local_frame(
+            spark, [(u,) for u in sorted(urls)], "url string"
         )
     else:
         urls_df = urls.select("url")
@@ -960,8 +954,10 @@ class _CanonRun:
         return F.pmod(F.xxhash64(col), F.lit(self.plan.buckets)).cast("int")
 
     def parts_of(self, df: DataFrame, *cols: str) -> list[int]:
-        """Sorted distinct partitions the ids in ``cols`` hash to."""
-        p = F.explode(F.array_compact(F.array(*map(self.part_of, cols))))
+        """Sorted distinct partitions the non-null ids in ``cols`` hash
+        to (``xxhash64(null)`` is the seed, so a null is never hashed)."""
+        parts = [F.when(F.col(c).isNotNull(), self.part_of(c)) for c in cols]
+        p = F.explode(F.array_compact(F.array(*parts)))
         return sorted(
             int(r["p"]) for r in df.select(p.alias("p")).distinct().collect()
         )
@@ -1145,7 +1141,8 @@ def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
         )
         return None
     old_assign = ctx.read("canon_assignment")
-    endpoints = spark.createDataFrame(
+    endpoints = sinks.local_frame(
+        spark,
         [(i,) for i in sorted({x for r in edge_rows for x in r})],
         "doc_id string",
     )
@@ -1175,9 +1172,9 @@ def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
             parent[max(ra, rb)] = min(ra, rb)
     comp = {x: find(x) for x in nodes}
     schema = "canonical_id string, new_canonical string"
-    comp_df = spark.createDataFrame(sorted(comp.items()), schema)
-    remap_df = spark.createDataFrame(
-        sorted((k, v) for k, v in comp.items() if k != v), schema
+    comp_df = sinks.local_frame(spark, sorted(comp.items()), schema)
+    remap_df = sinks.local_frame(
+        spark, sorted((k, v) for k, v in comp.items() if k != v), schema
     )
     # ONE filtered scan of the persisted assignment yields the
     # relabeled docs AND the full membership of every touched
@@ -1521,18 +1518,13 @@ def _commit(ctx: _CanonRun, run_id: str, asg, written: dict, emptied: dict):
         # per-partition lineage; the reshingle rows record exactly
         # which parts paid the signature kernel this run
         lineage = [
-            (r["part_id"], f"canonicalize:{r['tbl']}", "rows_out",
-             float(r["n"]))
+            (r["part_id"], f"canonicalize:{r['tbl']}", "rows_out", r["n"])
             for r in rows
         ] + [
             (p, "canonicalize:reshingle", "reshingled", 1.0)
             for p in plan.delta_parts
         ]
-        schema = "part_id int, stage string, metric string, value double"
-        sinks.append_lineage(
-            spark, out_root, run_id, "canonicalize",
-            spark.createDataFrame(lineage, schema),
-        )
+        sinks.append_lineage(spark, out_root, run_id, "canonicalize", lineage)
     totals = {}
     for tbl in CANON_OUTPUTS:
         totals[tbl] = sum(r["n"] for r in rows if r["tbl"] == tbl)
@@ -1852,16 +1844,7 @@ def run_curation_phase(
         (int(r["part_id"]), "curate:write", "rows_out", float(r["n"]))
         for r in parts
     ]
-    sinks.append_lineage(
-        spark,
-        out_root,
-        run_id,
-        "pages_curated",
-        spark.createDataFrame(
-            funnel_rows,
-            "part_id int, stage string, metric string, value double",
-        ),
-    )
+    sinks.append_lineage(spark, out_root, run_id, "pages_curated", funnel_rows)
     return {
         "run_id": run_id,
         "n_in": n_in,
@@ -1984,16 +1967,7 @@ def run_media_phase(
         (int(r["part_id"]), "media:write", "rows_out", float(r["n"]))
         for r in parts
     ]
-    sinks.append_lineage(
-        spark,
-        out_root,
-        run_id,
-        "media_curated",
-        spark.createDataFrame(
-            funnel_rows,
-            "part_id int, stage string, metric string, value double",
-        ),
-    )
+    sinks.append_lineage(spark, out_root, run_id, "media_curated", funnel_rows)
     return {
         "run_id": run_id,
         "n_in": int(n_in),

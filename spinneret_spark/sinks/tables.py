@@ -17,6 +17,12 @@ the layout emulates Iceberg's commit contract on plain parquet:
 * ``_lineage`` records per-partition per-stage metrics
   (rows in/out, timings) — the observability half of the rule.
 
+Every frame built from driver-side rows (manifest and lineage rows,
+resume/broadcast id lists, compose remaps) is an Arrow local relation
+made by :func:`local_frame`: reading it runs no Python-worker task,
+where ``createDataFrame(<list>)`` would parallelize and re-pickle the
+rows in 4 Python tasks per job that reads it.
+
 On a cluster with the Iceberg jar, ``write_partitioned`` swaps for
 ``df.writeTo(table).overwritePartitions()`` behind the same call
 signature; nothing upstream changes.
@@ -27,8 +33,11 @@ from __future__ import annotations
 import datetime
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, TimestampType
 
 MANIFEST_SCHEMA = (
     "run_id string, table_name string, part_id int, status string, "
@@ -39,6 +48,28 @@ LINEAGE_SCHEMA = (
     "run_id string, table_name string, part_id int, stage string, "
     "metric string, value double, recorded_at timestamp"
 )
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl`` column order) as a JVM
+    local relation: the rows cross once as an Arrow table, so
+    ``collect()`` runs no job and a job reading the frame runs no
+    Python task. Values and schema equal ``createDataFrame(rows,
+    ddl)``'s. Timestamps become UTC instants through that path's own
+    ``TimestampType.toInternal`` (naive = Python's local time): a naive
+    Arrow column would instead be re-read in the session time zone,
+    which raises on a wall-clock value in a DST fall-back hour."""
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(schema.fields)
+    arrays = []
+    for f, t, col in zip(schema.fields, arrow.types, cols, strict=True):
+        if isinstance(f.dataType, TimestampType):
+            col = [f.dataType.toInternal(v) for v in col]
+        arrays.append(pa.array(col, type=t))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow), schema
+    )
 
 
 def manifest_path(root: str) -> str:
@@ -145,7 +176,7 @@ def committed_parts(
     try:
         m = spark.read.parquet(path)
     except Exception:
-        return spark.createDataFrame([], "part_id int")
+        return local_frame(spark, [], "part_id int")
     m = m.filter(
         (F.col("table_name") == table_name)
         & (F.col("status").isin(list(statuses)))
@@ -153,7 +184,7 @@ def committed_parts(
     if latest_run_only:
         latest = m.orderBy(F.desc("committed_at")).select("run_id").first()
         if latest is None:
-            return spark.createDataFrame([], "part_id int")
+            return local_frame(spark, [], "part_id int")
         m = m.filter(F.col("run_id") == latest["run_id"])
     return m.select("part_id").distinct()
 
@@ -199,7 +230,7 @@ def append_manifest_multi(
         (run_id, r[0], int(r[1]), r[3] if len(r) > 3 else status, int(r[2]), now)
         for r in rows
     ]
-    spark.createDataFrame(data, MANIFEST_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, data, MANIFEST_SCHEMA).write.mode("append").parquet(
         manifest_path(root)
     )
 
@@ -588,22 +619,16 @@ def append_lineage(
     root: str,
     run_id: str,
     table_name: str,
-    metrics: DataFrame,
+    metrics: list[tuple],
 ) -> None:
-    """metrics: DataFrame(part_id, stage, metric, value)."""
+    """metrics: (part_id, stage, metric, value) rows."""
     now = datetime.datetime.now()
-    (
-        metrics.select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(table_name).alias("table_name"),
-            F.col("part_id").cast("int"),
-            F.col("stage"),
-            F.col("metric"),
-            F.col("value").cast("double"),
-            F.lit(now).alias("recorded_at"),
-        )
-        .write.mode("append")
-        .parquet(lineage_path(root))
+    data = [
+        (run_id, table_name, int(p), stage, metric, float(v), now)
+        for p, stage, metric, v in metrics
+    ]
+    local_frame(spark, data, LINEAGE_SCHEMA).write.mode("append").parquet(
+        lineage_path(root)
     )
 
 
@@ -867,7 +892,7 @@ def compact_manifest(spark: SparkSession, root: str) -> dict:
     if os.path.isdir(tmp):
         _shutil.rmtree(tmp)
     (
-        spark.createDataFrame(data, MANIFEST_SCHEMA)
+        local_frame(spark, data, MANIFEST_SCHEMA)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(tmp)
@@ -942,7 +967,8 @@ def read_committed(
             if latest is not None
             else []
         )
-    parts = spark.createDataFrame(
+    parts = local_frame(
+        spark,
         [(int(p),) for p in sorted({r["part_id"] for r in brows})],
         "part_id int",
     )

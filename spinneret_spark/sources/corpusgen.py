@@ -163,6 +163,10 @@ def generate_pages(
     pages = base.mapInPandas(kernel, schema=PAGES_SCHEMA)
 
     if include_reference_eml and os.path.isdir(_EML_DIR):
+        # imported here: Python workers import this module (for
+        # ``_make_page``) and never need the sinks
+        from spinneret_spark.sinks import tables as sinks
+
         eml_rows = []
         for i, name in enumerate(sorted(os.listdir(_EML_DIR))):
             with open(os.path.join(_EML_DIR, name), "rb") as fh:
@@ -178,7 +182,7 @@ def generate_pages(
                     "en",
                 )
             )
-        eml = spark.createDataFrame(eml_rows, PAGES_SCHEMA)
+        eml = sinks.local_frame(spark, eml_rows, PAGES_SCHEMA)
         pages = pages.unionByName(eml)
     # deliver the corpus in the pipeline's documented layout: bucketed
     # by the url-hash part_id (exactly what write_pages materializes on

@@ -62,8 +62,14 @@ SKOS_PREF_LABEL = "http://www.w3.org/2004/02/skos/core#prefLabel"
 def default_vocab(spark: SparkSession) -> DataFrame:
     """(subject_id, subject_label) dictionary, small enough to
     broadcast everywhere (never shuffles the corpus — SURVEY.md J1)."""
+    # imported here: Python workers import this module (for
+    # DEFAULT_TERMS) and never need the sinks
+    from spinneret_spark.sinks import tables as sinks
+
     rows = [(VOCAB_URI_PREFIX + t, t) for t in DEFAULT_TERMS]
-    return spark.createDataFrame(rows, "subject_id string, subject_label string")
+    return sinks.local_frame(
+        spark, rows, "subject_id string, subject_label string"
+    )
 
 
 def vocab_values_sql() -> str:

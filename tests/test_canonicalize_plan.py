@@ -68,6 +68,23 @@ def _check_plan(stats, path, assignment=None):
     )
 
 
+def test_parts_of_skips_null_ids(spark):
+    """A null id (the ``old_canonical`` of a composed run's new docs)
+    maps to no partition; ``xxhash64(null)`` alone would be the seed 42,
+    i.e. part 42 % buckets."""
+    ctx = object.__new__(pipeline._CanonRun)
+    ctx.plan = SimpleNamespace(buckets=5)
+    df = spark.createDataFrame([("a", None), ("b", "b")], "x string, y string")
+    hashed = df.select(
+        F.pmod(F.xxhash64("x"), F.lit(5)).alias("x"),
+        F.pmod(F.xxhash64("y"), F.lit(5)).alias("y"),
+    ).collect()
+    want = sorted({hashed[0]["x"], hashed[1]["x"], hashed[1]["y"]})
+    assert ctx.parts_of(df, "x", "y") == want
+    assert 42 % 5 not in want  # the null would have added a part
+    assert ctx.parts_of(df.where(F.col("y").isNull()), "y") == []
+
+
 #: parts no base page lands in: the fuzzer's batch appends extract
 #: into them (a batch run skips committed parts by design), and streamed
 #: pages stay out of them, so no batch overwrite can drop a streamed page
