@@ -87,8 +87,9 @@ def distinct_mentions(
     below, the pure-JVM broadcast-join plan, whose fixed cost is lower
     than any Python crossing's. Results are identical either way
     (pytest-pinned): label→id is a multimap (two vocabulary rows
-    sharing a label emit two mentions, exactly like the join) and row
-    order is unspecified (bag semantics)."""
+    sharing a label with different ids emit two mentions, exactly like
+    the join; a duplicated row emits one, as the distinct does) and
+    row order is unspecified (bag semantics)."""
     if docs.count() >= _KERNEL_MIN_DOCS:
         return _fused_mentions(docs, vocab, text_col, id_col, counts=False)
     return (
@@ -130,9 +131,13 @@ def _fused_mentions(
     id_col: str,
     counts: bool,
 ) -> DataFrame:
+    # each id once per label: a duplicated vocabulary row must not
+    # emit (or count) a mention twice
     label_map: dict[str, list[str]] = {}
     for r in vocab.select("subject_label", "subject_id").collect():
-        label_map.setdefault(r["subject_label"], []).append(r["subject_id"])
+        ids = label_map.setdefault(r["subject_label"], [])
+        if r["subject_id"] not in ids:
+            ids.append(r["subject_id"])
     id_type = docs.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, subject_id string, term string"
     if counts:

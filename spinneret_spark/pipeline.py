@@ -31,6 +31,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,6 +71,27 @@ def _partition_ids(out_root: str, table_name: str) -> list[int]:
             except ValueError:
                 pass
     return sorted(out)
+
+
+def _footer_rows(out_root: str, tbl: str, parts=None) -> dict[int, int]:
+    """Rows per ``part_id=`` directory of a table, summed from the
+    parquet footers of its data files (``.``/``_``-prefixed files are
+    skipped, as Spark's listing skips them) — a driver-side metadata
+    read, no Spark job. ``parts=None`` counts every partition on disk;
+    a listed part with no directory is absent from the result."""
+    out = {}
+    for p in _partition_ids(out_root, tbl) if parts is None else parts:
+        d = os.path.join(out_root, tbl, f"part_id={p}")
+        try:
+            names = os.listdir(d)
+        except OSError:
+            continue
+        out[p] = sum(
+            pq.ParquetFile(os.path.join(d, n)).metadata.num_rows
+            for n in names
+            if not n.startswith((".", "_"))
+        )
+    return out
 
 
 def with_part_id(pages: DataFrame, buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -764,20 +786,17 @@ def _run_wave(tasks: list) -> None:
                 fut.result()
 
 
-def _canon_outputs_intact(spark, out_root: str, summary: dict):
+def _canon_outputs_intact(out_root: str, summary: dict):
     """Parquet footer counts of the canonical outputs vs their latest-
-    per-part manifest commits → (counts, intact). Metadata reads only;
-    the integrity probe guarding every reuse of persisted outputs: the
-    zero-change short-circuit (don't certify a crashed overwrite) and
-    the delta path's kept edges and old partitions (don't recycle a
-    partial table a crashed output wave left behind)."""
+    per-part manifest commits → (counts, intact). Metadata reads only
+    (:func:`_footer_rows`, no Spark job); the integrity probe guarding
+    every reuse of persisted outputs: the zero-change short-circuit
+    (don't certify a crashed overwrite) and the delta path's kept
+    edges and old partitions (don't recycle a partial table a crashed
+    output wave left behind)."""
     counts = {}
     for tbl in CANON_OUTPUTS:
-        counts[tbl] = (
-            sinks.read_table(spark, out_root, tbl).count()
-            if _partition_ids(out_root, tbl)
-            else 0
-        )
+        counts[tbl] = sum(_footer_rows(out_root, tbl).values())
         if counts[tbl] != (summary[tbl]["committed_total"] or 0):
             return counts, False
     return counts, True
@@ -855,7 +874,7 @@ def _canon_plan(spark, out_root, jaccard_threshold, buckets, incremental):
     )
     counts, heal_full = {}, False
     if delta_ok and (unchanged or not delta_parts):
-        counts, intact = _canon_outputs_intact(spark, out_root, summary)
+        counts, intact = _canon_outputs_intact(out_root, summary)
         heal_full = not intact
     path, why = next((p, w) for c, p, w in [
         (not parts_on_disk, "empty", "no pages_text partitions on disk"),
@@ -1470,25 +1489,18 @@ def _commit(ctx: _CanonRun, run_id: str, asg, written: dict, emptied: dict):
     _rmtree_parts(out_root, _CANON_STATE, plan.vanished)
     ctx.lap("write_state")
 
-    # ONE job over the just-written tables (tagged union). A partially
+    # footer counts of the just-written partitions, no job. A partially
     # rewritten table counts only its rewritten partitions: untouched
     # ones keep their prior commits, and latest-per-part wins. A zero-
     # row table wrote no files — the listing IS the emptiness check.
-    counted = None
-    for tbl in CANON_OUTPUTS:
-        parts = written[tbl]
-        if not _partition_ids(out_root, tbl) or parts == []:
-            continue
-        g = (
-            ctx.read(tbl, parts)
-            .groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(tbl).alias("tbl"), "part_id", "n")
-        )
-        counted = g if counted is None else counted.unionByName(g)
-    rows = counted.collect() if counted is not None else []
+    rows = [
+        (tbl, p, n)
+        for tbl in CANON_OUTPUTS
+        for p, n in _footer_rows(out_root, tbl, written[tbl]).items()
+        if n
+    ]
     ctx.lap("accounting")
-    commits = [(r["tbl"], r["part_id"], r["n"]) for r in rows]
+    commits = list(rows)
     for tbl in CANON_OUTPUTS:
         if written[tbl] is not None:
             # explicit 0-row commits for partitions the rewrite emptied
@@ -1518,8 +1530,7 @@ def _commit(ctx: _CanonRun, run_id: str, asg, written: dict, emptied: dict):
         # per-partition lineage; the reshingle rows record exactly
         # which parts paid the signature kernel this run
         lineage = [
-            (r["part_id"], f"canonicalize:{r['tbl']}", "rows_out", r["n"])
-            for r in rows
+            (p, f"canonicalize:{tbl}", "rows_out", n) for tbl, p, n in rows
         ] + [
             (p, "canonicalize:reshingle", "reshingled", 1.0)
             for p in plan.delta_parts
@@ -1527,7 +1538,7 @@ def _commit(ctx: _CanonRun, run_id: str, asg, written: dict, emptied: dict):
         sinks.append_lineage(spark, out_root, run_id, "canonicalize", lineage)
     totals = {}
     for tbl in CANON_OUTPUTS:
-        totals[tbl] = sum(r["n"] for r in rows if r["tbl"] == tbl)
+        totals[tbl] = sum(n for t, _, n in rows if t == tbl)
         if written[tbl] is not None:
             totals[tbl] += sum(
                 n

@@ -17,11 +17,17 @@ the layout emulates Iceberg's commit contract on plain parquet:
 * ``_lineage`` records per-partition per-stage metrics
   (rows in/out, timings) — the observability half of the rule.
 
-Every frame built from driver-side rows (manifest and lineage rows,
-resume/broadcast id lists, compose remaps) is an Arrow local relation
-made by :func:`local_frame`: reading it runs no Python-worker task,
-where ``createDataFrame(<list>)`` would parallelize and re-pickle the
-rows in 4 Python tasks per job that reads it.
+The manifest and lineage are a driver-side metadata plane, as
+Iceberg's manifests are: :func:`manifest_rows` reads the manifest with
+pyarrow, every other manifest question is a pure function of those
+rows, and appends write one parquet file with pyarrow under a
+dot-prefixed temp name, then rename it into place (:func:`_write_rows`)
+— no commit-protocol question or append runs a Spark job. The files
+stay plain parquet that Spark reads as one table alongside files
+Spark itself wrote. Frames that must join data (the
+:func:`read_committed` parts broadcast, the compose remaps) are Arrow
+local relations made by :func:`local_frame`: reading one runs no
+Python-worker task.
 
 On a cluster with the Iceberg jar, ``write_partitioned`` swaps for
 ``df.writeTo(table).overwritePartitions()`` behind the same call
@@ -31,9 +37,13 @@ signature; nothing upstream changes.
 from __future__ import annotations
 
 import datetime
+import functools
 import os
+import uuid
 
 import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -50,26 +60,52 @@ LINEAGE_SCHEMA = (
 )
 
 
-def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
-    """Driver-side ``rows`` (tuples in ``ddl`` column order) as a JVM
-    local relation: the rows cross once as an Arrow table, so
-    ``collect()`` runs no job and a job reading the frame runs no
-    Python task. Values and schema equal ``createDataFrame(rows,
-    ddl)``'s. Timestamps become UTC instants through that path's own
-    ``TimestampType.toInternal`` (naive = Python's local time): a naive
-    Arrow column would instead be re-read in the session time zone,
-    which raises on a wall-clock value in a DST fall-back hour."""
+@functools.cache
+def _schemas(ddl: str) -> tuple[StructType, pa.Schema]:
+    """The Spark and Arrow schemas of a DDL string (Arrow timestamps
+    are UTC instants), parsed once per DDL."""
     schema = StructType.fromDDL(ddl)
-    arrow = to_arrow_schema(schema)
+    return schema, to_arrow_schema(schema)
+
+
+def _arrow_table(rows, ddl: str) -> pa.Table:
+    """Driver-side ``rows`` (tuples in ``ddl`` column order) as an
+    Arrow table typed from the DDL. Timestamps become UTC instants
+    through ``TimestampType.toInternal``, the list path's own
+    conversion (naive = Python's local time, aware = its instant)."""
+    schema, arrow = _schemas(ddl)
     cols = list(zip(*rows, strict=True)) or [()] * len(schema.fields)
     arrays = []
     for f, t, col in zip(schema.fields, arrow.types, cols, strict=True):
         if isinstance(f.dataType, TimestampType):
             col = [f.dataType.toInternal(v) for v in col]
         arrays.append(pa.array(col, type=t))
-    return spark.createDataFrame(
-        pa.Table.from_arrays(arrays, schema=arrow), schema
-    )
+    return pa.Table.from_arrays(arrays, schema=arrow)
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl`` column order) as a JVM
+    local relation: the rows cross once as an Arrow table, so
+    ``collect()`` runs no job and a job reading the frame runs no
+    Python task. Values and schema equal ``createDataFrame(rows,
+    ddl)``'s. Timestamps are passed as UTC instants: a naive Arrow
+    column would instead be re-read in the session time zone, which
+    raises on a wall-clock value in a DST fall-back hour."""
+    return spark.createDataFrame(_arrow_table(rows, ddl), _schemas(ddl)[0])
+
+
+def _write_rows(path: str, rows, ddl: str) -> None:
+    """Append ``rows`` to the parquet table directory ``path`` as ONE
+    file, atomically: pyarrow writes it under a dot-prefixed temp name
+    (skipped by Spark's listing and by :func:`manifest_rows`), then
+    ``os.replace`` gives it its final ``part-`` name. A crash leaves at
+    most an invisible temp file. Timestamps are stored as
+    ``timestamp[us, tz=UTC]``."""
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(_arrow_table(rows, ddl), tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def manifest_path(root: str) -> str:
@@ -172,21 +208,23 @@ def committed_parts(
     WITHOUT tricking a later batch run into skipping unprocessed pages
     in those parts (the round-2 interleave data-loss bug).
     """
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return local_frame(spark, [], "part_id int")
-    m = m.filter(
-        (F.col("table_name") == table_name)
-        & (F.col("status").isin(list(statuses)))
+    parts = committed_parts_from_rows(
+        manifest_rows(spark, root, [table_name]), statuses, latest_run_only
     )
-    if latest_run_only:
-        latest = m.orderBy(F.desc("committed_at")).select("run_id").first()
-        if latest is None:
-            return local_frame(spark, [], "part_id int")
-        m = m.filter(F.col("run_id") == latest["run_id"])
-    return m.select("part_id").distinct()
+    return local_frame(spark, [(p,) for p in parts], "part_id int")
+
+
+def committed_parts_from_rows(
+    rows: list, statuses, latest_run_only: bool = False
+) -> list[int]:
+    """:func:`committed_parts` over already-read manifest rows of one
+    table, as sorted part ids. The latest run is the max
+    ``(committed_at, run_id)`` — the order every reader uses."""
+    rows = [r for r in rows if r["status"] in statuses]
+    if latest_run_only and rows:
+        latest = max(rows, key=lambda r: (r["committed_at"], r["run_id"]))
+        rows = [r for r in rows if r["run_id"] == latest["run_id"]]
+    return sorted({r["part_id"] for r in rows})
 
 
 def append_manifest(
@@ -219,20 +257,17 @@ def append_manifest_multi(
     status: str = "committed",
 ) -> None:
     """Commit (table_name, part_id, rows_out) rows for SEVERAL tables
-    in one manifest write — one job instead of one per table (the
-    canonicalize phase commits three tables back-to-back, and at
-    two-digit-second phase budgets three serial driver round-trips
-    are measurable). Rows may carry a fourth element to override
+    in one manifest file (the canonicalize phase commits three tables
+    back-to-back, and every commit must be one atomic rename so no
+    reader sees half of it). Rows may carry a fourth element to override
     ``status`` per row (streaming mixes per-part ``"streamed"`` rows
     with its batch marker in one write)."""
-    now = datetime.datetime.now()
+    now = datetime.datetime.now(datetime.timezone.utc)
     data = [
         (run_id, r[0], int(r[1]), r[3] if len(r) > 3 else status, int(r[2]), now)
         for r in rows
     ]
-    local_frame(spark, data, MANIFEST_SCHEMA).write.mode("append").parquet(
-        manifest_path(root)
-    )
+    _write_rows(manifest_path(root), data, MANIFEST_SCHEMA)
 
 
 #: status of the one-row-per-micro-batch marker that makes streaming
@@ -378,42 +413,16 @@ def manifest_run_exists(
     spark: SparkSession, root: str, run_id: str, table_name: str
 ) -> bool:
     """True iff ``run_id`` already wrote its batch marker for the table
-    — the streaming replay check. Cheap: the manifest is a small
-    driver-side table (one row per part per run)."""
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return False
-    return bool(
-        m.filter(
-            (F.col("run_id") == run_id)
-            & (F.col("table_name") == table_name)
-            & (F.col("status") == BATCH_MARKER)
-        ).head(1)
-    )
+    — the streaming replay check."""
+    return run_id in stream_marker_runs(spark, root, table_name)
 
 
 def resume_state(
     spark: SparkSession, root: str, table_name: str
 ) -> tuple[set[int], set[int]]:
     """(committed part ids, recorded bucket counts) in ONE manifest
-    read — the resume hot path runs zero corpus jobs and should pay
-    for exactly one driver round-trip on the (small) manifest."""
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return set(), set()
-    rows = (
-        m.filter(
-            (F.col("table_name") == table_name)
-            & (F.col("status").isin(["committed", BUCKETS_META]))
-        )
-        .select("part_id", "status")
-        .distinct()
-        .collect()
-    )
+    read — the resume hot path runs zero Spark jobs."""
+    rows = manifest_rows(spark, root, [table_name])
     done = {r["part_id"] for r in rows if r["status"] == "committed"}
     buckets = {r["part_id"] for r in rows if r["status"] == BUCKETS_META}
     return done, buckets
@@ -430,22 +439,9 @@ def committed_row_total(
     number the commit protocol already wrote down is a whole extra
     job bought for nothing. For streamed totals see
     :func:`manifest_summary` (and its mixed-root caveat)."""
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return None
-    agg = (
-        m.filter(
-            (F.col("table_name") == table_name)
-            & (F.col("status") == "committed")
-        )
-        .groupBy("part_id")
-        .agg(F.max_by("rows_out", "committed_at").alias("n"))
-        .agg(F.sum("n").alias("total"))
-        .first()
-    )
-    return None if agg is None or agg["total"] is None else int(agg["total"])
+    return manifest_summary(spark, root, [table_name])[table_name][
+        "committed_total"
+    ]
 
 
 def stream_marker_runs(
@@ -456,47 +452,16 @@ def stream_marker_runs(
     A marker names the attempt whose data append completed; attempts
     that crashed pre-marker are never named, which is what lets
     :func:`read_streamed_consistent` hide their orphan rows."""
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return set()
-    rows = (
-        m.filter(
-            (F.col("table_name") == table_name)
-            & (F.col("status") == BATCH_MARKER)
-        )
-        .select("run_id")
-        .distinct()
-        .collect()
-    )
-    return {r["run_id"] for r in rows}
+    return stream_marker_map(spark, root, [table_name])[table_name]
 
 
 def stream_marker_map(
     spark: SparkSession, root: str, table_names: list[str]
 ) -> dict[str, set[str]]:
     """``stream_marker_runs`` for SEVERAL tables in ONE manifest read —
-    the extract-phase guard needs both tables' marker sets and should
-    not pay one driver round-trip per table."""
-    out: dict[str, set[str]] = {t: set() for t in table_names}
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return out
-    rows = (
-        m.filter(
-            F.col("table_name").isin(table_names)
-            & (F.col("status") == BATCH_MARKER)
-        )
-        .select("table_name", "run_id")
-        .distinct()
-        .collect()
-    )
-    for r in rows:
-        out[r["table_name"]].add(r["run_id"])
-    return out
+    the extract-phase guard needs both tables' marker sets."""
+    summ = manifest_summary(spark, root, table_names)
+    return {t: summ[t]["markers"] for t in table_names}
 
 
 def manifest_summary(
@@ -597,21 +562,7 @@ def recorded_buckets(
     are only meaningful under the bucket count that produced them, so
     resume logic must refuse to reuse commits recorded under a
     different count (the round-2 short-circuit hole)."""
-    path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return set()
-    rows = (
-        m.filter(
-            (F.col("table_name") == table_name)
-            & (F.col("status") == BUCKETS_META)
-        )
-        .select("part_id")
-        .distinct()
-        .collect()
-    )
-    return {r["part_id"] for r in rows}
+    return resume_state(spark, root, table_name)[1]
 
 
 def append_lineage(
@@ -622,14 +573,12 @@ def append_lineage(
     metrics: list[tuple],
 ) -> None:
     """metrics: (part_id, stage, metric, value) rows."""
-    now = datetime.datetime.now()
+    now = datetime.datetime.now(datetime.timezone.utc)
     data = [
         (run_id, table_name, int(p), stage, metric, float(v), now)
         for p, stage, metric, v in metrics
     ]
-    local_frame(spark, data, LINEAGE_SCHEMA).write.mode("append").parquet(
-        lineage_path(root)
-    )
+    _write_rows(lineage_path(root), data, LINEAGE_SCHEMA)
 
 
 def vacuum_streamed(
@@ -721,7 +670,7 @@ def read_durable(
     (which hides uncommitted batch parts) but still orphan-free. On a
     never-streamed root it is a plain parquet read — no schema merge,
     no filter. Pass ``markers`` (and ``evidence``) when the caller
-    already read them (one manifest round-trip instead of two)."""
+    already read them (one manifest read instead of two)."""
     return read_durable_tagged(spark, root, table_name, markers, evidence)[0]
 
 
@@ -775,8 +724,8 @@ def compact_manifest(spark: SparkSession, root: str) -> dict:
     emulation (round-4 VERDICT item 4).
 
     The manifest grows one file per commit batch and one row per part
-    per run; every reader collects it whole, so after ~10³ runs at
-    ~10² parts the driver pays 10⁵-row collects and the directory
+    per run; every reader reads it whole, so after ~10³ runs at
+    ~10² parts the driver reads 10⁵ rows per question and the directory
     holds thousands of tiny files. Compaction keeps exactly the rows
     any visibility decision can still depend on:
 
@@ -814,16 +763,14 @@ def compact_manifest(spark: SparkSession, root: str) -> dict:
             os.rename(old, path)  # crashed between the two renames
         else:
             _shutil.rmtree(old)  # crashed before cleanup
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
+    rows = manifest_rows(spark, root)
+    if not rows:
         return {
             "rows_before": 0,
             "rows_after": 0,
             "files_before": 0,
             "files_after": 0,
         }
-    rows = m.collect()
     files_before = len(_glob.glob(os.path.join(path, "*.parquet")))
 
     known = {"committed", "streamed", BATCH_MARKER, STREAM_INTENT,
@@ -891,12 +838,7 @@ def compact_manifest(spark: SparkSession, root: str) -> dict:
     tmp = path + "__compact_tmp"
     if os.path.isdir(tmp):
         _shutil.rmtree(tmp)
-    (
-        local_frame(spark, data, MANIFEST_SCHEMA)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
+    _write_rows(tmp, data, MANIFEST_SCHEMA)
     os.rename(path, old)
     os.rename(tmp, path)
     _shutil.rmtree(old)
@@ -908,24 +850,36 @@ def compact_manifest(spark: SparkSession, root: str) -> dict:
     }
 
 
+#: Spark-written manifest files hold ``committed_at`` as INT96: read
+#: as naive UTC microseconds, then cast to the schema's UTC instant
+_PARQUET = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
+
+
 def manifest_rows(
-    spark: SparkSession, root: str, table_names: list[str]
-) -> list:
-    """All manifest rows of SEVERAL tables, ONE driver round-trip. The
-    manifest is small (one row per part per run) — every visibility
-    and change-detection decision derives from such a collect instead
-    of one manifest job per question (the ``*_from_rows`` helpers)."""
+    spark: SparkSession, root: str, table_names: list[str] | None = None
+) -> list[dict]:
+    """Manifest rows (dicts) of SEVERAL tables — all tables when
+    ``table_names`` is None — read on the driver with pyarrow, no Spark
+    job. Files whose names start with ``.`` or ``_`` (in-flight temp
+    files, ``_SUCCESS``) are skipped, as Spark's listing skips them.
+    ``committed_at`` is a UTC-aware instant, so the latest-commit order
+    is the real commit order whatever the process time zone and
+    whichever writer made the file. The manifest is small (one row per
+    part per run) — every visibility and change-detection decision
+    derives from these rows (the ``*_from_rows`` helpers)."""
     path = manifest_path(root)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
+    if not os.path.isdir(path):
         return []
-    return (
-        m.filter(F.col("table_name").isin(list(table_names)))
-        .select("run_id", "table_name", "part_id", "status", "rows_out",
-                "committed_at")
-        .collect()
+    schema = _schemas(MANIFEST_SCHEMA)[1]
+    data = ds.dataset(path, schema=schema, format=_PARQUET)
+    flt = (
+        None
+        if table_names is None
+        else ds.field("table_name").isin(list(table_names))
     )
+    return data.to_table(filter=flt).to_pylist()
 
 
 def read_committed(
@@ -959,19 +913,8 @@ def read_committed(
     :func:`committed_parts`."""
     rows = manifest_rows(spark, root, [table_name])
     batch_statuses = [s for s in statuses if s != "streamed"]
-    brows = [r for r in rows if r["status"] in batch_statuses]
-    if latest_run_only:
-        latest = max(brows, key=lambda r: r["committed_at"], default=None)
-        brows = (
-            [r for r in brows if r["run_id"] == latest["run_id"]]
-            if latest is not None
-            else []
-        )
-    parts = local_frame(
-        spark,
-        [(int(p),) for p in sorted({r["part_id"] for r in brows})],
-        "part_id int",
-    )
+    part_ids = committed_parts_from_rows(rows, batch_statuses, latest_run_only)
+    parts = local_frame(spark, [(p,) for p in part_ids], "part_id int")
     markers = sorted(
         {r["run_id"] for r in rows if r["status"] == BATCH_MARKER}
     )

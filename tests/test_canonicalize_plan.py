@@ -279,3 +279,30 @@ def test_crash_delta_sequence_matches_scratch(
     root = _copy(base, tmp_path_factory, f"canon_fuzz_{seed}")
     kinds, crashed = _fuzz_sequence(spark, base, root, monkeypatch, seed)
     assert len(kinds) == STEPS and crashed
+
+
+def test_crash_hook_wraps_the_manifest_append(
+    spark, base, tmp_path_factory, monkeypatch
+):
+    """The fuzzer's hooks still wrap the (pyarrow) manifest append: a
+    crash at the phase's last commit point leaves every output written
+    but no manifest row of the run, and the rerun heals to the outputs
+    of the uninterrupted run."""
+    roots = [_copy(base, tmp_path_factory, f"canon_hook{i}") for i in (0, 1)]
+    for root in roots:
+        process_micro_batch(
+            base.frame(base.free[:6]), 0, root, "s1", buckets=BUCKETS
+        )
+    counter = _CrashAt(monkeypatch, 0)  # counts, never fires
+    pipeline.run_canonicalize_phase(spark, roots[0], "c1", buckets=BUCKETS)
+    monkeypatch.undo()
+    want = _outputs(spark, roots[0])
+
+    _CrashAt(monkeypatch, counter.n)
+    with pytest.raises(_Crash):
+        pipeline.run_canonicalize_phase(spark, roots[1], "c1", buckets=BUCKETS)
+    monkeypatch.undo()
+    assert _outputs(spark, roots[1]) == want
+    assert all(r["run_id"] != "c1" for r in sinks.manifest_rows(spark, roots[1]))
+    pipeline.run_canonicalize_phase(spark, roots[1], "c1h", buckets=BUCKETS)
+    assert _outputs(spark, roots[1]) == want

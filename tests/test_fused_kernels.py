@@ -72,6 +72,45 @@ def test_mention_doc_counts_matches_occurrence_agg(spark):
     assert auto == want
 
 
+def test_fused_mentions_count_a_duplicated_vocab_row_once(spark):
+    """A vocabulary row listed twice must not emit a mention twice
+    (the join plan's ``.distinct()`` removes that duplicate) nor count
+    its occurrences twice."""
+    from conftest import TESTDATA_SF
+
+    from spinneret_spark.operators.mentions import _fused_mentions, detect_mentions
+    from spinneret_spark.sources.vocab import default_vocab
+
+    docs = spark.read.parquet(f"{TESTDATA_SF}/documents.parquet")
+    vocab = default_vocab(spark).distinct()
+    dup = vocab.unionByName(vocab)
+    term = F.col("surface").alias("term")
+    want = sorted(
+        tuple(r)
+        for r in detect_mentions(docs, dup)
+        .select("doc_id", "subject_id", term)
+        .distinct()
+        .collect()
+    )
+    got = sorted(
+        tuple(r)
+        for r in _fused_mentions(docs, dup, "text", "doc_id", counts=False).collect()
+    )
+    assert got == want and got
+    true_counts = sorted(
+        tuple(r)
+        for r in detect_mentions(docs, vocab)
+        .groupBy("doc_id", "subject_id", term)
+        .agg(F.count(F.lit(1)).alias("n_occ"))
+        .collect()
+    )
+    counted = sorted(
+        tuple(r)
+        for r in _fused_mentions(docs, dup, "text", "doc_id", counts=True).collect()
+    )
+    assert counted == true_counts
+
+
 def test_cosine_kernel_bit_identical(spark):
     from reference_impls import brute_force_topk_expr
 
