@@ -29,7 +29,6 @@ twin id (SURVEY.md §1.2).
 from __future__ import annotations
 
 import io
-import re
 import xml.etree.ElementTree as ET
 
 # Column order of the reference workbook, minus the nondeterministic
@@ -87,64 +86,23 @@ def _ns_uri(tag: str) -> str | None:
     return None
 
 
-#: xmlns declarations in raw bytes — the prefix map lxml's getpath
-#: would print. Scanning bytes instead of driving iterparse's Python
-#: event loop halves parse cost (the C parser itself is reused via
-#: fromstring); declarations appear in document order exactly like
-#: start-ns events. Known limit (documented): a literal xmlns= inside
-#: a comment/CDATA section would be picked up too — absent from EML
-#: and from every fixture this repo checks against.
-_XMLNS_RE = re.compile(
-    rb"xmlns(?::([A-Za-z_][\w.\-]*))?\s*=\s*(?:\"([^\"]*)\"|'([^']*)')"
-)
-
-
-def _parse_with_ns(xml_bytes: bytes):
-    """Parse XML and collect the document's prefix→uri declarations.
-
-    Returns (root, parent_map, uri→prefix map); first declaration per
-    URI wins (matches lxml's doc-order choice).
-    """
-    root = ET.fromstring(xml_bytes)
-    if root is None:  # pragma: no cover - fromstring raises instead
-        raise ValueError("empty XML document")
+def _parse_ns(xml_bytes: bytes):
+    """Parse XML once: (root, uri→prefix map of the document's
+    namespace declarations) — the prefix map lxml's getpath would
+    print. Declarations come from the parser's own ``start-ns`` events,
+    so an ``xmlns=`` inside an attribute value, element text, a
+    comment or the DOCTYPE is never one, and character references in
+    a URI are decoded. The first prefix declared per URI wins (lxml's
+    document-order choice). Raises ``ET.ParseError`` on malformed
+    input."""
+    events = ET.iterparse(io.BytesIO(xml_bytes), events=("start-ns",))
     ns_map: dict[str, str] = {}
     seen_uris: set[str] = set()
-    for m in _XMLNS_RE.finditer(xml_bytes):
-        prefix = (m.group(1) or b"").decode("utf-8", "replace")
-        uri_b = m.group(2) if m.group(2) is not None else m.group(3)
-        uri = uri_b.decode("utf-8", "replace")
+    for _, (prefix, uri) in events:
         if uri not in seen_uris:
             seen_uris.add(uri)
             ns_map[prefix] = uri
-    uri_to_prefix = {uri: prefix for prefix, uri in ns_map.items() if prefix}
-    parent_map = {child: parent for parent in root.iter() for child in parent}
-    return root, parent_map, uri_to_prefix
-
-
-def _path_segment(elem, parent, uri_to_prefix) -> str:
-    """One getpath segment: ``prefix:local`` or ``local``, with a
-    1-based index iff the parent has >1 same-tag children."""
-    local = _local(elem.tag)
-    uri = _ns_uri(elem.tag)
-    name = f"{uri_to_prefix[uri]}:{local}" if uri and uri in uri_to_prefix else local
-    if parent is None:
-        return name
-    same = [c for c in parent if c.tag == elem.tag]
-    if len(same) > 1:
-        return f"{name}[{same.index(elem) + 1}]"
-    return name
-
-
-def _getpath(elem, parent_map, uri_to_prefix) -> str:
-    """lxml ``ElementTree.getpath`` equivalent (indexed absolute path)."""
-    segments = []
-    node = elem
-    while node is not None:
-        parent = parent_map.get(node)
-        segments.append(_path_segment(node, parent, uri_to_prefix))
-        node = parent
-    return "/" + "/".join(reversed(segments))
+    return events.root, {uri: p for p, uri in ns_map.items() if p}
 
 
 def _findtext_descendant(elem, local_tag: str) -> str | None:
@@ -202,23 +160,13 @@ def extract_workbook_columns(
     if isinstance(xml_bytes, str):
         xml_bytes = xml_bytes.encode("utf-8")
     try:
-        root = ET.fromstring(xml_bytes)
+        root, uri_to_prefix = _parse_ns(xml_bytes)
     except ET.ParseError:
         return nothing
     pkg = root.get("packageId")
     if pkg is None:
         return nothing
     url = base_url + pkg  # workbook.py:122
-    ns_map: dict[str, str] = {}
-    seen_uris: set[str] = set()
-    for m in _XMLNS_RE.finditer(xml_bytes):
-        prefix = (m.group(1) or b"").decode("utf-8", "replace")
-        uri_b = m.group(2) if m.group(2) is not None else m.group(3)
-        uri = uri_b.decode("utf-8", "replace")
-        if uri not in seen_uris:
-            seen_uris.add(uri)
-            ns_map[prefix] = uri
-    uri_to_prefix = {uri: p for p, uri in ns_map.items() if p}
 
     # one walk: parent links + document-order hits per element kind
     wanted = set(elements)

@@ -129,105 +129,34 @@ def fill_text(pages: DataFrame) -> DataFrame:
     return present.unionByName(missing)
 
 
-_MENTION_ROWS_SCHEMA = (
-    "part_id int, url string, lang string, norm string"
-)
-
-
-def _fused_extract_detect(
-    pages: DataFrame, terms: list[str], assume_text: bool | None = None
-) -> DataFrame:
-    """U1+U2 fused: HTML→text + dictionary mention scan in ONE
-    mapInPandas (one Arrow crossing for the whole hot path —
-    SURVEY.md §3.1). The flatMap (one page → N mentions) happens
-    inside the kernel, so no explode/Generate node is needed either.
-    DictMatcher keeps per-token cost dictionary-size-independent
-    (operators/mentions.py).
-
-    Mentions are deduped PER PAGE inside the kernel: a page's
-    occurrences all live in its own input row, so document-level
-    distinctness never needs a cluster-wide shuffle — this is the
-    difference between shuffling every occurrence (~40/page) and
-    shuffling nothing. Offset-level mentions come from
-    operators.mentions.detect_mentions_trie when needed.
-    """
-    from spinneret_spark.operators.mentions import DictMatcher
-
-    # html is the fat column; ship it through Arrow only when some row
-    # may need extraction. ``assume_text=True`` is MANIFEST-LEVEL
-    # state, not a data probe: run_extract_phase reads the just-
-    # written pages_text table, whose rows are filled by construction
-    # — the caller asserts it instead of paying a corpus scan to
-    # discover it. ``assume_text=None`` (direct callers) falls back to
-    # a limit-1 probe.
-    if assume_text is None:
-        assume_text = "html" not in pages.columns or (
-            pages.where(F.col("text").isNull() | (F.col("text") == ""))
-            .limit(1)
-            .count()
-            == 0
-        )
-    need_html = "html" in pages.columns and not assume_text
-    cols = ["part_id", "url", "lang", "text"] + (["html"] if need_html else [])
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = DictMatcher(terms)  # built once per worker
-        for pdf in batches:
-            htmls = pdf["html"] if need_html else pdf["url"]  # dummy align
-            parts, urls, langs, norms = [], [], [], []
-            for part, url, lang, text, html in zip(
-                pdf["part_id"], pdf["url"], pdf["lang"], pdf["text"], htmls
-            ):
-                if not text:
-                    text = (
-                        extract_text(bytes(html))
-                        if need_html and html is not None
-                        else ""
-                    )
-                for norm in sorted(matcher.find_norms(text)):
-                    parts.append(part)
-                    urls.append(url)
-                    langs.append(lang)
-                    norms.append(norm)
-            yield pd.DataFrame(
-                {
-                    "part_id": pd.array(parts, dtype="int32"),
-                    "url": urls,
-                    "lang": langs,
-                    "norm": norms,
-                }
-            )
-
-    return pages.select(*cols).mapInPandas(kernel, schema=_MENTION_ROWS_SCHEMA)
-
-
 _PAGES_TEXT_SCHEMA = (
     "part_id int, url string, lang string, text string, norms array<string>"
 )
 
 
 def _fused_extract_detect_full(
-    pages: DataFrame, terms: list[str], assume_text: bool | None = None
+    pages: DataFrame, terms: list[str]
 ) -> DataFrame:
     """The ONE-crossing phase kernel: html → (text, sorted distinct
-    norms) per page, one output row per page.
+    norms) per page, one output row per page (SURVEY.md §3.1).
 
     This is the shape that lets the extract phase materialize BOTH the
     pages_text table and (after a JVM-side explode) the triples table
     from a single Python pass — the round-1 layout shipped text
     through Arrow twice (extract out, detect in), doubling the
-    Python-bound bytes of the dominant stage.
+    Python-bound bytes of the dominant stage. DictMatcher keeps
+    per-token cost dictionary-size-independent (operators/mentions.py).
     """
     from spinneret_spark.operators.mentions import DictMatcher
 
-    if assume_text is None:
-        assume_text = "html" not in pages.columns or (
-            pages.where(F.col("text").isNull() | (F.col("text") == ""))
-            .limit(1)
-            .count()
-            == 0
-        )
-    need_html = "html" in pages.columns and not assume_text
+    # html is the fat column: ship it through Arrow only when a
+    # limit-1 probe finds a row that needs extraction
+    need_html = "html" in pages.columns and (
+        pages.where(F.col("text").isNull() | (F.col("text") == ""))
+        .limit(1)
+        .count()
+        > 0
+    )
     cols = ["part_id", "url", "lang", "text"] + (["html"] if need_html else [])
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -257,9 +186,15 @@ def _fused_extract_detect_full(
     return pages.select(*cols).mapInPandas(kernel, schema=_PAGES_TEXT_SCHEMA)
 
 
-def _triples_projection(m: DataFrame) -> DataFrame:
-    """(part_id, url, lang, norm) mention rows → triple rows with
-    deterministic ids. Pure built-ins — never crosses into Python."""
+def _triples_projection(pages: DataFrame) -> DataFrame:
+    """pages_text rows (part_id, url, lang, norms) → one triple row per
+    norm, with deterministic ids. Pure built-ins (an explode and a
+    projection) — never crosses into Python. Rows are distinct by
+    (subj, obj) because a subj IS its page's url and the kernel dedups
+    norms per page."""
+    m = pages.select(
+        "part_id", "url", "lang", F.explode("norms").alias("norm")
+    )
     subj = F.col("url")
     return m.select(
         "part_id",
@@ -275,23 +210,21 @@ def _triples_projection(m: DataFrame) -> DataFrame:
 
 
 def pages_to_triples(
-    pages: DataFrame,
-    terms: list[str] | None = None,
-    assume_text: bool | None = None,
+    pages: DataFrame, terms: list[str] | None = None
 ) -> DataFrame:
-    """extract+detect (fused, one Python crossing) → link → emit.
+    """extract+detect (fused, one Python crossing) → link → emit: the
+    triples :func:`run_extract_phase` writes, without the pages_text
+    table in between.
 
     Expects ``part_id`` present (``with_part_id``); ``text`` may be
     empty/null — the fused kernel extracts from html on the fly.
-    No shuffle anywhere in this plan: per-page dedup happens in the
-    kernel, and rows are already distinct by (subj, obj) because a
-    subj IS its page's url.
+    No shuffle anywhere in this plan.
     """
-    terms = terms or DEFAULT_TERMS
-    m = _fused_extract_detect(pages, terms, assume_text)
     # dictionary ids resolve by construction (terms ⊂ vocab); a real
     # vocabulary joins here instead (linking.link_mentions)
-    return _triples_projection(m)
+    return _triples_projection(
+        _fused_extract_detect_full(pages, terms or DEFAULT_TERMS)
+    )
 
 
 def run_extract_phase(
@@ -320,17 +253,9 @@ def run_extract_phase(
     done = sinks.local_frame(
         spark, [(int(p),) for p in sorted(done_ids)], "part_id int"
     )
-    # part_id = pmod(xxhash64(url), buckets): manifest commits are only
-    # meaningful under the bucket count that produced them. A recorded
-    # mismatch means every resume decision below would be wrong — fail
-    # loudly instead of silently skipping unprocessed pages.
-    if prior_buckets and prior_buckets != {buckets}:
-        raise ValueError(
-            f"manifest at {out_root} was committed with "
-            f"buckets={sorted(prior_buckets)}; this run uses "
-            f"buckets={buckets} — part_id mappings differ; rerun with "
-            "the original bucket count or start a fresh out_root"
-        )
+    # a recorded mismatch means every resume decision below would be
+    # wrong — fail loudly instead of silently skipping unprocessed pages
+    sinks.check_buckets(prior_buckets, buckets, out_root, "triples")
     if len(done_ids) >= buckets and prior_buckets == {buckets}:
         # manifest-level short-circuit: part_id can only take `buckets`
         # values, every one is committed, AND the recorded bucket count
@@ -365,15 +290,11 @@ def run_extract_phase(
         deletes every streamed file, the append-only markers outlive
         the tag COLUMN itself, and an unguarded column reference would
         brick every future batch run (round-4 review)."""
-        if not (marker_set and _partition_ids(out_root, tbl)):
-            return None
-        data = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(out_root, tbl)
-        )
-        if "_batch_run" not in data.columns:
+        read = sinks.read_tagged(spark, out_root, tbl) if marker_set else None
+        if read is None or not read[1]:
             return None
         return (
-            data.where(F.col("_batch_run").isin(sorted(marker_set)))
+            read[0].where(F.col("_batch_run").isin(sorted(marker_set)))
             .select("part_id", F.col(url_col).alias("url"))
             .distinct()
         )
@@ -428,10 +349,7 @@ def run_extract_phase(
     text_tbl = sinks.read_table_batch_rows(
         spark, out_root, "pages_text", enriched.schema
     ).join(F.broadcast(done), "part_id", "left_anti")
-    mentions = text_tbl.select(
-        "part_id", "url", "lang", F.explode("norms").alias("norm")
-    )
-    triples = _triples_projection(mentions)
+    triples = _triples_projection(text_tbl)
 
     # no repartition: the plan upstream is shuffle-free, and pages
     # corpora are bucketed by part_id on disk (corpusgen.write_pages),
@@ -566,14 +484,12 @@ def delete_pages(
         urls_df = urls.select("url")
     urls_df = urls_df.distinct()
 
-    prior_buckets = sinks.recorded_buckets(spark, out_root, "triples")
-    if prior_buckets and prior_buckets != {buckets}:
-        raise ValueError(
-            f"manifest at {out_root} was committed with "
-            f"buckets={sorted(prior_buckets)}; this deletion uses "
-            f"buckets={buckets} — part_id mappings differ; rerun with "
-            "the original bucket count"
-        )
+    sinks.check_buckets(
+        sinks.recorded_buckets(spark, out_root, "triples"),
+        buckets,
+        out_root,
+        "triples",
+    )
     # the deletion list is small by nature (a takedown batch, not a
     # corpus); its part set drives partition pruning everywhere below
     target_parts = sorted(
@@ -601,19 +517,16 @@ def delete_pages(
         deleted[tbl] = 0
         if not parts:
             continue
-        markers = sorted(mm[tbl])
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(out_root, tbl)
-        )
-        tagged = "_batch_run" in raw.columns
-        pruned = raw.where(F.col("part_id").isin(parts))
-        if tagged:
-            # durable rows only: batch rows + marker-valid streamed
-            # rows; crashed-attempt orphans die with the rewrite
-            pruned = pruned.where(
+        raw = sinks.read_tagged(spark, out_root, tbl)[0]
+        # durable rows only: batch rows + marker-valid streamed rows;
+        # crashed-attempt orphans die with the rewrite
+        pruned = raw.where(
+            F.col("part_id").isin(parts)
+            & (
                 F.col("_batch_run").isNull()
-                | F.col("_batch_run").isin(markers)
+                | F.col("_batch_run").isin(sorted(mm[tbl]))
             )
+        )
         hit = pruned.join(
             url_keys.withColumnRenamed("url", key_col), key_col, "left_semi"
         )
@@ -638,11 +551,7 @@ def delete_pages(
                 keep.groupBy("part_id")
                 .agg(
                     F.count(F.lit(1)).alias("n"),
-                    (
-                        F.count_if(F.col("_batch_run").isNull())
-                        if tagged
-                        else F.count(F.lit(1))
-                    )
+                    F.count_if(F.col("_batch_run").isNull())
                     .cast("long")
                     .alias("n_batch"),
                 )
@@ -672,9 +581,7 @@ def delete_pages(
             # it a task retry or speculative re-read after commit
             # begins can read already-replaced files (ADVICE r5, low)
             out = materialize(keep.where(F.col("part_id").isin(live)))
-            if tagged and all(
-                survivors[p][0] == survivors[p][1] for p in live
-            ):
+            if all(survivors[p][0] == survivors[p][1] for p in live):
                 # no tagged row survives anywhere we rewrite: drop the
                 # column rather than bake an all-null _batch_run into
                 # pure-batch partitions (a stale-marker root would

@@ -145,6 +145,16 @@ def write_partitioned(
     writer.mode("overwrite").parquet(os.path.join(root, table_name))
 
 
+def append_partitioned(df: DataFrame, root: str, table_name: str) -> None:
+    """Append ``df`` into ``part_id=`` dirs — the streamed-append write.
+    Micro-batches land in overlapping parts, so this NEVER overwrites:
+    the batch path's dynamic overwrite would delete earlier batches'
+    rows wholesale."""
+    df.write.partitionBy("part_id").mode("append").parquet(
+        os.path.join(root, table_name)
+    )
+
+
 def read_table(spark: SparkSession, root: str, table_name: str) -> DataFrame:
     """RAW file-level read — no manifest consultation, no visibility
     filtering. Internal helper for accounting over just-written data;
@@ -180,6 +190,40 @@ def read_table_batch_rows(
         .where(F.col("_batch_run").isNull())
         .drop("_batch_run")
     )
+
+
+def _listdir(path: str) -> list[str]:
+    try:
+        return os.listdir(path)
+    except OSError:
+        return []
+
+
+def read_tagged(
+    spark: SparkSession, root: str, table_name: str
+) -> tuple[DataFrame, bool] | None:
+    """Every row of a table streaming may have appended to, with a
+    string ``_batch_run`` column (NULL on batch-written rows), plus
+    whether any surviving file carries that column — or None when no
+    ``part_id=`` directory of the table holds a data file (an absent
+    table, an empty one, or one whose every file a vacuum reclaimed).
+
+    The one schema-merging read of the package: streamed files carry
+    the attempt tag and batch files do not, and the tag column
+    outlives neither a covering batch overwrite nor a vacuum. Each
+    caller applies its own ``_batch_run`` predicate."""
+    path = os.path.join(root, table_name)
+    dirs = [
+        os.path.join(path, n)
+        for n in _listdir(path)
+        if n.startswith("part_id=")
+    ]
+    if all(f.startswith((".", "_")) for d in dirs for f in _listdir(d)):
+        return None
+    data = spark.read.option("mergeSchema", "true").parquet(path)
+    if "_batch_run" in data.columns:
+        return data, True
+    return data.withColumn("_batch_run", F.lit(None).cast("string")), False
 
 
 def committed_parts(
@@ -565,6 +609,23 @@ def recorded_buckets(
     return resume_state(spark, root, table_name)[1]
 
 
+def check_buckets(
+    prior: set[int], buckets: int, root: str, table_name: str
+) -> None:
+    """Refuse to mix part_id mappings: raise ``ValueError`` when the
+    bucket counts ``prior`` runs recorded for the table
+    (:func:`recorded_buckets`) name another count than ``buckets`` —
+    every resume decision and append would then land in parts that
+    mean something else to every other reader."""
+    if prior and prior != {buckets}:
+        raise ValueError(
+            f"{table_name} manifest at {root} was committed with "
+            f"buckets={sorted(prior)}; this run uses buckets={buckets} — "
+            "part_id mappings differ; rerun with the original bucket "
+            "count or start a fresh out_root"
+        )
+
+
 def append_lineage(
     spark: SparkSession,
     root: str,
@@ -616,18 +677,10 @@ def vacuum_streamed(
     from urllib.parse import unquote, urlparse
 
     markers = stream_marker_runs(spark, root, table_name)
-    try:
-        data = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(os.path.join(root, table_name))
-        )
-    except Exception:
-        # absent table, or an empty dir with no readable schema (a
-        # corpus where no page yields a mention) — nothing to reclaim
-        return 0
-    if "_batch_run" not in data.columns:
-        return 0
-    tagged = data.where(F.col("_batch_run").isNotNull())
+    read = read_tagged(spark, root, table_name)
+    if read is None or not read[1]:
+        return 0  # no data file, or no streamed one: nothing to reclaim
+    tagged = read[0].where(F.col("_batch_run").isNotNull())
     if markers:
         tagged = tagged.where(~F.col("_batch_run").isin(sorted(markers)))
     files = [
@@ -701,20 +754,16 @@ def read_durable_tagged(
         evidence = summ["stream_evidence"]
     if evidence is None:
         evidence = bool(markers)
-    markers = sorted(markers)
-    if not evidence:
+    read = read_tagged(spark, root, table_name) if evidence else None
+    if read is None:
         return read_table(spark, root, table_name), False
-    data = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(os.path.join(root, table_name))
-    )
-    if "_batch_run" not in data.columns:
-        return data, False
+    data, tagged = read
     return (
         data.where(
-            F.col("_batch_run").isNull() | F.col("_batch_run").isin(markers)
+            F.col("_batch_run").isNull()
+            | F.col("_batch_run").isin(sorted(markers))
         ).drop("_batch_run"),
-        bool(markers),
+        tagged and bool(markers),
     )
 
 
@@ -926,16 +975,16 @@ def read_committed(
     stream_evidence = bool(markers) or any(
         r["status"] in ("streamed", STREAM_INTENT) for r in rows
     )
-    if not (want_streamed or stream_evidence):
+    read = (
+        read_tagged(spark, root, table_name)
+        if want_streamed or stream_evidence
+        else None
+    )
+    if read is None:
         # pure-batch root: plain read, no schema merge, no tag filter
         data = read_table(spark, root, table_name)
         return data.join(F.broadcast(parts), "part_id", "inner")
-    data = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(os.path.join(root, table_name))
-    )
-    if "_batch_run" not in data.columns:
-        data = data.withColumn("_batch_run", F.lit(None).cast("string"))
+    data = read[0]
     batch_rows = data.where(F.col("_batch_run").isNull()).join(
         F.broadcast(parts), "part_id", "inner"
     )

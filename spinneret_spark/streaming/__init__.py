@@ -1,11 +1,11 @@
 """Incremental skin over the batch pipeline.
 
 The north rule requires resumability, not streaming (SURVEY.md §2.10)
-— the batch pipeline checkpoints per input partition. This module
-adds the optional Structured-Streaming face: the same per-batch
-function runs under ``foreachBatch``, so a pages table that grows
-(new crawl snapshots landing as files) is processed incrementally
-with Spark's own checkpoint tracking which files were consumed.
+— the batch pipeline checkpoints per input partition. This package
+adds the optional Structured-Streaming face: the extract stream
+(``incremental``), the watermarked windowed rollup (``windowed``) and
+the stateful first-seen dedup (``stateful``) all land their rows
+through the one exactly-once streamed-append writer in ``durable``.
 """
 
 from spinneret_spark.streaming.incremental import stream_pages_to_triples

@@ -1,62 +1,23 @@
-"""Structured-Streaming wrapper: file-source pages → triples sink.
+"""Structured-Streaming wrapper: file-source pages → the durable
+``triples`` and ``pages_text`` tables.
 
 ``readStream`` over the pages directory (parquet file source; each
-newly-landed file is a micro-batch) → the *identical* batch transform
-(pipeline.pages_to_triples) inside ``foreachBatch`` → APPEND to the
-partitioned triples table + manifest. Spark's streaming checkpoint
-(``checkpointLocation``) records consumed files; the manifest keeps
-the same commit semantics as the batch path.
-
-Write-mode contract (the round-1 bug): micro-batches from different
-triggers land in overlapping ``part_id=`` buckets, so the batch
-path's dynamic-partition OVERWRITE would delete earlier batches'
-rows wholesale — streaming must APPEND.
-
-Manifest contract (the round-2 bug): a micro-batch covers only its
-own FILES, never a whole part_id bucket — yet even a tiny batch
-touches nearly every bucket (part_id = pmod(xxhash64(url), buckets)).
-Marking those parts ``"committed"`` would make a later BATCH run's
-resume anti-join (and its fully-committed short-circuit) silently
-skip every unprocessed page in them — data loss, not dedup. Streaming
-therefore commits under the distinct status ``"streamed"``: invisible
-to batch resume, visible to readers that opt in
-(``read_committed(..., statuses=("committed", "streamed"))``).
-
-Exactly-once: the streaming checkpoint replays a micro-batch whose
-trigger completed but whose offsets were not yet committed. Two
-layers close it fully under the plain-parquet fallback:
-
-1. **Replay skip** — each batch writes a one-row ``BATCH_MARKER``
-   manifest row AFTER its data lands; ``process_batch`` consults it
-   first and no-ops on replay, so a replayed completed batch appends
-   nothing.
-2. **Attempt attribution** — every streamed row carries an
-   attempt-unique ``_batch_run`` tag (``{run}-b{id}-{uuid}``), and
-   the marker records the WINNING attempt. A crash between the data
-   append and the marker write leaves orphan rows whose attempt tag
-   no marker ever names; :func:`read_streamed_consistent` keeps only
-   rows whose tag appears in a marker, so orphans are invisible
-   forever — exactly the snapshot-pointer semantics Iceberg provides,
-   expressed as data (one dictionary-encoded constant column per
-   file) plus the manifest. The replayed attempt gets a fresh uuid,
-   so its rows and the orphans can never be confused.
-
-Each batch is ``localCheckpoint()``-ed before the write: the fused
-extract+detect kernel (the expensive Python pass) runs EXACTLY once
-per micro-batch — the write and the manifest count both read the
-materialized blocks instead of re-deriving the lineage.
+newly-landed file is a micro-batch) → inside ``foreachBatch``, the
+batch extract phase's own derivation: the fused extract+detect kernel
+(one Python crossing per page) and the pure-JVM triples projection of
+its ``norms``. Both tables land through the one durable writer,
+:func:`spinneret_spark.streaming.durable.append_attempt` — replay
+skip, intent rows, tagged append, marker commit — while Spark's
+streaming checkpoint (``checkpointLocation``) records which files
+were consumed.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from spinneret_spark import pipeline
-from spinneret_spark.sinks import tables as sinks
+from spinneret_spark.streaming.durable import append_attempt
 
 
 def process_micro_batch(
@@ -67,121 +28,31 @@ def process_micro_batch(
     buckets: int = pipeline.DEFAULT_BUCKETS,
     terms: list[str] | None = None,
 ) -> None:
-    """One micro-batch: pages → pages_text + triples APPEND + manifest.
+    """One micro-batch: pages → triples + pages_text APPEND + manifest.
 
     Module-level (not a closure) so the replay contract is directly
     testable: calling it twice with the same ``batch_id`` must leave
     the sink unchanged the second time.
 
-    BOTH durable tables land per batch (round-4): the extracted text
-    appends to ``pages_text`` exactly like the batch phase writes it,
-    so streamed pages are first-class downstream — canonicalization
-    and curation see them through
+    BOTH durable tables land per batch: streamed pages are first-class
+    downstream — canonicalization and curation see them through
     ``read_committed(..., statuses=("committed", "streamed"))``, the
     batch interleave guard can account for zero-mention pages, and a
-    later batch run never needs to re-extract what streaming already
-    extracted. Same one-Python-crossing shape as the batch phase: the
-    fused kernel runs once, triples derive by a pure-JVM explode.
+    later batch run never re-extracts what streaming extracted.
+    ``triples`` comes first: its markers decide the replay skip.
     """
-    session = batch_df.sparkSession
-    batch_run = f"{run_id}-b{batch_id}"
-    # replay skip: the checkpoint re-delivers a batch whose marker
-    # already landed → appending again would duplicate its rows.
-    # Markers are attempt-unique ("{batch_run}-{uuid}"), so the check
-    # is a prefix match; "-b1-" cannot collide with "-b11-". The
-    # triples marker stands for the whole batch: both tables' manifest
-    # rows land in ONE append, so either all exist or none do.
-    markers = sinks.stream_marker_runs(session, out_root, "triples")
-    if any(m.startswith(batch_run + "-") for m in markers):
-        return
-    # refuse to interleave with commits made under a different
-    # part_id mapping — appended rows would land in buckets that
-    # mean something else to every other reader/resumer
-    prior = sinks.recorded_buckets(session, out_root, "triples")
-    if prior and prior != {buckets}:
-        raise ValueError(
-            f"triples manifest was written with buckets={sorted(prior)}; "
-            f"this stream uses buckets={buckets} — part_id mappings "
-            "differ, refusing to mix them"
-        )
-    attempt = f"{batch_run}-{uuid.uuid4().hex[:12]}"
-    # pre-append INTENT row, written BEFORE any data file: the
-    # Iceberg "snapshot metadata precedes data reachability" ordering.
-    # If this attempt crashes between its data append and the marker
-    # write, the intent row is the manifest evidence that lets
-    # read_committed/read_durable filter the orphan tagged rows — even
-    # for the very FIRST attempt on a root, which previously had no
-    # evidence at all until a replay landed (round-4 VERDICT item 3).
-    sinks.append_manifest_multi(
-        session,
+    pages = pipeline._fused_extract_detect_full(
+        pipeline.with_part_id(batch_df, buckets),
+        terms or pipeline.DEFAULT_TERMS,
+    )
+    append_attempt(
+        pages,
+        batch_id,
         out_root,
-        attempt,
-        [
-            ("pages_text", -1, 0, sinks.STREAM_INTENT),
-            ("triples", -1, 0, sinks.STREAM_INTENT),
-        ],
+        run_id,
+        {"triples": pipeline._triples_projection, "pages_text": lambda df: df},
+        buckets,
     )
-    enriched = (
-        pipeline._fused_extract_detect_full(
-            pipeline.with_part_id(batch_df, buckets),
-            terms or pipeline.DEFAULT_TERMS,
-        )
-        # attempt attribution: a constant per file (dictionary-encoded,
-        # ~free) that lets the consistent reader exclude orphan rows
-        # from an attempt that crashed before its marker landed
-        .withColumn("_batch_run", F.lit(attempt))
-        .localCheckpoint()  # extract+detect kernel runs ONCE per batch
-    )
-    (
-        enriched.write.partitionBy("part_id")
-        .mode("append")  # NEVER overwrite: batches share part_ids
-        .parquet(os.path.join(out_root, "pages_text"))
-    )
-    mentions = enriched.select(
-        "part_id", "url", "lang", F.explode("norms").alias("norm")
-    )
-    triples = pipeline._triples_projection(mentions).withColumn(
-        "_batch_run", F.lit(attempt)
-    )
-    (
-        triples.write.partitionBy("part_id")
-        .mode("append")
-        .parquet(os.path.join(out_root, "triples"))
-    )
-    # counts for BOTH tables from the checkpointed blocks in one job —
-    # pages per part + mentions (= triple rows) per part
-    counts = (
-        enriched.groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum(F.size("norms")).alias("n_triples"),
-        )
-        .collect()
-    )
-    # ONE manifest write, all rows keyed by the attempt id (its
-    # "{batch_run}-" prefix keeps per-batch lineage greppable):
-    # per-part "streamed" rows for both tables + one attempt-unique
-    # replay marker per table (rows_out on the marker = the batch's
-    # total, which lets manifest_summary's streamed_total sum the
-    # exactly-once streamed rows straight from markers) + (first
-    # batch only)
-    # the bucket-count record. Markers go in even for an empty batch
-    # so its replay skips.
-    rows = [
-        ("pages_text", r["part_id"], r["n_pages"], "streamed")
-        for r in counts
-    ] + [
-        ("triples", r["part_id"], int(r["n_triples"] or 0), "streamed")
-        for r in counts
-        if (r["n_triples"] or 0) > 0
-    ]
-    n_pages_total = sum(r["n_pages"] for r in counts)
-    n_triples_total = sum(int(r["n_triples"] or 0) for r in counts)
-    rows.append(("pages_text", -1, n_pages_total, sinks.BATCH_MARKER))
-    rows.append(("triples", -1, n_triples_total, sinks.BATCH_MARKER))
-    if not prior:
-        rows.append(("triples", buckets, 0, sinks.BUCKETS_META))
-    sinks.append_manifest_multi(session, out_root, attempt, rows)
 
 
 def stream_pages_to_triples(

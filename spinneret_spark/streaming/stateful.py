@@ -125,38 +125,6 @@ def with_fingerprint(pages: DataFrame, text_col: str = "text") -> DataFrame:
     return pages.withColumn("fingerprint", F.md5(F.col(text_col)))
 
 
-def stream_first_seen_pages(
-    spark: SparkSession,
-    pages_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    schema: str = (
-        "page_id long, url string, warc_ts timestamp, html binary, "
-        "text string, lang string"
-    ),
-    ttl_minutes: int | None = None,
-    max_files_per_trigger: int = 1,
-    trigger_once: bool = True,
-):
-    """File-source stream → fingerprint → first-seen dedup → parquet
-    (append). Returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_path)
-    )
-    deduped = first_seen(with_fingerprint(stream), ttl_minutes=ttl_minutes)
-    writer = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 #: durable table name for the first-seen deduped pages stream.
 FIRST_SEEN_TABLE = "pages_first_seen"
 
@@ -176,10 +144,10 @@ def stream_first_seen_pages_durable(
     max_files_per_trigger: int = 1,
     trigger_once: bool = True,
 ):
-    """Like :func:`stream_first_seen_pages`, but the deduped pages
-    land in the manifest-governed ``pages_first_seen`` table under
-    the full streamed-append contract (replay no-op, crashed-attempt
-    orphans invisible, vacuum-able) — the production landing path.
+    """File-source stream → fingerprint → first-seen dedup → the
+    manifest-governed ``pages_first_seen`` table, under the full
+    streamed-append contract (replay no-op, crashed-attempt orphans
+    invisible, vacuum-able). Returns the StreamingQuery.
 
     Bucketing by ``pmod(xxhash64(fingerprint), buckets)`` matches the
     state-store key, so the durable layout mirrors the state

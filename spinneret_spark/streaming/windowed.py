@@ -83,40 +83,6 @@ def windowed_mention_counts(
     )
 
 
-def stream_windowed_mention_counts(
-    spark: SparkSession,
-    pages_path: str,
-    out_path: str,
-    checkpoint_dir: str,
-    schema: str = (
-        "page_id long, url string, warc_ts timestamp, html binary, "
-        "text string, lang string"
-    ),
-    window: str = "1 hour",
-    delay: str = "30 minutes",
-    terms: list[str] | None = None,
-    max_files_per_trigger: int = 1,
-    trigger_once: bool = True,
-):
-    """File-source stream → watermarked windowed counts → parquet
-    (append). Returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_path)
-    )
-    counts = windowed_mention_counts(stream, window, delay, terms)
-    writer = (
-        counts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 #: durable table name for the windowed rollup (manifest-governed).
 WINDOW_COUNTS_TABLE = "mention_window_counts"
 
@@ -138,11 +104,10 @@ def stream_windowed_mention_counts_durable(
     max_files_per_trigger: int = 1,
     trigger_once: bool = True,
 ):
-    """Like :func:`stream_windowed_mention_counts`, but the finalized
-    windows land in the manifest-governed ``mention_window_counts``
-    table under the full streamed-append contract (replay no-op,
-    crashed-attempt orphans invisible, vacuum-able) — the
-    production landing path, not a demo parquet append.
+    """File-source stream → watermarked windowed counts → the
+    manifest-governed ``mention_window_counts`` table, under the full
+    streamed-append contract (replay no-op, crashed-attempt orphans
+    invisible, vacuum-able). Returns the StreamingQuery.
 
     Rows are bucketed by ``pmod(xxhash64(norm), buckets)`` so a
     term's whole window history is co-located; read with

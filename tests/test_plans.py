@@ -86,10 +86,7 @@ def test_extract_phase_triples_derivation_is_jvm_only(spark, tmp_path):
     )
     sinks.write_partitioned(enriched, root, "pages_text", shuffle=False)
     text_tbl = sinks.read_table(spark, root, "pages_text")
-    mentions = text_tbl.select(
-        "part_id", "url", "lang", F.explode("norms").alias("norm")
-    )
-    triples = pipeline._triples_projection(mentions)
+    triples = pipeline._triples_projection(text_tbl)
     assert count_python_crossings(triples) == 0
     assert count_exchanges(triples) == 0
 

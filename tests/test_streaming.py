@@ -6,6 +6,7 @@ path on the same corpus."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,13 +99,18 @@ def test_streaming_equals_batch(spark, corpus_path, tmp_path_factory):
         .select("det_id")
         .collect()
     )
-    want = sorted(
-        r["det_id"]
-        for r in sinks.read_committed(spark, batch_root, "triples")
-        .select("det_id")
-        .collect()
-    )
+    batch = sinks.read_committed(spark, batch_root, "triples")
+    want = sorted(r["det_id"] for r in batch.select("det_id").collect())
     assert got == want
+
+    # pages_to_triples derives exactly the rows the extract phase
+    # wrote, every column, in any order
+    direct = pipeline.pages_to_triples(pipeline.with_part_id(pages, BUCKETS))
+    cols = sorted(batch.columns)
+    assert sorted(direct.columns) == cols
+    assert Counter(map(tuple, direct.select(cols).collect())) == Counter(
+        map(tuple, batch.select(cols).collect())
+    )
 
 
 def test_replayed_micro_batch_is_noop(spark, corpus_path, tmp_path_factory):
@@ -608,6 +614,12 @@ def test_vacuum_on_empty_or_missing_table_is_noop(spark, tmp_path_factory):
         sinks.vacuum_streamed(spark, root, "triples", grace_seconds=0) == 0
     )
     os.makedirs(os.path.join(root, "triples"))
+    assert (
+        sinks.vacuum_streamed(spark, root, "triples", grace_seconds=0) == 0
+    )
+    # a part dir a vacuum emptied of every file (a crashed first
+    # attempt's orphans) is left behind and holds no readable schema
+    os.makedirs(os.path.join(root, "triples", "part_id=0"))
     assert (
         sinks.vacuum_streamed(spark, root, "triples", grace_seconds=0) == 0
     )

@@ -19,9 +19,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from spinneret_spark.sinks import tables as sinks
 from spinneret_spark.streaming.stateful import (
+    FIRST_SEEN_TABLE,
     first_seen,
-    stream_first_seen_pages,
+    stream_first_seen_pages_durable,
     with_fingerprint,
 )
 
@@ -61,14 +63,19 @@ def dup_corpus(spark, tmp_path_factory):
     return path
 
 
-def test_first_seen_dedups_across_batches(spark, dup_corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("fs_out") / "pages")
-    ckpt = str(tmp_path_factory.mktemp("fs_ckpt"))
-    q = stream_first_seen_pages(spark, dup_corpus, out, ckpt)
+def _drain(spark, dup_corpus, root, ckpt):
+    q = stream_first_seen_pages_durable(
+        spark, dup_corpus, root, ckpt, run_id="f0", buckets=4
+    )
     q.awaitTermination(120)
     assert not q.isActive
+    return sinks.read_streamed_consistent(spark, root, FIRST_SEEN_TABLE)
 
-    got = spark.read.parquet(out)
+
+def test_first_seen_dedups_across_batches(spark, dup_corpus, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("fs_out"))
+    ckpt = str(tmp_path_factory.mktemp("fs_ckpt"))
+    got = _drain(spark, dup_corpus, root, ckpt)
     rows = {r["text"]: r["url"] for r in got.collect()}
     # four distinct texts, one row each — the across-batch duplicates
     # (beta in batch 1, gamma and alpha in batch 2) were swallowed
@@ -91,14 +98,12 @@ def test_first_seen_dedups_across_batches(spark, dup_corpus, tmp_path_factory):
 def test_first_seen_restart_emits_nothing_new(
     spark, dup_corpus, tmp_path_factory
 ):
-    out = str(tmp_path_factory.mktemp("fs_out2") / "pages")
+    root = str(tmp_path_factory.mktemp("fs_out2"))
     ckpt = str(tmp_path_factory.mktemp("fs_ckpt2"))
     for _ in range(2):
-        q = stream_first_seen_pages(spark, dup_corpus, out, ckpt)
-        q.awaitTermination(120)
+        got = _drain(spark, dup_corpus, root, ckpt)
     counts = (
-        spark.read.parquet(out)
-        .groupBy("fingerprint")
+        got.groupBy("fingerprint")
         .count()
         .where(F.col("count") > 1)
         .collect()
@@ -112,12 +117,6 @@ def test_first_seen_durable_sink_matches_batch_and_replays_noop(
     """Round-4 VERDICT item 1: first-seen dedup lands in the
     manifest-governed table, equals the batch twin, and a restart
     from checkpoint emits nothing new."""
-    from spinneret_spark.sinks import tables as sinks
-    from spinneret_spark.streaming.stateful import (
-        FIRST_SEEN_TABLE,
-        stream_first_seen_pages_durable,
-    )
-
     root = str(tmp_path_factory.mktemp("fs_durable"))
     ckpt = str(tmp_path_factory.mktemp("fs_durable_ckpt"))
     for _ in range(2):

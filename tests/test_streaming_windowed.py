@@ -18,8 +18,10 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from spinneret_spark.sinks import tables as sinks
 from spinneret_spark.streaming.windowed import (
-    stream_windowed_mention_counts,
+    WINDOW_COUNTS_TABLE,
+    stream_windowed_mention_counts_durable,
     windowed_mention_counts,
 )
 
@@ -69,20 +71,24 @@ def ts_corpus(spark, tmp_path_factory):
     return path
 
 
-def test_windowed_stream_matches_batch_on_finalized_windows(
-    spark, ts_corpus, tmp_path_factory
-):
-    out = str(tmp_path_factory.mktemp("win_out") / "counts")
-    ckpt = str(tmp_path_factory.mktemp("win_ckpt"))
-    q = stream_windowed_mention_counts(
-        spark, ts_corpus, out, ckpt, window="1 hour", delay="30 minutes"
+def _drain(spark, ts_corpus, root, ckpt):
+    q = stream_windowed_mention_counts_durable(
+        spark, ts_corpus, root, ckpt, run_id="w0",
+        window="1 hour", delay="30 minutes", buckets=4,
     )
     q.awaitTermination(120)
     assert not q.isActive
+    return sinks.read_streamed_consistent(spark, root, WINDOW_COUNTS_TABLE)
 
+
+def test_windowed_stream_matches_batch_on_finalized_windows(
+    spark, ts_corpus, tmp_path_factory
+):
+    root = str(tmp_path_factory.mktemp("win_out"))
+    ckpt = str(tmp_path_factory.mktemp("win_ckpt"))
     got = {
         (r["window_start"], r["norm"]): r["n_pages"]
-        for r in spark.read.parquet(out).collect()
+        for r in _drain(spark, ts_corpus, root, ckpt).collect()
     }
 
     # global max warc_ts = 04:45 → watermark 04:15 → windows ending
@@ -107,12 +113,11 @@ def test_windowed_stream_matches_batch_on_finalized_windows(
 def test_windowed_stream_restart_emits_nothing_new(
     spark, ts_corpus, tmp_path_factory
 ):
-    out = str(tmp_path_factory.mktemp("win_out2") / "counts")
+    root = str(tmp_path_factory.mktemp("win_out2"))
     ckpt = str(tmp_path_factory.mktemp("win_ckpt2"))
     for _ in range(2):
-        q = stream_windowed_mention_counts(spark, ts_corpus, out, ckpt)
-        q.awaitTermination(120)
-    rows = spark.read.parquet(out).groupBy("window_start", "norm").count()
+        got = _drain(spark, ts_corpus, root, ckpt)
+    rows = got.groupBy("window_start", "norm").count()
     dupes = rows.where(F.col("count") > 1).collect()
     assert not dupes, f"windows emitted twice across restarts: {dupes}"
 
@@ -121,15 +126,9 @@ def test_windowed_durable_sink_matches_demo_and_replays_noop(
     spark, ts_corpus, tmp_path_factory
 ):
     """Round-4 VERDICT item 1: the watermarked rollup lands in the
-    manifest-governed table with the same finalized-window content as
-    the demo parquet sink, and a from-scratch restart (checkpoint
-    intact) emits nothing new — exactly-once end to end."""
-    from spinneret_spark.sinks import tables as sinks
-    from spinneret_spark.streaming.windowed import (
-        WINDOW_COUNTS_TABLE,
-        stream_windowed_mention_counts_durable,
-    )
-
+    manifest-governed table with the finalized-window content of the
+    batch run, and a from-scratch restart (checkpoint intact) emits
+    nothing new — exactly-once end to end."""
     root = str(tmp_path_factory.mktemp("win_durable"))
     ckpt = str(tmp_path_factory.mktemp("win_durable_ckpt"))
     for _ in range(2):  # second drain = restart from checkpoint
