@@ -1,51 +1,27 @@
-"""One knob for how hot relations get pinned.
+"""How hot relations get pinned.
 
-Several plans materialize a relation that 3+ downstream subplans
-consume (hashed shingles, MinHash signatures, near-dup edges, the
-decoded media rows): Spark does NOT share subplans across self-join
-sides or separate actions, so without pinning, the expensive build
-replays once per consumer. Two strategies exist and the right one
-depends on the deployment, not the plan:
+Several plans pin a relation that two or more downstream consumers
+read (separate actions, or both sides of a self-join): Spark does NOT
+share subplans across self-join sides or separate actions, so without
+a pin the expensive build replays once per consumer. A relation that
+feeds a single action needs no pin.
 
-* ``"local"`` (default) — ``localCheckpoint()``: eager, truncates
-  lineage, blocks live on the executors that computed them. Cheapest
-  on a single box (this sandbox) and the only option for the
-  iterative CC loop (lineage MUST be cut there or plans grow without
-  bound — that call site does not go through this knob).
-* ``"persist"`` — ``persist(MEMORY_AND_DISK)`` + an eager ``count()``
-  fill. Keeps lineage, so on a real multi-executor cluster a lost
-  executor's blocks are recomputed instead of failing the job —
-  the standard trade: pay one extra count job for fault tolerance.
-  The eager fill matters: a LAZY cache whose first fill races
-  concurrent consumers can compute the relation twice (observed in
-  round 3 with ``.cache()``).
-
-Selection: the ``SPINNERET_MATERIALIZE`` environment variable
-(``local``/``persist``), overridable per call. Callers that rely on
-materialization for CORRECTNESS — ``pack_sequences`` pins
+The pin is ``localCheckpoint()``: eager, lineage-truncating, blocks
+held by the executors that computed them. On a multi-executor cluster
+a lost executor fails the query instead of recomputing the blocks;
+``persist`` plus an eager fill would keep the lineage for that case at
+the cost of one extra count job per pin, so it is not used. Callers
+that rely on a pin for CORRECTNESS — ``pack_sequences`` pins
 nondeterministic range-sampling boundaries so two branches see the
-same partitioning, the CC loop truncates iterative lineage — keep
-explicit ``localCheckpoint`` and are intentionally NOT routed through
-this knob.
+same partitioning, the CC loop truncates iterative lineage — call
+``localCheckpoint`` directly.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 
-def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
-    """Pin a hot relation; see module docstring for the modes."""
-    mode = mode or os.environ.get("SPINNERET_MATERIALIZE", "local")
-    if mode == "local":
-        return df.localCheckpoint()
-    if mode == "persist":
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()  # eager fill — consumers must never race it
-        return out
-    raise ValueError(
-        f"SPINNERET_MATERIALIZE mode {mode!r} not in local|persist"
-    )
+def materialize(df: DataFrame) -> DataFrame:
+    """Pin a relation read by two or more consumers (eager)."""
+    return df.localCheckpoint()

@@ -55,7 +55,9 @@ def near_dup_edges(
     sigs = minhash_signatures_pandas(
         docs, n=shingle_n, id_col=id_col, text_col=text_col
     )
-    candidates = lsh_candidate_pairs(sigs, max_bucket=max_bucket)
+    candidates = _materialize(
+        lsh_candidate_pairs(sigs, max_bucket=max_bucket)
+    )
     return verify_candidate_pairs(
         docs,
         candidates,
@@ -83,12 +85,11 @@ def verify_candidate_pairs(
     signatures for the unchanged corpus — verification cost stays
     linear in the candidates actually passed in, and only docs
     appearing in some pair are re-shingled (semi-join prune before the
-    Arrow kernel)."""
-    # candidates feed three consumers (both join sides + id pruning);
-    # materialize eagerly once or the upstream lineage recomputes three
-    # times (lazy .cache() alone races its own first fill when all
-    # three consumers sit in one query)
-    candidates = _materialize(candidates)
+    Arrow kernel).
+
+    ``candidates`` feeds three consumers (both join sides and the id
+    pruning), so pass it pinned (``materialize``) or its lineage
+    recomputes three times."""
     cand_ids = (
         candidates.select(F.col("id_a").alias("id"))
         .union(candidates.select(F.col("id_b").alias("id")))
@@ -237,8 +238,15 @@ def dedup_canonical_triples(
     varies across merged sources — e.g. ``lang`` — would differ run
     to run, and an incremental rewrite could never be proven equal to
     the from-scratch one). One hash aggregation, map-side partial.
+
+    A ``part_id`` column (the canonical subject's hash partition, a
+    function of ``subj``) joins the grouping keys without changing the
+    groups, so a frame already hash-partitioned by ``part_id`` dedups
+    with no shuffle and lands one file per partition.
     """
-    keys = ["subj", "pred", "obj"]
+    keys = ["subj", "pred", "obj"] + (
+        ["part_id"] if "part_id" in raw.columns else []
+    )
     rest = [c for c in raw.columns if c not in keys and c != src_col]
     if not rest:
         return raw.drop(src_col).dropDuplicates(keys)

@@ -542,7 +542,8 @@ def lsh_candidate_pairs_against(
     probe-touched rows only: the bucket relation is first semi-joined
     to the probe's (band, key) set (broadcast), so even the
     hot-bucket count — a full-corpus shuffle in the symmetric join —
-    aggregates only probe-touched buckets. Semi-joined rows retain a
+    aggregates only probe-touched buckets, and its hot rows are
+    collected once. Semi-joined rows retain a
     bucket's ENTIRE population, so the counts (and therefore the caps
     and the kept candidate set) match the symmetric join's exactly.
     """
@@ -550,7 +551,9 @@ def lsh_candidate_pairs_against(
     probe = _band_buckets(probe_signatures, bands, rows_per_band, None).select(
         F.col("id").alias("probe_id"), "band", "key"
     )
-    probe_keys = probe.select("band", "key").distinct()
+    # no distinct: a semi-join ignores duplicate keys, and a distinct
+    # would cost a shuffle job
+    probe_keys = probe.select("band", "key")
     touched = exploded.join(
         F.broadcast(probe_keys), ["band", "key"], "left_semi"
     )
@@ -561,16 +564,27 @@ def lsh_candidate_pairs_against(
         # result once instead
         touched = _materialize(touched)
     if max_bucket is not None:
+        from spinneret_spark.sinks.tables import local_frame
+
+        # the hot rows are collected ONCE: their count is the stat, and
+        # the anti-join reads them back as a local relation instead of
+        # re-running the aggregation
         hot = (
             touched.groupBy("band", "key")
             .agg(F.count("*").alias("n"))
             .filter(F.col("n") > max_bucket)
             .select("band", "key")
+            .collect()
         )
         if stats_out is not None:
-            stats_out["capped_buckets"] = hot.count()
+            stats_out["capped_buckets"] = len(hot)
+        hot_df = local_frame(
+            touched.sparkSession,
+            [tuple(r) for r in hot],
+            "band int, key string",
+        )
         touched = touched.join(
-            F.broadcast(hot), ["band", "key"], "left_anti"
+            F.broadcast(hot_df), ["band", "key"], "left_anti"
         )
     elif stats_out is not None:
         stats_out["capped_buckets"] = 0

@@ -8,7 +8,9 @@ at :135-141) and its SSSOM module supplies the (subject_id,
 subject_label) dictionary those slots are keyed by (sssom.py:52-55).
 This module closes that loop mechanically: mentions are linked to the
 dictionary via broadcast hash join, candidate sets are reranked by
-embedding cosine, and triples are emitted with deterministic ids.
+embedding cosine. The pipeline emits the triples with deterministic
+ids (``pipeline._triples_projection``); this module keeps the
+predicate constants they carry.
 """
 
 from __future__ import annotations
@@ -16,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spinneret_spark.functions.hashing import det_id
 from spinneret_spark.functions.vectors import cosine
 
 MENTIONS_PRED = "http://example.org/kg/mentions"
@@ -61,24 +62,3 @@ def rerank_candidates(
         ).alias("best")
     ).select(*mention_key, "best.subject_id", "best.score")
 
-
-def triples_from_mentions(
-    linked: DataFrame,
-    doc_uri_prefix: str = "doc://",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Linked mentions → (subj, pred, obj) triple table rows.
-
-    Columns follow FIXTURES.md §4; ``det_id`` is the deterministic
-    twin id (sha2 over subject#predicate#object) that makes resume
-    idempotent (SURVEY.md P6).
-    """
-    subj = F.concat(F.lit(doc_uri_prefix), F.col(id_col).cast("string"))
-    return linked.select(
-        subj.alias("subj"),
-        F.lit(MENTIONS_PRED_LABEL).alias("pred"),
-        F.col("surface").alias("obj"),
-        F.lit(MENTIONS_PRED).alias("pred_id"),
-        F.col("subject_id").alias("obj_id"),
-        det_id(subj, F.lit(MENTIONS_PRED), F.col("subject_id")).alias("det_id"),
-    )

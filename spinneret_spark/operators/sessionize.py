@@ -33,20 +33,3 @@ def sessionize(
         "session_seq", F.sum(is_new).over(w)
     )
 
-
-def session_stats(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Per-user session summary: (user_id, n_sessions, n_events,
-    max_session_events)."""
-    s = sessionize(events, gap_seconds, user_col)
-    per_session = s.groupBy(user_col, "session_seq").agg(
-        F.count("*").alias("n")
-    )
-    return per_session.groupBy(user_col).agg(
-        F.count("*").alias("n_sessions"),
-        F.sum("n").alias("n_events"),
-        F.max("n").alias("max_session_events"),
-    )

@@ -23,6 +23,7 @@ overwrites.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
@@ -31,12 +32,11 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
-import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spinneret_spark.extract.htmltext import extract_text
-from spinneret_spark.functions.hashing import det_id
+from spinneret_spark.functions.hashing import MINHASH_K, det_id
 from spinneret_spark.materialize import materialize
 from spinneret_spark.operators.canonicalize import (
     canonical_entities,
@@ -79,19 +79,8 @@ def _footer_rows(out_root: str, tbl: str, parts=None) -> dict[int, int]:
     skipped, as Spark's listing skips them) — a driver-side metadata
     read, no Spark job. ``parts=None`` counts every partition on disk;
     a listed part with no directory is absent from the result."""
-    out = {}
-    for p in _partition_ids(out_root, tbl) if parts is None else parts:
-        d = os.path.join(out_root, tbl, f"part_id={p}")
-        try:
-            names = os.listdir(d)
-        except OSError:
-            continue
-        out[p] = sum(
-            pq.ParquetFile(os.path.join(d, n)).metadata.num_rows
-            for n in names
-            if not n.startswith((".", "_"))
-        )
-    return out
+    files = sinks.part_files(out_root, tbl, parts)
+    return sinks.footer_rows(out_root, tbl, files)
 
 
 def with_part_id(pages: DataFrame, buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -149,28 +138,23 @@ def _fused_extract_detect_full(
     """
     from spinneret_spark.operators.mentions import DictMatcher
 
-    # html is the fat column: ship it through Arrow only when a
-    # limit-1 probe finds a row that needs extraction
-    need_html = "html" in pages.columns and (
-        pages.where(F.col("text").isNull() | (F.col("text") == ""))
-        .limit(1)
-        .count()
-        > 0
+    # html is the fat column: only rows that still need extraction
+    # ship it through Arrow (the rest ship a null), so building this
+    # frame runs no probe job
+    html = (
+        F.when(F.col("text").isNull() | (F.col("text") == ""), F.col("html"))
+        if "html" in pages.columns
+        else F.lit(None).cast("binary")
     )
-    cols = ["part_id", "url", "lang", "text"] + (["html"] if need_html else [])
+    cols = ["part_id", "url", "lang", "text", html.alias("html")]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         matcher = DictMatcher(terms)  # built once per worker
         for pdf in batches:
-            htmls = pdf["html"] if need_html else pdf["url"]  # dummy align
             texts, norms = [], []
-            for text, html in zip(pdf["text"], htmls):
+            for text, html in zip(pdf["text"], pdf["html"]):
                 if not text:
-                    text = (
-                        extract_text(bytes(html))
-                        if need_html and html is not None
-                        else ""
-                    )
+                    text = extract_text(bytes(html)) if html is not None else ""
                 texts.append(text)
                 norms.append(sorted(matcher.find_norms(text)))
             yield pd.DataFrame(
@@ -634,6 +618,23 @@ COMPOSE_EDGE_CAP = 100_000
 CANON_OUTPUTS = ("edges", "entities", "triples_canonical")
 _CANON_STATE = ("canon_signatures", "canon_assignment", "canon_doc_hash")
 _CANON_TABLES = ("triples", "canon_triples_raw", *CANON_OUTPUTS, *_CANON_STATE)
+_TRIPLE_COLS = (
+    "subj string, pred string, obj string, pred_id string, obj_id string, "
+    "lang string, det_id string"
+)
+#: the schemas of the tables the phase reads back, so a read infers
+#: nothing (schema inference is one Spark job per read)
+_CANON_SCHEMAS = {
+    "canon_signatures": "id string, "
+    + ", ".join(f"mh{i} long" for i in range(MINHASH_K))
+    + ", part_id int",
+    "edges": "id_a string, id_b string, jaccard double, part_id int",
+    "entities": "canonical_id string, n_members long, "
+    "members array<string>, part_id int",
+    "canon_triples_raw": f"{_TRIPLE_COLS}, src_id string, part_id int",
+    "canon_assignment": "doc_id string, canonical_id string, part_id int",
+    "canon_doc_hash": "doc_id string, h long, part_id int",
+}
 
 
 def _canon_params_hash(jaccard_threshold: float, buckets: int) -> int:
@@ -665,7 +666,7 @@ def _assign_hashes(parted: DataFrame) -> dict[int, int]:
     incremental triple rewrite. bit_xor keeps the fold order-
     independent and overflow-free (doc_id is unique, so no even-
     multiplicity cancellation); one narrow aggregation, no join."""
-    h = F.bit_xor(F.xxhash64(F.concat_ws("#", "doc_id", "canonical_id")))
+    h = F.bit_xor(_assign_hash())
     return {
         int(r["part_id"]): int(r["h"])
         for r in parted.groupBy("part_id").agg(h.alias("h")).collect()
@@ -871,7 +872,8 @@ class _CanonRun:
         return docs
 
     def read(self, tbl: str, parts=None) -> DataFrame:
-        df = sinks.read_table(self.spark, self.out_root, tbl)
+        path = os.path.join(self.out_root, tbl)
+        df = self.spark.read.schema(_CANON_SCHEMAS[tbl]).parquet(path)
         return df if parts is None else df.where(_in_parts(parts))
 
     def part_of(self, col: str):
@@ -879,19 +881,49 @@ class _CanonRun:
         canonical hash for outputs), so no join is ever needed."""
         return F.pmod(F.xxhash64(col), F.lit(self.plan.buckets)).cast("int")
 
-    def parts_of(self, df: DataFrame, *cols: str) -> list[int]:
-        """Sorted distinct partitions the non-null ids in ``cols`` hash
-        to (``xxhash64(null)`` is the seed, so a null is never hashed)."""
-        parts = [F.when(F.col(c).isNotNull(), self.part_of(c)) for c in cols]
-        p = F.explode(F.array_compact(F.array(*parts)))
-        return sorted(
-            int(r["p"]) for r in df.select(p.alias("p")).distinct().collect()
-        )
+    def parts_of(self, *cols: str, where=None):
+        """An aggregate for :meth:`pin`: the distinct partitions the
+        non-null ids in ``cols`` (of the rows ``where`` holds) hash to
+        — at most ``buckets`` values. ``xxhash64(null)`` is the seed,
+        so a null is never hashed."""
+        keep = F.lit(True) if where is None else where
+        sets = [
+            F.collect_set(F.when(keep & F.col(c).isNotNull(), self.part_of(c)))
+            for c in cols
+        ]
+        return functools.reduce(F.array_union, sets)
 
-    def defer(self, wave: list, df: DataFrame, tbl: str, full: bool):
+    def driver_parts(self, ids) -> set[int]:
+        """The partitions driver-side ``ids`` hash to: a projection of
+        a local relation, which Spark evaluates on the driver (no
+        job)."""
+        frame = sinks.local_frame(
+            self.spark, [(i,) for i in ids if i is not None], "id string"
+        )
+        return {r[0] for r in frame.select(self.part_of("id")).collect()}
+
+    @staticmethod
+    def pin(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+        """:func:`materialize` ``df``, observing the aggregates ``aggs``
+        (name → Column) on the pin's own job: a barrier that answers
+        small questions about its rows without a second action."""
+        if not aggs:
+            return materialize(df), {}
+        obs = Observation()
+        out = materialize(
+            df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
+        )
+        return out, obs.get
+
+    def defer(self, wave: list, df: DataFrame, tbl: str, full: bool,
+              shuffle: bool = True):
+        """Queue a write. ``shuffle=False`` (no pre-write repartition)
+        only where the frame already holds few parts, laid out by
+        part: a partition-granular rewrite (the old parts' files plus
+        a few new rows) or partial diff state."""
         wave.append(
             lambda: sinks.write_partitioned(
-                df, self.out_root, tbl, full_overwrite=full
+                df, self.out_root, tbl, shuffle=shuffle, full_overwrite=full
             )
         )
 
@@ -909,29 +941,38 @@ class _CanonRun:
 def _stage_signatures(ctx: _CanonRun):
     """MinHash over the CHANGED parts only (partition-pruned read);
     unchanged parts reuse the persisted table, which dynamic overwrite
-    updates per changed part (the full path replaces it wholesale)."""
-    from spinneret_spark.functions.hashing import MINHASH_K
+    updates per changed part (the full path replaces it wholesale).
+    The write is the one action: later stages read the new signatures
+    back from the partitions it wrote (observed on its job), so the
+    kernel runs once without a pin."""
     from spinneret_spark.operators.dedup import minhash_signatures_pandas
 
     plan = ctx.plan
-    sigs_new = materialize(
-        minhash_signatures_pandas(
-            ctx.docs_delta, k=MINHASH_K, n=SHINGLE_N, id_col="doc_id"
-        )
+    sigs = minhash_signatures_pandas(
+        ctx.docs_delta, k=MINHASH_K, n=SHINGLE_N, id_col="doc_id"
     )
-    if plan.delta_parts:
-        sinks.write_partitioned(
-            sigs_new.withColumn("part_id", ctx.part_of("id")),
-            ctx.out_root,
-            "canon_signatures",
-            shuffle=False,
-            full_overwrite=not plan.delta_ok,
+    if not plan.delta_parts:
+        # a repair with no changed part: no new signature
+        return sigs, ctx.read("canon_signatures", plan.unchanged).drop(
+            "part_id"
         )
+    obs = Observation()
+    sinks.write_partitioned(
+        sigs.withColumn("part_id", ctx.part_of("id")).observe(
+            obs, F.collect_set("part_id").alias("parts")
+        ),
+        ctx.out_root,
+        "canon_signatures",
+        shuffle=False,
+        full_overwrite=not plan.delta_ok,
+    )
+    written = obs.get["parts"]
     ctx.lap("signatures")
+    sigs_new = ctx.read("canon_signatures", written).drop("part_id")
     if not (plan.delta_ok and plan.unchanged):
         return sigs_new, sigs_new
-    old = ctx.read("canon_signatures", plan.unchanged).drop("part_id")
-    return sigs_new, old.unionByName(sigs_new)
+    both = ctx.read("canon_signatures", [*plan.unchanged, *written])
+    return sigs_new, both.drop("part_id")
 
 
 def _stage_edges(ctx: _CanonRun, sigs_new, sigs_all):
@@ -957,42 +998,51 @@ def _stage_edges(ctx: _CanonRun, sigs_new, sigs_all):
         rows_per_band=LSH_ROWS_PER_BAND,
         max_bucket=LSH_BUCKET_CAP,
     )
-    band_stats, cand_parts, docs_verify = {}, [], ctx.docs
+    edge_stats, cand_parts, docs_verify = {}, [], ctx.docs
     if plan.reuse:
-        candidates = materialize(
+        candidates, seen = ctx.pin(
             lsh_candidate_pairs_against(
-                sigs_new, sigs_all, stats_out=band_stats, **geometry
-            )
+                sigs_new, sigs_all, stats_out=edge_stats, **geometry
+            ),
+            parts=ctx.parts_of("id_a", "id_b"),
         )
-        cand_parts = ctx.parts_of(candidates, "id_a", "id_b")
+        cand_parts = sorted(seen["parts"])
         if len(cand_parts) < len(plan.parts_on_disk):
             docs_verify = ctx.view(cand_parts)
     else:
-        candidates = lsh_candidate_pairs(
-            sigs_all, materialize=False, **geometry
+        candidates = materialize(
+            lsh_candidate_pairs(sigs_all, materialize=False, **geometry)
         )
-    edges = new_edges = verify_candidate_pairs(
+    edges = verify_candidate_pairs(
         docs_verify,
         candidates,
         plan.jaccard_threshold,
         id_col="doc_id",
         shingle_n=SHINGLE_N,
-    )
-    if plan.delta_ok and plan.unchanged:
-        # pinned apart from the merge: composed assignment consumes
-        # the NEW edges alone (the only merges an additive run makes)
-        edges = new_edges = materialize(new_edges)
+    ).withColumn("is_new", F.lit(True))
     if plan.reuse and "edges" in plan.tables:
         keep = list(plan.unchanged)
         kept = ctx.read("edges").where(
             ctx.part_of("id_a").isin(keep) & ctx.part_of("id_b").isin(keep)
         )
-        edges = kept.select("id_a", "id_b", "jaccard").unionByName(edges)
+        edges = kept.select(
+            "id_a", "id_b", "jaccard", F.lit(False).alias("is_new")
+        ).unionByName(edges)
     ctx.lap("band_plan")
-    # one eager pin: CC, the entity rollup and the writes all read it
-    edges = materialize(edges)
+    # one eager pin: CC, the entity rollup and the writes read it, and
+    # composed assignment its NEW edges alone (the only merges an
+    # additive run makes), whose count the pin observes
+    edges, seen = ctx.pin(edges, new_edges=F.count_if("is_new"))
+    edge_stats["new_edges"] = seen["new_edges"]
+    new_edges = edges.where("is_new").drop("is_new")
+    edges = edges.drop("is_new")
     ctx.lap("verify_edges")
-    return edges, new_edges, band_stats, cand_parts
+    return edges, new_edges, edge_stats, cand_parts
+
+
+def _assign_hash():
+    """Per-doc term of a part's entity-assignment hash."""
+    return F.xxhash64(F.concat_ws("#", "doc_id", "canonical_id"))
 
 
 @dataclass
@@ -1000,9 +1050,12 @@ class _Assignment:
     """(part_id, doc_id, canonical_id) plus per-part hashes. On the
     composed path ``parted`` is LAZY over the persisted table, and the
     supernode remap also yields ``changed`` (relabeled ∪ new docs,
-    with their old label), ``members`` (the full membership of every
-    touched component + new docs), the touched ``old_labels`` and the
-    delta parts' doc hashes ``doc_h``."""
+    with their old label; lazy over pinned relations), ``members``
+    (the full membership of every touched component + new docs), the
+    touched ``old_labels``, the delta parts' doc hashes ``doc_h``, the
+    ``touched`` parts whose assignment moved (their hashes are
+    observed on the state write, see :func:`_stage_triples`), and the
+    partitions ``changed`` and the entity rewrite hash to."""
 
     parted: DataFrame
     hashes: dict
@@ -1010,6 +1063,10 @@ class _Assignment:
     members: DataFrame | None = None
     old_labels: DataFrame | None = None
     doc_h: DataFrame | None = None
+    touched: list | None = None
+    changed_parts: list | None = None
+    entity_parts: list | None = None
+    observed: Observation | None = None
 
     @property
     def composed(self) -> bool:
@@ -1026,7 +1083,7 @@ def _old_doc_hashes(ctx: _CanonRun) -> DataFrame:
     )
 
 
-def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
+def _compose_assignment(ctx: _CanonRun, new_edges, edge_stats, cand_parts):
     """Composed assignment for an ADDITIVE increment, or None when a
     data gate rejects it (the plan records which).
 
@@ -1036,36 +1093,22 @@ def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
     that supernode graph on the driver (labels are component minima,
     so min-composition is exact) and relabel. No full-corpus CC, docs
     scan or assignment pin: the run touches only the partitions the
-    increment reaches."""
+    increment reaches. Three actions: the new edges, their old labels,
+    and one pin that the additive gate, the relabeled parts and the
+    partitions the rewrites reach are observed on."""
     plan, spark = ctx.plan, ctx.spark
-    capped = band_stats.get("capped_buckets")
+    capped = edge_stats.get("capped_buckets")
     if capped != 0:
         plan.decide("assignment", "full", f"{capped} LSH bucket(s) capped")
         return None
-    old_doc_h = _old_doc_hashes(ctx)
-    new_doc_h = materialize(_doc_hashes(ctx.docs_delta))
-    # additive ⇔ every previously-known doc of the changed parts is
-    # still present with identical content (one narrow pruned probe)
-    nonadditive = (
-        old_doc_h.join(new_doc_h, "doc_id", "left")
-        .where(~F.col("h").eqNullSafe(F.col("old_h")))
-        .limit(1)
-        .count()
-    )
-    ctx.lap("compose_gate")
-    if nonadditive:
-        plan.decide("assignment", "full", "a known doc vanished or changed")
-        return None
-    # the supernode graph in TWO jobs, no shuffle: the new edge pairs,
-    # then one pruned scan of the narrow persisted assignment
-    edge_rows = (
-        new_edges.select("id_a", "id_b").limit(COMPOSE_EDGE_CAP + 1).collect()
-    )
-    if len(edge_rows) > COMPOSE_EDGE_CAP:
+    if edge_stats["new_edges"] > COMPOSE_EDGE_CAP:
         plan.decide(
             "assignment", "full", f"over {COMPOSE_EDGE_CAP} new edges"
         )
         return None
+    # the supernode graph: the new edge pairs (at most the cap), then
+    # one pruned scan of the narrow persisted assignment
+    edge_rows = new_edges.select("id_a", "id_b").collect()
     old_assign = ctx.read("canon_assignment")
     endpoints = sinks.local_frame(
         spark,
@@ -1102,29 +1145,84 @@ def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
     remap_df = sinks.local_frame(
         spark, sorted((k, v) for k, v in comp.items() if k != v), schema
     )
-    # ONE filtered scan of the persisted assignment yields the
-    # relabeled docs AND the full membership of every touched
-    # component. Crash-safe: the state wave lands strictly after the
-    # output wave, so a rerun after any crash reads the same old state.
-    affected = materialize(
-        old_assign.join(F.broadcast(comp_df), "canonical_id").select(
-            "doc_id", "canonical_id", "new_canonical", "part_id"
+    # ONE pin holds two row kinds. "a": a filtered scan of the
+    # persisted assignment — the relabeled docs AND the full membership
+    # of every touched component. "d": every doc of the changed parts
+    # with its new and persisted hash, and its label under the remap:
+    # additive ⇔ every previously-known doc is still present with
+    # identical content, and a doc with no old hash is new. Crash-safe:
+    # the state wave lands strictly after the output wave, so a rerun
+    # after any crash reads the same old state.
+    comp_b = F.broadcast(comp_df)  # one broadcast serves both kinds
+    # the hash diff as ONE aggregation over both sides; min(text) per
+    # doc_id is the docs view's own url dedup (:meth:`_CanonRun.view`)
+    none = F.lit(None)
+    diff = (
+        ctx.durable.where(_in_parts(plan.delta_parts))
+        .select(
+            F.col("url").alias("doc_id"),
+            "text",
+            F.lit(True).alias("seen"),
+            none.cast("long").alias("old_h"),
         )
-    )
-    ctx.lap("compose_affected_scan")
-    relabeled = affected.where(F.col("canonical_id") != F.col("new_canonical"))
-    new_docs = materialize(
-        new_doc_h.join(old_doc_h.select("doc_id"), "doc_id", "left_anti")
-        .join(
-            F.broadcast(comp_df.withColumnRenamed("canonical_id", "doc_id")),
-            "doc_id",
-            "left",
+        .unionByName(
+            _old_doc_hashes(ctx).select(
+                "doc_id",
+                none.cast("string").alias("text"),
+                none.cast("boolean").alias("seen"),
+                "old_h",
+            )
         )
+        .groupBy("doc_id")
+        .agg(F.min("text").alias("text"), F.max("seen").alias("seen"),
+             F.max("old_h").alias("old_h"))
         .select(
             "doc_id",
-            F.coalesce("new_canonical", "doc_id").alias("canonical_id"),
+            F.when(F.col("seen"), F.xxhash64("text")).alias("h"),
+            "old_h",
         )
     )
+    docs = (
+        diff.join(comp_b, diff["doc_id"] == comp_b["canonical_id"], "left")
+        .select(
+            F.lit("d").alias("kind"),
+            "doc_id",
+            F.coalesce("new_canonical", "doc_id").alias("canonical_id"),
+            F.lit(None).cast("string").alias("new_canonical"),
+            F.lit(None).cast("int").alias("part_id"),
+            "h",
+            "old_h",
+        )
+    )
+    members = old_assign.join(comp_b, "canonical_id").select(
+        F.lit("a").alias("kind"),
+        "doc_id",
+        "canonical_id",
+        "new_canonical",
+        "part_id",
+        F.lit(None).cast("long").alias("h"),
+        F.lit(None).cast("long").alias("old_h"),
+    )
+    moved = (F.col("kind") == "a") & (
+        F.col("canonical_id") != F.col("new_canonical")
+    )
+    is_new = (F.col("kind") == "d") & F.col("old_h").isNull()
+    both, seen = ctx.pin(
+        members.unionByName(docs),
+        nonadditive=F.count_if(
+            F.col("old_h").isNotNull() & ~F.col("h").eqNullSafe(F.col("old_h"))
+        ),
+        relabel_parts=F.collect_set(F.when(moved, F.col("part_id"))),
+        relabel_out=ctx.parts_of("canonical_id", "new_canonical", where=moved),
+        new_out=ctx.parts_of("canonical_id", where=is_new),
+    )
+    ctx.lap("compose_affected_scan")
+    if seen["nonadditive"]:
+        plan.decide("assignment", "full", "a known doc vanished or changed")
+        return None
+    affected = both.where(F.col("kind") == "a")
+    relabeled = both.where(moved)
+    new_docs = both.where(is_new).select("doc_id", "canonical_id")
     # the full-corpus assignment as a LAZY broadcast-remap: consumers
     # that prune by part_id stay pruned
     parted = (
@@ -1141,26 +1239,24 @@ def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
             )
         )
     )
-    # re-hash only parts holding a new or relabeled doc; every other
-    # part's snapshot hash carries over
-    relabel_parts = relabeled.select("part_id").distinct().collect()
-    touched = sorted({*plan.delta_parts, *(r[0] for r in relabel_parts)})
+    # only parts holding a new or relabeled doc change their hash;
+    # every other part's snapshot hash carries over
+    touched = sorted({*plan.delta_parts, *seen["relabel_parts"]})
     hashes = {p: h for p, h in plan.snap["assign"].items() if p not in touched}
-    ctx.lap("compose_new_docs")
-    hashes.update(_assign_hashes(parted.where(_in_parts(touched))))
-    ctx.lap("compose_hashes")
-    changed = materialize(
-        relabeled.select(
-            "doc_id",
-            F.col("new_canonical").alias("canonical_id"),
-            F.col("canonical_id").alias("old_canonical"),
-        ).unionByName(
-            new_docs.withColumn("old_canonical", F.lit(None).cast("string"))
-        )
+    changed = relabeled.select(
+        "doc_id",
+        F.col("new_canonical").alias("canonical_id"),
+        F.col("canonical_id").alias("old_canonical"),
+    ).unionByName(
+        new_docs.withColumn("old_canonical", F.lit(None).cast("string"))
     )
     plan.decide(
         "assignment", "composed", f"additive: {len(edge_rows)} new edge(s)"
     )
+    # the entity rewrite removes every touched label (all comp nodes)
+    # and recomputes the labels of the touched members and new docs:
+    # their partitions are the comp map's and the new docs' labels'
+    new_out = set(seen["new_out"])
     return _Assignment(
         parted,
         hashes,
@@ -1169,18 +1265,22 @@ def _compose_assignment(ctx: _CanonRun, new_edges, band_stats, cand_parts):
             "doc_id", F.col("new_canonical").alias("canonical_id")
         ).unionByName(new_docs),
         old_labels=comp_df.select("canonical_id"),
-        doc_h=new_doc_h,
+        doc_h=both.where((F.col("kind") == "d") & F.col("h").isNotNull())
+        .select("doc_id", "h"),
+        touched=touched,
+        changed_parts=sorted(set(seen["relabel_out"]) | new_out),
+        entity_parts=sorted(ctx.driver_parts(comp) | new_out),
     )
 
 
-def _stage_assignment(ctx, edges, new_edges, band_stats, cand_parts):
+def _stage_assignment(ctx, edges, new_edges, edge_stats, cand_parts):
     """Composed when eligible and every data gate passes; otherwise
     the global connected components over all docs — the source of
     truth for deletions, re-crawls, parameter changes, capped buckets
     and repair runs."""
     asg = None
     if ctx.plan.compose_ok:
-        asg = _compose_assignment(ctx, new_edges, band_stats, cand_parts)
+        asg = _compose_assignment(ctx, new_edges, edge_stats, cand_parts)
     if asg is None:
         parted = (
             materialize(canonical_entities(ctx.docs, edges, id_col="doc_id"))
@@ -1213,13 +1313,13 @@ def _rewrite_partitions(ctx, tbl, parts, removal, key, new_rows):
     identically). Returns the pinned replacement (it overwrites its
     own input) and the partitions it leaves empty."""
     old = ctx.read(tbl, parts)
-    out = materialize(
+    out, seen = ctx.pin(
         old.join(removal, key, "left_anti").unionByName(
             new_rows.select(*old.columns)
-        )
+        ),
+        present=F.collect_set("part_id"),
     )
-    present = {r[0] for r in out.select("part_id").distinct().collect()}
-    return out, sorted(set(parts) - present)
+    return out, sorted(set(parts) - set(seen["present"]))
 
 
 def _stage_entities(ctx: _CanonRun, asg: _Assignment):
@@ -1232,23 +1332,24 @@ def _stage_entities(ctx: _CanonRun, asg: _Assignment):
     parts)."""
     plan = ctx.plan
     if asg.composed and "entities" in plan.tables:
-        ents_new = materialize(
-            entity_table(
-                asg.members, id_col="doc_id", max_members=MAX_MEMBERS
-            ).withColumn("part_id", ctx.part_of("canonical_id"))
-        )
-        # every touched OLD label (losers vanish, winners are
-        # replaced) ∪ every recomputed label
-        removal = asg.old_labels.unionByName(
-            ents_new.select("canonical_id")
-        ).distinct()
-        parts = ctx.parts_of(removal, "canonical_id")
+        parts = asg.entity_parts
         if _scatter_gate(plan, "entities_ivm", parts):
+            # read twice by the rewrite's one pin (removal and union)
+            ents_new = materialize(
+                entity_table(
+                    asg.members, id_col="doc_id", max_members=MAX_MEMBERS
+                ).withColumn("part_id", ctx.part_of("canonical_id"))
+            )
+            # every touched OLD label (losers vanish, winners are
+            # replaced) ∪ every recomputed label
+            removal = asg.old_labels.unionByName(
+                ents_new.select("canonical_id")
+            ).distinct()
             out, emptied = _rewrite_partitions(
                 ctx, "entities", parts, F.broadcast(removal),
                 "canonical_id", ents_new,
             )
-            ctx.defer(ctx.writes, out, "entities", False)
+            ctx.defer(ctx.writes, out, "entities", False, shuffle=False)
             return parts, emptied
     else:
         plan.decide("entities_ivm", False, "no composed assignment")
@@ -1275,16 +1376,25 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
     if "triples" not in plan.tables:
         # a corpus where NO page yields a mention has no triples table
         plan.decide("triples_ivm", False, "no triples table")
+        if asg.composed:
+            # no state write to observe the touched parts' hashes on
+            touched = asg.parted.where(_in_parts(asg.touched))
+            asg.hashes.update(_assign_hashes(touched))
         return None, []
     triples = sinks.read_committed(
         ctx.spark, ctx.out_root, "triples", statuses=("committed", "streamed")
     )
-    old = plan.snap["assign"] if plan.delta_ok else {}
-    new = asg.hashes
-    affected = sorted(
-        {p for p in {*new, *old} if new.get(p) != old.get(p)}
-        | {*plan.delta_parts}
-    )
+    if asg.composed:
+        # only the touched parts' assignment moved (their hashes are
+        # observed on the state write below)
+        affected = asg.touched
+    else:
+        old = plan.snap["assign"] if plan.delta_ok else {}
+        new = asg.hashes
+        affected = sorted(
+            {p for p in {*new, *old} if new.get(p) != old.get(p)}
+            | {*plan.delta_parts}
+        )
     written, emptied, raw, doc_h = None, [], None, asg.doc_h
     # every changed doc lives in an affected part
     assign_aff = asg.parted.where(_in_parts(affected)).select(
@@ -1294,7 +1404,7 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
     if ivm and len(affected) >= len(plan.parts_on_disk):
         ivm = plan.decide("triples_ivm", False, "every source part affected")
     if ivm:
-        changed = asg.changed
+        changed, out_parts = asg.changed, asg.changed_parts
         if changed is None:
             # DOC-granular: an append leaves most of a part's docs
             # byte-identical, and treating them all as changed would
@@ -1308,16 +1418,17 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
             old_assign = ctx.read("canon_assignment", affected).select(
                 "doc_id", F.col("canonical_id").alias("old_canonical")
             )
-            changed = materialize(
+            changed, seen = ctx.pin(
                 assign_aff.join(old_assign, "doc_id", "full_outer")
                 .join(content_changed, "doc_id", "left")
                 .where(
                     ~F.col("old_canonical").eqNullSafe(F.col("canonical_id"))
                     | F.col("_cc")
                 )
-                .drop("_cc")
+                .drop("_cc"),
+                out=ctx.parts_of("canonical_id", "old_canonical"),
             )
-        out_parts = ctx.parts_of(changed, "canonical_id", "old_canonical")
+            out_parts = sorted(seen["out"])
         if _scatter_gate(plan, "triples_ivm", out_parts):
             written = out_parts
         if out_parts and written is not None:
@@ -1345,9 +1456,15 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
         )
     if raw is not None:
         full = written is None
-        ctx.defer(ctx.writes, raw, "canon_triples_raw", full)
+        ctx.defer(ctx.writes, raw, "canon_triples_raw", full, shuffle=full)
+        # the dedup groups within the write's part_id partitions: its
+        # one shuffle is the repartition
         ctx.defer(
-            ctx.writes, dedup_canonical_triples(raw), "triples_canonical", full
+            ctx.writes,
+            dedup_canonical_triples(raw.repartition("part_id")),
+            "triples_canonical",
+            full,
+            shuffle=False,
         )
     # the assignment and per-doc text hashes for the NEXT run's diff —
     # affected parts only on the partition-granular and composed paths
@@ -1357,13 +1474,27 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
     assign_out = asg.parted.select("doc_id", "canonical_id", "part_id")
     if partial:
         assign_out = assign_out.where(_in_parts(affected))
+    if asg.composed:
+        # the touched parts' new hashes ride on the state write's own
+        # job: one bit_xor per part (a part with no rows reads null)
+        asg.observed = Observation()
+        assign_out = assign_out.observe(asg.observed, *[
+            F.bit_xor(F.when(F.col("part_id") == p, _assign_hash())).alias(
+                str(p)
+            )
+            for p in affected
+        ])
     doc_h_out = doc_h if partial else _doc_hashes(ctx.docs)
-    ctx.defer(ctx.states, assign_out, "canon_assignment", not partial)
+    ctx.defer(
+        ctx.states, assign_out, "canon_assignment", not partial,
+        shuffle=not partial,
+    )
     ctx.defer(
         ctx.states,
         doc_h_out.withColumn("part_id", ctx.part_of("doc_id")),
         "canon_doc_hash",
         not partial,
+        shuffle=not partial,
     )
     return written, emptied
 
@@ -1394,6 +1525,10 @@ def _commit(ctx: _CanonRun, run_id: str, asg, written: dict, emptied: dict):
     _rmtree_parts(out_root, ("entities",), emptied["entities"])
     _run_wave(ctx.states)
     _rmtree_parts(out_root, _CANON_STATE, plan.vanished)
+    if asg.observed is not None:
+        asg.hashes.update(
+            (int(p), h) for p, h in asg.observed.get.items() if h is not None
+        )
     ctx.lap("write_state")
 
     # footer counts of the just-written partitions, no job. A partially
@@ -1531,10 +1666,10 @@ def run_canonicalize_phase(
     ctx = _CanonRun(spark, out_root, plan, durable, has_streamed, t0)
     ctx.lap("change_detect")
     sigs_new, sigs_all = _stage_signatures(ctx)
-    edges, new_edges, band_stats, cand_parts = _stage_edges(
+    edges, new_edges, edge_stats, cand_parts = _stage_edges(
         ctx, sigs_new, sigs_all
     )
-    asg = _stage_assignment(ctx, edges, new_edges, band_stats, cand_parts)
+    asg = _stage_assignment(ctx, edges, new_edges, edge_stats, cand_parts)
     # every output write is DEFERRED into _commit's first wave
     edges_out = edges.withColumn("part_id", ctx.part_of("id_a"))
     ctx.defer(ctx.writes, edges_out, "edges", True)

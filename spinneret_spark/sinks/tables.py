@@ -24,10 +24,9 @@ rows, and appends write one parquet file with pyarrow under a
 dot-prefixed temp name, then rename it into place (:func:`_write_rows`)
 — no commit-protocol question or append runs a Spark job. The files
 stay plain parquet that Spark reads as one table alongside files
-Spark itself wrote. Frames that must join data (the
-:func:`read_committed` parts broadcast, the compose remaps) are Arrow
-local relations made by :func:`local_frame`: reading one runs no
-Python-worker task.
+Spark itself wrote. Frames that must join data (the compose remaps)
+are Arrow local relations made by :func:`local_frame`: reading one
+runs no Python-worker task.
 
 On a cluster with the Iceberg jar, ``write_partitioned`` swaps for
 ``df.writeTo(table).overwritePartitions()`` behind the same call
@@ -153,6 +152,43 @@ def append_partitioned(df: DataFrame, root: str, table_name: str) -> None:
     df.write.partitionBy("part_id").mode("append").parquet(
         os.path.join(root, table_name)
     )
+
+
+def part_files(root: str, table_name: str, parts=None) -> dict[int, set[str]]:
+    """Data file names per ``part_id=`` directory of a table
+    (``.``/``_``-prefixed names are skipped, as Spark's listing skips
+    them) — a driver-side listing, no Spark job. ``parts=None`` lists
+    every partition on disk; a listed part with no directory is absent
+    from the result."""
+    path = os.path.join(root, table_name)
+    if parts is None:
+        parts = [
+            int(n.split("=", 1)[1])
+            for n in _listdir(path)
+            if n.startswith("part_id=")
+        ]
+    out = {}
+    for p in parts:
+        d = os.path.join(path, f"part_id={p}")
+        if os.path.isdir(d):
+            out[p] = {n for n in _listdir(d) if not n.startswith((".", "_"))}
+    return out
+
+
+def footer_rows(root: str, table_name: str, files: dict) -> dict[int, int]:
+    """Rows per part of ``files`` (part_id → file names, as
+    :func:`part_files` returns them), summed from their parquet
+    footers — metadata reads on the driver, no Spark job."""
+    path = os.path.join(root, table_name)
+    return {
+        p: sum(
+            pq.ParquetFile(
+                os.path.join(path, f"part_id={p}", n)
+            ).metadata.num_rows
+            for n in names
+        )
+        for p, names in files.items()
+    }
 
 
 def read_table(spark: SparkSession, root: str, table_name: str) -> DataFrame:
@@ -963,7 +999,6 @@ def read_committed(
     rows = manifest_rows(spark, root, [table_name])
     batch_statuses = [s for s in statuses if s != "streamed"]
     part_ids = committed_parts_from_rows(rows, batch_statuses, latest_run_only)
-    parts = local_frame(spark, [(p,) for p in part_ids], "part_id int")
     markers = sorted(
         {r["run_id"] for r in rows if r["status"] == BATCH_MARKER}
     )
@@ -980,14 +1015,14 @@ def read_committed(
         if want_streamed or stream_evidence
         else None
     )
+    # at most ``buckets`` ids: a partition filter prunes the listing
+    # and runs no broadcast job
+    committed = F.col("part_id").isin(part_ids)
     if read is None:
         # pure-batch root: plain read, no schema merge, no tag filter
-        data = read_table(spark, root, table_name)
-        return data.join(F.broadcast(parts), "part_id", "inner")
+        return read_table(spark, root, table_name).where(committed)
     data = read[0]
-    batch_rows = data.where(F.col("_batch_run").isNull()).join(
-        F.broadcast(parts), "part_id", "inner"
-    )
+    batch_rows = data.where(F.col("_batch_run").isNull() & committed)
     if want_streamed and markers:
         stream_rows = data.where(F.col("_batch_run").isin(markers))
         return batch_rows.unionByName(stream_rows).drop("_batch_run")

@@ -27,9 +27,12 @@ Per micro-batch, in order (the Iceberg snapshot ordering):
    query — runs exactly once), then every table's rows carry the
    attempt id in ``_batch_run`` (a per-file dictionary-encoded
    constant, ~free) and append into ``part_id=`` dirs;
-5. **marker commit** — one ``collect`` counts every table's rows per
-   part, then ONE manifest write holds the per-part ``streamed``
-   rows, each table's ``BATCH_MARKER`` (rows_out = batch total, so
+5. **marker commit** — each table's rows per part come from the
+   parquet footers of the files its append created (the part dirs
+   listed just before and after the write; every file of one Spark
+   write carries that write's job uuid, so a crashed attempt's
+   orphans never count), then ONE manifest write holds the per-part
+   ``streamed`` rows, each table's ``BATCH_MARKER`` (rows_out = batch total, so
    ``manifest_summary`` sums streamed totals without a count job)
    and — first batch only — the first table's ``BUCKETS_META``
    record that makes a later bucket-count mismatch fail loudly.
@@ -45,16 +48,17 @@ Readers use :func:`spinneret_spark.sinks.tables.read_streamed_consistent`
 rows from an attempt that crashed before its marker are invisible
 forever, and ``vacuum_streamed`` reclaims their bytes.
 
-Scale shape: the only per-batch driver work is two small manifest
-reads and two manifest appends; the data path is one checkpoint job,
-one append job per table and one count. State (watermark windows /
+Scale shape: the per-batch driver work is two small manifest reads,
+two manifest appends, a listing of each table's part dirs and the
+footers of the files the appends made; the data path is one checkpoint job and one append
+job per table (three jobs for the extract stream's two tables). State (watermark windows /
 first-seen markers) lives in Spark's state store; THIS layer only
 makes the emitted rows durable exactly-once.
 """
 
 from __future__ import annotations
 
-import functools
+import re
 import uuid
 from collections.abc import Callable
 
@@ -64,6 +68,41 @@ from pyspark.sql import functions as F
 from spinneret_spark.sinks import tables as sinks
 
 DEFAULT_BUCKETS = 16
+
+
+#: the job uuid Spark puts in every file name of one write
+_WRITE_UUID = re.compile(
+    r"^part-\d+-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})"
+)
+
+
+def _appended_rows(out_root: str, table: str, before: dict) -> dict[int, int]:
+    """Rows per part of the files one append created: the part dirs'
+    files now, minus ``before`` (the listing taken just before the
+    write), counted from their parquet footers. Orphans of a crashed
+    earlier attempt are in ``before`` and never count. Every file of
+    one Spark write carries that write's job uuid, so new files with
+    two uuids mean another writer appended concurrently — which the
+    single-writer contract rules out — and the counts would be
+    wrong."""
+    new = {
+        p: names - before.get(p, set())
+        for p, names in sinks.part_files(out_root, table).items()
+    }
+    new = {p: names for p, names in new.items() if names}
+    uuids = set()
+    for names in new.values():
+        for n in names:
+            m = _WRITE_UUID.match(n)
+            uuids.add(m.group(1) if m else n)
+    if len(uuids) > 1:
+        raise RuntimeError(
+            f"{table}: the append left files of {len(uuids)} writes "
+            "(expected one); another writer appended concurrently"
+        )
+    return {
+        p: n for p, n in sinks.footer_rows(out_root, table, new).items() if n
+    }
 
 
 def append_attempt(
@@ -96,29 +135,15 @@ def append_attempt(
         [(t, -1, 0, sinks.STREAM_INTENT) for t in tables],
     )
     frozen = batch.localCheckpoint()
-    frames = {
-        t: project(frozen).withColumn("_batch_run", F.lit(attempt))
-        for t, project in tables.items()
-    }
-    for t, df in frames.items():
-        sinks.append_partitioned(df, out_root, t)
-    counts = (
-        functools.reduce(
-            DataFrame.unionByName,
-            [
-                df.select(F.lit(t).alias("t"), "part_id")
-                for t, df in frames.items()
-            ],
-        )
-        .groupBy("t", "part_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
     totals = dict.fromkeys(tables, 0)
     rows = []
-    for r in counts:
-        totals[r["t"]] += r["n"]
-        rows.append((r["t"], r["part_id"], r["n"], "streamed"))
+    for t, project in tables.items():
+        df = project(frozen).withColumn("_batch_run", F.lit(attempt))
+        before = sinks.part_files(out_root, t)
+        sinks.append_partitioned(df, out_root, t)
+        for p, n in sorted(_appended_rows(out_root, t, before).items()):
+            totals[t] += n
+            rows.append((t, p, n, "streamed"))
     # markers go in even for an empty batch, so its replay skips
     rows += [(t, -1, n, sinks.BATCH_MARKER) for t, n in totals.items()]
     if not prior:

@@ -115,17 +115,11 @@ def test_delta_canonicalize_reshingles_only_changed_parts_and_matches_scratch(
     assert _table_snapshot(spark, root) == want
 
 
-def test_delta_cycle_under_persist_materialize(
-    spark, tmp_path_factory, monkeypatch
-):
-    """Cluster-seam hygiene (VERDICT r5 item 7): the two-wave commit
-    ordering and IVM equality must hold under
-    SPINNERET_MATERIALIZE=persist (the real-cluster pin mode — cached
-    lineage instead of localCheckpoint) exactly as under the default
-    local mode: a full run + additive delta + forced scratch must all
-    agree."""
-    monkeypatch.setenv("SPINNERET_MATERIALIZE", "persist")
-    root = str(tmp_path_factory.mktemp("canon_persist"))
+def test_full_delta_scratch_cycle_agrees(spark, tmp_path_factory):
+    """The two-wave commit ordering and IVM equality over one cycle: a
+    full run, an additive streamed delta and a forced scratch run must
+    all agree."""
+    root = str(tmp_path_factory.mktemp("canon_cycle"))
     pages = generate_pages(
         spark, 300, near_dup_fraction=0.25, include_reference_eml=False
     )

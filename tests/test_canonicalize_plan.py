@@ -73,6 +73,7 @@ def test_parts_of_skips_null_ids(spark):
     maps to no partition; ``xxhash64(null)`` alone would be the seed 42,
     i.e. part 42 % buckets."""
     ctx = object.__new__(pipeline._CanonRun)
+    ctx.spark = spark
     ctx.plan = SimpleNamespace(buckets=5)
     df = spark.createDataFrame([("a", None), ("b", "b")], "x string, y string")
     hashed = df.select(
@@ -80,9 +81,19 @@ def test_parts_of_skips_null_ids(spark):
         F.pmod(F.xxhash64("y"), F.lit(5)).alias("y"),
     ).collect()
     want = sorted({hashed[0]["x"], hashed[1]["x"], hashed[1]["y"]})
-    assert ctx.parts_of(df, "x", "y") == want
+
+    def parts(frame, *cols, where=None):
+        return sorted(frame.agg(ctx.parts_of(*cols, where=where)).first()[0])
+
+    assert parts(df, "x", "y") == want
     assert 42 % 5 not in want  # the null would have added a part
-    assert ctx.parts_of(df.where(F.col("y").isNull()), "y") == []
+    assert parts(df.where(F.col("y").isNull()), "y") == []
+    assert parts(df, "x", where=F.col("y").isNull()) == [hashed[0]["x"]]
+    # the same hash over driver-side ids runs no Spark job
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert sorted(ctx.driver_parts(["a", "b", None])) == want
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 #: parts no base page lands in: the fuzzer's batch appends extract
