@@ -1216,7 +1216,7 @@ def _compose_assignment(ctx: _CanonRun, new_edges, edge_stats, cand_parts):
         relabel_out=ctx.parts_of("canonical_id", "new_canonical", where=moved),
         new_out=ctx.parts_of("canonical_id", where=is_new),
     )
-    ctx.lap("compose_affected_scan")
+    ctx.lap("compose_gate")
     if seen["nonadditive"]:
         plan.decide("assignment", "full", "a known doc vanished or changed")
         return None
