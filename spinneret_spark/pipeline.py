@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spinneret_spark.extract.htmltext import extract_text
-from spinneret_spark.functions.hashing import MINHASH_K, det_id
+from spinneret_spark.functions.hashing import det_id
 from spinneret_spark.materialize import materialize
 from spinneret_spark.operators.canonicalize import (
     canonical_entities,
@@ -618,23 +618,6 @@ COMPOSE_EDGE_CAP = 100_000
 CANON_OUTPUTS = ("edges", "entities", "triples_canonical")
 _CANON_STATE = ("canon_signatures", "canon_assignment", "canon_doc_hash")
 _CANON_TABLES = ("triples", "canon_triples_raw", *CANON_OUTPUTS, *_CANON_STATE)
-_TRIPLE_COLS = (
-    "subj string, pred string, obj string, pred_id string, obj_id string, "
-    "lang string, det_id string"
-)
-#: the schemas of the tables the phase reads back, so a read infers
-#: nothing (schema inference is one Spark job per read)
-_CANON_SCHEMAS = {
-    "canon_signatures": "id string, "
-    + ", ".join(f"mh{i} long" for i in range(MINHASH_K))
-    + ", part_id int",
-    "edges": "id_a string, id_b string, jaccard double, part_id int",
-    "entities": "canonical_id string, n_members long, "
-    "members array<string>, part_id int",
-    "canon_triples_raw": f"{_TRIPLE_COLS}, src_id string, part_id int",
-    "canon_assignment": "doc_id string, canonical_id string, part_id int",
-    "canon_doc_hash": "doc_id string, h long, part_id int",
-}
 
 
 def _canon_params_hash(jaccard_threshold: float, buckets: int) -> int:
@@ -873,7 +856,8 @@ class _CanonRun:
 
     def read(self, tbl: str, parts=None) -> DataFrame:
         path = os.path.join(self.out_root, tbl)
-        df = self.spark.read.schema(_CANON_SCHEMAS[tbl]).parquet(path)
+        schema = sinks.table_schema(self.out_root, tbl)
+        df = self.spark.read.schema(schema).parquet(path)
         return df if parts is None else df.where(_in_parts(parts))
 
     def part_of(self, col: str):
@@ -918,9 +902,10 @@ class _CanonRun:
     def defer(self, wave: list, df: DataFrame, tbl: str, full: bool,
               shuffle: bool = True):
         """Queue a write. ``shuffle=False`` (no pre-write repartition)
-        only where the frame already holds few parts, laid out by
-        part: a partition-granular rewrite (the old parts' files plus
-        a few new rows) or partial diff state."""
+        only where the frame is already laid out by part: each Spark
+        partition writes one file per part it holds, so a frame out of
+        a join or aggregation keyed on anything else writes up to
+        (partitions × parts) files without the repartition."""
         wave.append(
             lambda: sinks.write_partitioned(
                 df, self.out_root, tbl, shuffle=shuffle, full_overwrite=full
@@ -945,6 +930,7 @@ def _stage_signatures(ctx: _CanonRun):
     The write is the one action: later stages read the new signatures
     back from the partitions it wrote (observed on its job), so the
     kernel runs once without a pin."""
+    from spinneret_spark.functions.hashing import MINHASH_K
     from spinneret_spark.operators.dedup import minhash_signatures_pandas
 
     plan = ctx.plan
@@ -1054,7 +1040,8 @@ class _Assignment:
     (the full membership of every touched component + new docs), the
     touched ``old_labels``, the delta parts' doc hashes ``doc_h``, the
     ``touched`` parts whose assignment moved (their hashes are
-    observed on the state write, see :func:`_stage_triples`), and the
+    observed on the state write, see :func:`_stage_triples`), their
+    new assignment rows ``state`` laid out by part, and the
     partitions ``changed`` and the entity rewrite hash to."""
 
     parted: DataFrame
@@ -1064,6 +1051,7 @@ class _Assignment:
     old_labels: DataFrame | None = None
     doc_h: DataFrame | None = None
     touched: list | None = None
+    state: DataFrame | None = None
     changed_parts: list | None = None
     entity_parts: list | None = None
     observed: Observation | None = None
@@ -1155,7 +1143,10 @@ def _compose_assignment(ctx: _CanonRun, new_edges, edge_stats, cand_parts):
     # after any crash reads the same old state.
     comp_b = F.broadcast(comp_df)  # one broadcast serves both kinds
     # the hash diff as ONE aggregation over both sides; min(text) per
-    # doc_id is the docs view's own url dedup (:meth:`_CanonRun.view`)
+    # doc_id is the docs view's own url dedup (:meth:`_CanonRun.view`).
+    # Its shuffle is by part (part_id is a function of doc_id, so the
+    # groups are the same): the pinned rows are laid out by part and
+    # the state writes need no second shuffle
     none = F.lit(None)
     diff = (
         ctx.durable.where(_in_parts(plan.delta_parts))
@@ -1173,7 +1164,9 @@ def _compose_assignment(ctx: _CanonRun, new_edges, edge_stats, cand_parts):
                 "old_h",
             )
         )
-        .groupBy("doc_id")
+        .withColumn("part_id", ctx.part_of("doc_id"))
+        .repartition("part_id")
+        .groupBy("part_id", "doc_id")
         .agg(F.min("text").alias("text"), F.max("seen").alias("seen"),
              F.max("old_h").alias("old_h"))
         .select(
@@ -1243,6 +1236,32 @@ def _compose_assignment(ctx: _CanonRun, new_edges, edge_stats, cand_parts):
     # every other part's snapshot hash carries over
     touched = sorted({*plan.delta_parts, *seen["relabel_parts"]})
     hashes = {p: h for p, h in plan.snap["assign"].items() if p not in touched}
+    # the touched parts' rows for the state write: the persisted rows,
+    # a relabeled or new doc's pinned row taking precedence, grouped
+    # within ONE by-part shuffle, so each part lands in one file with
+    # no broadcast (``parted`` restricted to ``touched``)
+    cid = F.col("canonical_id")
+    state = (
+        old_assign.where(_in_parts(touched))
+        .select("part_id", "doc_id", "canonical_id", F.lit(False).alias("new"))
+        .unionByName(
+            relabeled.select(
+                "part_id", "doc_id", F.col("new_canonical").alias("canonical_id")
+            )
+            .unionByName(
+                new_docs.select(
+                    ctx.part_of("doc_id").alias("part_id"), "doc_id",
+                    "canonical_id",
+                )
+            )
+            .withColumn("new", F.lit(True))
+        )
+        .repartition("part_id")
+        .groupBy("part_id", "doc_id")
+        .agg(F.coalesce(F.max(F.when(F.col("new"), cid)), F.max(cid)).alias(
+            "canonical_id"
+        ))
+    )
     changed = relabeled.select(
         "doc_id",
         F.col("new_canonical").alias("canonical_id"),
@@ -1268,6 +1287,7 @@ def _compose_assignment(ctx: _CanonRun, new_edges, edge_stats, cand_parts):
         doc_h=both.where((F.col("kind") == "d") & F.col("h").isNotNull())
         .select("doc_id", "h"),
         touched=touched,
+        state=state,
         changed_parts=sorted(set(seen["relabel_out"]) | new_out),
         entity_parts=sorted(ctx.driver_parts(comp) | new_out),
     )
@@ -1349,7 +1369,7 @@ def _stage_entities(ctx: _CanonRun, asg: _Assignment):
                 ctx, "entities", parts, F.broadcast(removal),
                 "canonical_id", ents_new,
             )
-            ctx.defer(ctx.writes, out, "entities", False, shuffle=False)
+            ctx.defer(ctx.writes, out, "entities", False)
             return parts, emptied
     else:
         plan.decide("entities_ivm", False, "no composed assignment")
@@ -1456,7 +1476,7 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
         )
     if raw is not None:
         full = written is None
-        ctx.defer(ctx.writes, raw, "canon_triples_raw", full, shuffle=full)
+        ctx.defer(ctx.writes, raw, "canon_triples_raw", full)
         # the dedup groups within the write's part_id partitions: its
         # one shuffle is the repartition
         ctx.defer(
@@ -1471,9 +1491,12 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
     # (a composed run's assignment provably changed only there, even
     # when the triple rewrite scatter-gated to a full overwrite)
     partial = written is not None or asg.composed
-    assign_out = asg.parted.select("doc_id", "canonical_id", "part_id")
-    if partial:
+    assign_out = asg.parted
+    if asg.composed:
+        assign_out = asg.state
+    elif partial:
         assign_out = assign_out.where(_in_parts(affected))
+    assign_out = assign_out.select("doc_id", "canonical_id", "part_id")
     if asg.composed:
         # the touched parts' new hashes ride on the state write's own
         # job: one bit_xor per part (a part with no rows reads null)
@@ -1485,16 +1508,20 @@ def _stage_triples(ctx: _CanonRun, asg: _Assignment):
             for p in affected
         ])
     doc_h_out = doc_h if partial else _doc_hashes(ctx.docs)
+    # composed state is laid out by part already (``asg.state`` and
+    # the compose pin each come out of a by-part shuffle); a global CC
+    # output or a doc-hash aggregation spreads every part over all its
+    # Spark partitions, one file each without the repartition
     ctx.defer(
         ctx.states, assign_out, "canon_assignment", not partial,
-        shuffle=not partial,
+        shuffle=not asg.composed,
     )
     ctx.defer(
         ctx.states,
         doc_h_out.withColumn("part_id", ctx.part_of("doc_id")),
         "canon_doc_hash",
         not partial,
-        shuffle=not partial,
+        shuffle=not asg.composed,
     )
     return written, emptied
 

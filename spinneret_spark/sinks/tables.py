@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import datetime
 import functools
+import json
 import os
 import uuid
 
@@ -46,7 +47,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import IntegerType, StructType, TimestampType
 
 MANIFEST_SCHEMA = (
     "run_id string, table_name string, part_id int, status string, "
@@ -173,6 +174,29 @@ def part_files(root: str, table_name: str, parts=None) -> dict[int, set[str]]:
         if os.path.isdir(d):
             out[p] = {n for n in _listdir(d) if not n.startswith((".", "_"))}
     return out
+
+
+#: the footer key under which Spark stores a written file's schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def table_schema(root: str, table_name: str) -> StructType:
+    """The schema a schema-inferring read of a Spark-written,
+    ``part_id=``-partitioned table finds: the Spark schema stored in
+    one data file's footer, plus ``part_id int`` — a driver-side
+    footer read where inference runs a Spark job. The table's
+    producer stays its one definition. Raises when no ``part_id=``
+    dir holds a data file, as an inferring read would."""
+    path = os.path.join(root, table_name)
+    for d in sorted(n for n in _listdir(path) if n.startswith("part_id=")):
+        for n in sorted(_listdir(os.path.join(path, d))):
+            if n.startswith((".", "_")):
+                continue
+            meta = pq.read_metadata(os.path.join(path, d, n)).metadata
+            return StructType.fromJson(
+                json.loads(meta[_SPARK_SCHEMA_KEY])
+            ).add("part_id", IntegerType())
+    raise FileNotFoundError(f"{path}: no data file to take a schema from")
 
 
 def footer_rows(root: str, table_name: str, files: dict) -> dict[int, int]:

@@ -32,8 +32,9 @@ Per micro-batch, in order (the Iceberg snapshot ordering):
    listed just before and after the write; every file of one Spark
    write carries that write's job uuid, so a crashed attempt's
    orphans never count), then ONE manifest write holds the per-part
-   ``streamed`` rows, each table's ``BATCH_MARKER`` (rows_out = batch total, so
-   ``manifest_summary`` sums streamed totals without a count job)
+   ``streamed`` rows, each table's ``BATCH_MARKER`` (rows_out = batch
+   total, so ``manifest_summary`` sums streamed totals without a count
+   job)
    and — first batch only — the first table's ``BUCKETS_META``
    record that makes a later bucket-count mismatch fail loudly.
 
@@ -48,12 +49,17 @@ Readers use :func:`spinneret_spark.sinks.tables.read_streamed_consistent`
 rows from an attempt that crashed before its marker are invisible
 forever, and ``vacuum_streamed`` reclaims their bytes.
 
-Scale shape: the per-batch driver work is two small manifest reads,
-two manifest appends, a listing of each table's part dirs and the
-footers of the files the appends made; the data path is one checkpoint job and one append
-job per table (three jobs for the extract stream's two tables). State (watermark windows /
-first-seen markers) lives in Spark's state store; THIS layer only
-makes the emitted rows durable exactly-once.
+Scale shape: the data path is one checkpoint job and one append job
+per table (three jobs for the extract stream's two tables). The
+per-batch driver work is two small manifest reads, two manifest
+appends, the footers of the files the appends made, and a listing of
+every file name in each table's part dirs before and after its
+append: O(files on disk), which grows by up to one file per touched
+part per batch until ``vacuum_streamed`` reclaims orphans or a batch
+overwrite replaces a part — the same listing :func:`sinks.read_tagged`
+and Spark's own file index make on every read of the table. State
+(watermark windows / first-seen markers) lives in Spark's state
+store; THIS layer only makes the emitted rows durable exactly-once.
 """
 
 from __future__ import annotations

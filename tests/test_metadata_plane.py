@@ -9,6 +9,7 @@ import datetime
 import os
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from test_local_frame import process_tz
@@ -158,3 +159,29 @@ def test_metadata_plane_submits_no_spark_job(spark, tmp_path):
     # a manifest total that disagrees with the footers fails the probe
     summary["entities"]["committed_total"] -= 1
     assert pipeline._canon_outputs_intact(root, summary)[1] is False
+
+
+def test_table_schema_is_what_inference_finds_with_no_job(spark, tmp_path):
+    root = str(tmp_path)
+    df = spark.range(6).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.col("id").alias("n"),
+        (F.col("id") / 2).alias("x"),
+        F.array(F.col("id").cast("string")).alias("members"),
+        F.count(F.lit(1)).over(Window.partitionBy("id")).alias("c"),
+        (F.col("id") % 3).cast("int").alias("part_id"),
+    )
+    sinks.write_partitioned(df, root, "t", full_overwrite=True)
+    # a dot-prefixed file is not a data file
+    open(os.path.join(root, "t", "part_id=0", ".tmp.parquet"), "w").close()
+
+    before = _jobs(spark)
+    schema = sinks.table_schema(root, "t")
+    assert _jobs(spark) == before
+    path = os.path.join(root, "t")
+    assert (
+        spark.read.schema(schema).parquet(path).schema
+        == spark.read.parquet(path).schema
+    )
+    with pytest.raises(FileNotFoundError):
+        sinks.table_schema(root, "absent")
