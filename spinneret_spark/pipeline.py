@@ -1240,25 +1240,21 @@ def _compose_assignment(ctx: _CanonRun, new_edges, edge_stats, cand_parts):
     # a relabeled or new doc's pinned row taking precedence, grouped
     # within ONE by-part shuffle, so each part lands in one file with
     # no broadcast (``parted`` restricted to ``touched``)
-    cid = F.col("canonical_id")
+    fresh = relabeled.select(
+        "part_id", "doc_id", F.col("new_canonical").alias("canonical_id")
+    ).unionByName(
+        new_docs.select(
+            ctx.part_of("doc_id").alias("part_id"), "doc_id", "canonical_id"
+        )
+    )
+    cid, new = F.col("canonical_id"), F.col("new")
     state = (
         old_assign.where(_in_parts(touched))
-        .select("part_id", "doc_id", "canonical_id", F.lit(False).alias("new"))
-        .unionByName(
-            relabeled.select(
-                "part_id", "doc_id", F.col("new_canonical").alias("canonical_id")
-            )
-            .unionByName(
-                new_docs.select(
-                    ctx.part_of("doc_id").alias("part_id"), "doc_id",
-                    "canonical_id",
-                )
-            )
-            .withColumn("new", F.lit(True))
-        )
+        .withColumn("new", F.lit(False))
+        .unionByName(fresh.withColumn("new", F.lit(True)))
         .repartition("part_id")
         .groupBy("part_id", "doc_id")
-        .agg(F.coalesce(F.max(F.when(F.col("new"), cid)), F.max(cid)).alias(
+        .agg(F.coalesce(F.max(F.when(new, cid)), F.max(cid)).alias(
             "canonical_id"
         ))
     )
